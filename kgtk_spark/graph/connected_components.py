@@ -73,6 +73,13 @@ def _components_fixpoint(pairs: DataFrame, max_iterations: int = 50) -> DataFram
     return members.union(roots).distinct()
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks behind a ``localCheckpoint()`` frame once nothing
+    reads it any more (``DataFrame.unpersist`` only releases frames made
+    by ``persist()``)."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def components_auto(
     pairs: DataFrame, driver_threshold: int = 100_000, max_iterations: int = 50
 ) -> DataFrame:
@@ -89,12 +96,15 @@ def components_auto(
     # when yes, already delivers the rows — one incremental job instead
     # of a full count followed by a collect.
     head = pairs.take(driver_threshold + 1)
+    if len(head) > driver_threshold:
+        out = _components_fixpoint(pairs, max_iterations=max_iterations)
+        release_checkpoint(pairs)  # the fixpoint checkpointed its own copy
+        return out
+    release_checkpoint(pairs)  # every row is on the driver now
     if not head:
         return pairs.sparkSession.createDataFrame(
             [], "node string, component string"
         )
-    if len(head) > driver_threshold:
-        return _components_fixpoint(pairs, max_iterations=max_iterations)
 
     parent: dict = {}
 

@@ -26,19 +26,6 @@ def split_list_nonempty(col: Column | str) -> Column:
     return F.filter(split_list(col), lambda x: x != "")
 
 
-def join_list(col: Column | str) -> Column:
-    """array<string> → canonical KGTK list cell."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.array_join(c, "|")
-
-
-def join_unique_list(col: Column | str) -> Column:
-    """array<string> → sorted-unique KGTK list (merge semantics,
-    kgtk/value/kgtkvalue.py:448-500), dropping empties."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.array_join(F.array_sort(F.array_distinct(F.filter(c, lambda x: x != ""))), "|")
-
-
 def merge_list_cells(collected: Column) -> Column:
     """collect_list of list-cells → one sorted-unique KGTK list cell.
 

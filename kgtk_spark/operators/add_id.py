@@ -106,14 +106,3 @@ def add_id(
         # KGTK puts id first when adding it.
         out = out.select(id_column, *cols)
     return out
-
-
-def verify_id_unique(df: DataFrame, id_column: str = "id") -> int:
-    """Distributed uniqueness check (reference uses an in-memory set,
-    kgtk/reshape/kgtkidbuilder.py:312-336). Returns duplicate-id count."""
-    return (
-        df.groupBy(id_column)
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
-    )

@@ -3,16 +3,22 @@
 Input contract (BASELINE.json input_hint): a table of
 ``(url: string, warc_ts: timestamp, html: binary, text: string, lang: string)``.
 
-Stages (each a DataFrame → DataFrame function; the runner materializes
-each to parquet with a manifest row for resume-from-checkpoint):
+Stages (each a DataFrame → DataFrame function; ``run_pipeline``
+materializes each to parquet with a manifest row for
+resume-from-checkpoint):
 
 1. extract_text    — html → text when text is null; byte-identical per url
-2. detect_mentions — batched Aho-Corasick over text (broadcast alias dict)
-3. link_entities   — alias-dictionary candidate scoring (broadcast map-side)
-4. extract_triples — pattern-based SVO over sentences
+2. detect_mentions — batched token-dictionary matcher over text
+                     (broadcast alias dict)
+3. link_entities   — best-prior sense per mention (broadcast map-side)
+4. extract_triples — pattern-based SVO over sentences; subject and object
+                     surfaces resolve to their best-prior entity
 5. canonicalize    — connected-components over sameAs clusters
 6. materialize     — KGTK-schema edges (node1, label, node2, id),
                      bucketed by subject hash
+
+``run_pipeline_fused`` chains 1 → 4 → 5 → 6 in one plan: one Python pass
+over the page text, with no mention stages (nothing in it reads them).
 """
 
 from kgtk_spark.pipeline.webgen import (

@@ -206,33 +206,23 @@ def run_pipeline_fused(
     n_buckets: int = 32,
     alias_count: int | None = None,
 ) -> DataFrame:
-    """Single-lineage variant: all six stages fused into one Catalyst plan
-    with no intermediate parquet or manifest.
+    """Single-lineage variant: no intermediate parquet or manifest, one
+    Python pass over the pages.
 
-    This is the throughput configuration for benchmarking and for
-    inputs small enough to not need mid-pipeline restart points; the
+    extract_triples reads the raw pages; over a broadcast dictionary
+    it extracts the text, matches the sentences and resolves their
+    subject and object surfaces to entities in that one pass. Mention
+    spans are not produced (nothing here consumes them; run_pipeline
+    writes them as its mentions and linked stages). The only thing
+    materialized is the distinct triple set
+    (localCheckpoint), which canonicalize reads twice. This is the
+    throughput configuration for benchmarking and for inputs small
+    enough to not need mid-pipeline restart points; the
     manifest-materializing ``run_pipeline`` is the resumable production
-    mode. Identical results by construction — both call the same stage
-    functions.
+    mode, with the same edges.
     """
-    # text is consumed by both the mention pass and the triple pass;
-    # persist() keeps it as compressed COLUMNAR blocks (GC-friendly at
-    # high thread counts — localCheckpoint's deserialized row storage
-    # causes GCLocker thrash with 32 executor threads + Arrow JNI).
     n_aliases = alias_dict.count() if alias_count is None else alias_count
-    text_df = S.extract_text(pages).persist()
-    text_df.count()
-    # mention detection + linking are pipeline deliverables (provenance
-    # spans); force them so the fused benchmark includes their cost.
-    linked = S.link_entities(
-        S.detect_mentions(text_df, alias_dict, alias_count=n_aliases),
-        alias_dict,
-        alias_count=n_aliases,
-    )
-    linked.count()
-    # triples consumed twice by canonicalize (sameAs split + rewrite).
-    triples = S.extract_triples(text_df, alias_dict, alias_count=n_aliases).persist()
-    triples.count()
+    triples = S.extract_triples(pages, alias_dict, alias_count=n_aliases)
     # Dedup BEFORE the rewrite: canonicalize's per-row rewrite commutes
     # with dropDuplicates on (node1, label, node2), and materialize
     # dedups again after the rewrite anyway — so the two broadcast

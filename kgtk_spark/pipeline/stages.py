@@ -4,14 +4,16 @@ Scale notes (the whole point):
 - text extraction / mention detection are mapInPandas (Arrow-batched,
   no shuffle, linear in input bytes);
 - the alias dictionary is broadcast — mention→entity resolution is a
-  map-side join, immune to hub-entity skew. Dictionaries above
+  map-side lookup, immune to hub-entity skew. Dictionaries above
   ALIAS_BROADCAST_THRESHOLD rows switch AUTOMATICALLY to the
   distributed path: a salted candidate equi-join for mention
   detection and salted shuffle joins for linking/extraction
   (kgtk_spark/textops/skew.py), so a 100M-alias dictionary never
   touches the driver;
-- triple assembly shuffles once on (url) — pages are independent, so
-  the shuffle key is uniform by construction;
+- triple extraction over a broadcast dictionary is ONE pass per page
+  with no shuffle and no join: each sentence's subject and object
+  surfaces resolve through a broadcast dict of the best sense per
+  alias, in the same Python pass that matches the sentence;
 - canonicalization resolves the (tiny) sameAs subgraph with the
   adaptive connected components from kgtk_spark.graph (driver
   union-find when small, large/small-star fixpoint at scale), applied
@@ -32,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kgtk_spark.graph.connected_components import components_auto  # noqa: F401 (stage import)
-from kgtk_spark.pipeline.aho import automaton_for, find_mentions, token_matcher_for
+from kgtk_spark.pipeline.matcher import token_matcher_for
 from kgtk_spark.pipeline.webgen import PREDICATES, SAME_AS_LABEL, SAME_AS_PHRASE
 
 # ---------------------------------------------------------------------------
@@ -55,26 +57,26 @@ def extract_text_bytes(html: bytes) -> str:
     return html_mod.unescape(body).strip()
 
 
+def _fill_text(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One Arrow batch of pages: null ``text`` ← ``html``; drops ``html``."""
+    need = pdf["text"].isna() & pdf["html"].notna()
+    if need.any():
+        pdf.loc[need, "text"] = pdf.loc[need, "html"].map(
+            lambda b: extract_text_bytes(bytes(b))
+        )
+    return pdf.drop(columns=["html"])
+
+
 def extract_text(pages: DataFrame) -> DataFrame:
     """Fill null ``text`` from ``html``; pages with text pass through."""
     out_schema = T.StructType(
         [f for f in pages.schema.fields if f.name != "html"]
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            need = pdf["text"].isna() & pdf["html"].notna()
-            if need.any():
-                pdf.loc[need, "text"] = pdf.loc[need, "html"].map(
-                    lambda b: extract_text_bytes(bytes(b))
-                )
-            yield pdf.drop(columns=["html"])
-
-    return pages.mapInPandas(run, schema=out_schema)
+    return pages.mapInPandas(lambda batches: map(_fill_text, batches), schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
-# Stage 2 — mention detection (Aho-Corasick over broadcast dictionary)
+# Stage 2 — mention detection (token matcher over broadcast dictionary)
 # ---------------------------------------------------------------------------
 
 MENTIONS_SCHEMA = T.StructType(
@@ -87,9 +89,9 @@ MENTIONS_SCHEMA = T.StructType(
 )
 
 # Above this many dictionary rows, the driver-collect + broadcast
-# automaton is replaced by the distributed candidate-join path
+# matcher is replaced by the distributed candidate-join path
 # (detect_mentions_distributed / salted linking joins). The broadcast
-# automaton holds the whole dictionary in every executor's Python
+# matcher holds the whole dictionary in every executor's Python
 # worker; ~2M aliases ≈ low hundreds of MB, a sane per-worker ceiling.
 ALIAS_BROADCAST_THRESHOLD = 2_000_000
 
@@ -101,25 +103,19 @@ def _alias_count(alias_dict: DataFrame, alias_count: int | None) -> int:
 def detect_mentions(
     pages: DataFrame,
     alias_dict: DataFrame,
-    matcher: str = "token",
     broadcast_threshold: int = ALIAS_BROADCAST_THRESHOLD,
     alias_count: int | None = None,
 ) -> DataFrame:
     """(url, begin, end, surface) for every dictionary hit in ``text``.
 
     Dictionaries up to ``broadcast_threshold`` rows are collected once
-    on the driver and broadcast; each executor builds the automaton
-    once (cached) and streams Arrow batches through it — north_star's
-    "batched Aho-Corasick ... built once per executor from a broadcast
-    alias dictionary". ABOVE the threshold the dictionary never touches
-    the driver: detect_mentions_distributed runs a salted candidate
-    equi-join instead (pass ``alias_count`` to skip the size probe when
-    the caller already knows it).
-
-    ``matcher``: "token" (default) uses the word-level dictionary
-    automaton — one hash probe per token, memory-bandwidth-friendly,
-    scales linearly with cores; "char" uses the classic character
-    Aho-Corasick (handles aliases not aligned to whitespace tokens).
+    on the driver and broadcast; each executor builds the word-level
+    matcher (matcher.TokenDictMatcher) once (cached) and streams Arrow
+    batches through it — one hash probe per token. ABOVE the threshold
+    the dictionary never touches the driver:
+    detect_mentions_distributed runs a salted candidate equi-join
+    instead (pass ``alias_count`` to skip the size probe when the
+    caller already knows it).
     """
     if _alias_count(alias_dict, alias_count) > broadcast_threshold:
         return detect_mentions_distributed(pages, alias_dict)
@@ -128,17 +124,11 @@ def detect_mentions(
         r["alias"] for r in alias_dict.select("alias").distinct().collect()
     )
     bc = spark.sparkContext.broadcast(aliases)
-    use_token = matcher == "token"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        if use_token:
-            m = token_matcher_for(bc.value)
-            finder = m.find
-        else:
-            automaton = automaton_for(bc.value)
-            finder = lambda t: find_mentions(t, automaton)  # noqa: E731
+        finder = token_matcher_for(bc.value).find
         empty: list = []
         for pdf in batches:
             # per-page match lists, then ONE vectorized assembly: the
@@ -325,6 +315,15 @@ _PHRASE_RE = re.compile(
 )
 
 
+def _svo(text: str) -> Iterator[tuple[str, str, str]]:
+    """(subj_surface, pred, obj_surface) per line of ``text`` that
+    matches _PHRASE_RE — the one SVO rule both triple paths share."""
+    for sent in text.split("\n"):
+        m = _PHRASE_RE.match(sent.strip())
+        if m:
+            yield m.group("subj"), _PHRASE_TO_PRED[m.group("phrase")], m.group("obj")
+
+
 def raw_triples(pages: DataFrame) -> DataFrame:
     """(url, subj_surface, pred, obj_surface) per matched sentence."""
 
@@ -334,14 +333,11 @@ def raw_triples(pages: DataFrame) -> DataFrame:
             for url, text in zip(pdf["url"], pdf["text"]):
                 if not text:
                     continue
-                for sent in text.split("\n"):
-                    m = _PHRASE_RE.match(sent.strip())
-                    if not m:
-                        continue
+                for subj, pred, obj in _svo(text):
                     rows["url"].append(url)
-                    rows["subj_surface"].append(m.group("subj"))
-                    rows["pred"].append(_PHRASE_TO_PRED[m.group("phrase")])
-                    rows["obj_surface"].append(m.group("obj"))
+                    rows["subj_surface"].append(subj)
+                    rows["pred"].append(pred)
+                    rows["obj_surface"].append(obj)
             yield pd.DataFrame(rows)
 
     return pages.select("url", "text").mapInPandas(run, schema=TRIPLE_SCHEMA)
@@ -353,32 +349,62 @@ def extract_triples(
     broadcast_threshold: int = ALIAS_BROADCAST_THRESHOLD,
     alias_count: int | None = None,
 ) -> DataFrame:
-    """Resolve SVO surface forms to entities — two broadcast joins.
+    """(url, node1, label, node2) per SVO sentence whose subject and
+    object both resolve to an entity.
 
-    Subject and object surfaces each take one broadcast hash join
-    against the best-sense alias map (same map linking used): the whole
-    extraction path from raw text to entity triples has NO shuffle.
-    Above ``broadcast_threshold`` dictionary rows both joins run as
-    salted shuffle joins instead (the broadcast would not fit).
+    ``pages`` may still carry ``html``: null ``text`` is then filled
+    from it first (extract_text's rule), in the same Python pass — a
+    chained extract_text would start a second Python worker per task.
+
+    Broadcastable dictionaries take ONE mapInPandas pass per page (no
+    join, no shuffle): each Python worker holds the best-sense map
+    (best_alias_map, collected once, bounded by ``broadcast_threshold``)
+    as a dict, and each sentence's subject and object surfaces are
+    looked up in it — the inner join's rule, so a sentence whose
+    subject or object is not an alias is dropped. Above
+    ``broadcast_threshold`` dictionary rows the regex triples
+    (raw_triples) resolve their surfaces with two salted shuffle joins
+    against the best-sense map instead.
     """
-    big = _alias_count(alias_dict, alias_count) > broadcast_threshold
     best = best_alias_map(alias_dict)
-    t = raw_triples(pages)
-    s = best.select(F.col("surface").alias("subj_surface"), F.col("entity").alias("subj"))
-    o = best.select(F.col("surface").alias("obj_surface"), F.col("entity").alias("obj"))
-    if big:
+    has_html = "html" in pages.columns
+    if _alias_count(alias_dict, alias_count) > broadcast_threshold:
         from kgtk_spark.textops.skew import salted_join
 
-        joined = salted_join(salted_join(t, s, "subj_surface"), o, "obj_surface")
-    else:
-        joined = t.join(F.broadcast(s), "subj_surface").join(
-            F.broadcast(o), "obj_surface"
+        s = best.select(F.col("surface").alias("subj_surface"), F.col("entity").alias("subj"))
+        o = best.select(F.col("surface").alias("obj_surface"), F.col("entity").alias("obj"))
+        if has_html:
+            pages = extract_text(pages)
+        joined = salted_join(salted_join(raw_triples(pages), s, "subj_surface"), o, "obj_surface")
+        return joined.select(
+            "url",
+            F.col("subj").alias("node1"),
+            F.col("pred").alias("label"),
+            F.col("obj").alias("node2"),
         )
-    return joined.select(
-        "url",
-        F.col("subj").alias("node1"),
-        F.col("pred").alias("label"),
-        F.col("obj").alias("node2"),
+    # a null surface never equals a regex group, so dropping it is exact
+    rows = best.where(F.col("surface").isNotNull()).select("surface", "entity").collect()
+    bc = pages.sparkSession.sparkContext.broadcast({r[0]: r[1] for r in rows})
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        entity_of = bc.value
+        for pdf in batches:
+            if has_html:
+                pdf = _fill_text(pdf)
+            out = {"url": [], "node1": [], "label": [], "node2": []}
+            for url, text in zip(pdf["url"], pdf["text"]):
+                if not text:
+                    continue
+                for subj, pred, obj in _svo(text):
+                    if subj in entity_of and obj in entity_of:
+                        out["url"].append(url)
+                        out["node1"].append(entity_of[subj])
+                        out["label"].append(pred)
+                        out["node2"].append(entity_of[obj])
+            yield pd.DataFrame(out)
+
+    return pages.select("url", "text", *(["html"] if has_html else [])).mapInPandas(
+        run, schema="url string, node1 string, label string, node2 string"
     )
 
 

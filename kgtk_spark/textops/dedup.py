@@ -326,7 +326,7 @@ def minhash_near_dup(
     if obs is not None:
         # one materialization: verification consumes the checkpointed
         # pairs (no recompute), and the action flushes the observation
-        pairs = pairs.localCheckpoint(eager=True)
+        pairs = checkpointed = pairs.localCheckpoint(eager=True)
         try:
             max_bsz = (obs.get or {}).get("max_bsz")
         except Exception:
@@ -412,7 +412,7 @@ def minhash_near_dup(
     # docs after LSH + verify): components_auto resolves small sets on
     # the driver and runs the distributed fixpoint otherwise, with the
     # verify pipeline checkpointed so it never executes twice.
-    from kgtk_spark.graph.connected_components import components_auto
+    from kgtk_spark.graph.connected_components import components_auto, release_checkpoint
 
     ids = df.select(F.col(id_col))
     assign = components_auto(
@@ -422,6 +422,11 @@ def minhash_near_dup(
         ),
         driver_threshold=driver_cc_threshold,
     )
+    # components_auto has consumed the verified pairs, so nothing
+    # downstream reads the shingles, signatures or candidates again
+    base.unpersist()
+    if obs is not None:
+        release_checkpoint(checkpointed)
     # Component labels are string-min (arbitrary but consistent); re-map
     # each component to its NUMERIC min member so cluster ids are stable
     # and SQL-reproducible (string min of {"98","290"} would be "290").

@@ -20,9 +20,72 @@ from kgtk_spark.pipeline import (
     run_pipeline,
     triple_precision_recall,
 )
-from kgtk_spark.pipeline.aho import AhoCorasick, find_mentions
-from kgtk_spark.pipeline.stages import extract_text_bytes
+from kgtk_spark.pipeline.matcher import TokenDictMatcher
+from kgtk_spark.pipeline.runner import run_pipeline_fused
+from kgtk_spark.pipeline.stages import ALIAS_BROADCAST_THRESHOLD, extract_text_bytes
 from kgtk_spark.pipeline.webgen import generate_page_rows, html_of_text
+
+
+class AhoCorasick:
+    """Char-level Aho-Corasick automaton (goto/fail/output construction,
+    Aho & Corasick, CACM 1975): the independent oracle for the pipeline's
+    word-level TokenDictMatcher."""
+
+    def __init__(self, patterns: list[str]):
+        from collections import deque
+
+        self.goto: list[dict[str, int]] = [{}]
+        self.out: list[list[str]] = [[]]
+        for pat in patterns:
+            s = 0
+            for ch in pat:
+                if ch not in self.goto[s]:
+                    self.goto.append({})
+                    self.out.append([])
+                    self.goto[s][ch] = len(self.goto) - 1
+                s = self.goto[s][ch]
+            if pat:
+                self.out[s].append(pat)
+        self.fail = [0] * len(self.goto)
+        q = deque(self.goto[0].values())
+        while q:
+            r = q.popleft()
+            for ch, s in self.goto[r].items():
+                q.append(s)
+                f = self.fail[r]
+                while f and ch not in self.goto[f]:
+                    f = self.fail[f]
+                nxt = self.goto[f].get(ch, 0)
+                self.fail[s] = nxt if nxt != s else 0
+                self.out[s] = self.out[s] + self.out[self.fail[s]]
+
+    def finditer(self, text: str):
+        """Yield (start, end, pattern) for every dictionary hit."""
+        s = 0
+        for i, ch in enumerate(text):
+            while s and ch not in self.goto[s]:
+                s = self.fail[s]
+            s = self.goto[s].get(ch, 0)
+            for pat in self.out[s]:
+                yield (i - len(pat) + 1, i + 1, pat)
+
+
+def find_mentions(text: str, automaton: AhoCorasick) -> list[tuple[int, int, str]]:
+    """Token-boundary-checked, longest-match-preferred, non-overlapping
+    dictionary hits."""
+    word = lambda c: c.isalnum() or c in "_-"  # noqa: E731
+    raw = sorted(
+        (m for m in automaton.finditer(text)
+         if not (m[0] > 0 and word(text[m[0] - 1]))
+         and not (m[1] < len(text) and word(text[m[1]]))),
+        key=lambda m: (m[0], m[0] - m[1]),
+    )
+    kept, last_end = [], -1
+    for m in raw:
+        if m[0] >= last_end:
+            kept.append(m)
+            last_end = m[1]
+    return kept
 
 
 def test_aho_corasick_basic():
@@ -37,6 +100,19 @@ def test_find_mentions_boundaries():
     got = {(m[2]) for m in find_mentions(text, a)}
     # longest match wins at position 0; "Kalo 1" inside "Kalo 10" suppressed
     assert got == {"Kalo 10", "Mira", "Kalo 1"}
+
+
+def test_token_matcher_equals_aho_corasick_oracle():
+    rows, world = generate_page_rows(n_pages=200, n_entities=60, seed=19)
+    aliases = sorted({a for forms in world.aliases.values() for a in forms})
+    oracle, matcher = AhoCorasick(aliases), TokenDictMatcher(aliases)
+    texts = [t if t is not None else extract_text_bytes(h) for _, _, h, t, _ in rows]
+    n_hits = 0
+    for text in texts:
+        got = matcher.find(text)
+        assert got == find_mentions(text, oracle), text
+        n_hits += len(got)
+    assert n_hits > 1000
 
 
 def test_extract_text_byte_identical():
@@ -186,10 +262,27 @@ def test_pipeline_resume_skips_committed(spark, tmp_path):
 def test_large_dictionary_takes_shuffle_path(spark):
     # broadcast_threshold=0 forces the "dictionary too big to broadcast"
     # route: distributed candidate-join mention detection + salted
-    # linking joins. Results must be identical to the broadcast path.
+    # linking joins, regex triples + salted joins. Results must be
+    # identical to the broadcast path (one fused pass for triples).
     pages, world = generate_pages_df(spark, n_pages=40, n_entities=25, seed=21)
-    text_df = extract_text(pages).localCheckpoint()
     ad = alias_dictionary_df(spark, world)
+    # one extra page of edge cases: a doubled space in the subject and
+    # in the object slot, a subject that is no alias but ends in one, a
+    # sameAs line, a line without the trailing "." and one whose object
+    # carries the "." with no space before it
+    a, b = world.aliases["Q1"][0], world.aliases["Q2"][0]
+    dup, canon = world.same_as[0]
+    edge_url = "https://example.org/edge-cases"
+    edge_text = "\n".join([
+        a.replace(" ", "  ") + f" works for {b} .",
+        f"{a} works for " + b.replace(" ", "  ") + " .",
+        f"Nobody {a} works for {b} .",
+        f"{world.aliases[dup][0]} is also known as {world.aliases[canon][0]} .",
+        f"{b} is located in {a}",
+        f"{a} works for {b}.",
+    ])
+    edge_page = spark.createDataFrame([(edge_url, edge_text)], "url string, text string")
+    text_df = extract_text(pages).select("url", "text").unionByName(edge_page).localCheckpoint()
 
     m_bcast = detect_mentions(text_df, ad)
     m_dist = detect_mentions(text_df, ad, broadcast_threshold=0)
@@ -211,6 +304,15 @@ def test_large_dictionary_takes_shuffle_path(spark):
     t_dist = extract_triples(text_df, ad, broadcast_threshold=0)
     tkey = lambda r: (r["url"], r["node1"], r["label"], r["node2"])  # noqa: E731
     assert sorted(map(tkey, t_bcast.collect())) == sorted(map(tkey, t_dist.collect()))
+    edge_rows = t_bcast.filter(F.col("url") == edge_url).collect()
+    assert {(r["node1"], r["label"], r["node2"]) for r in edge_rows} == {
+        (dup, "sameAs", canon), ("Q2", "P131", "Q1"), ("Q1", "P108", "Q2"),
+    }
+    # raw pages (html not yet extracted) give the same triples on both paths
+    page_rows = sorted(k for k in map(tkey, t_bcast.collect()) if k[0] != edge_url)
+    for threshold in (ALIAS_BROADCAST_THRESHOLD, 0):
+        raw = extract_triples(pages, ad, broadcast_threshold=threshold)
+        assert sorted(map(tkey, raw.collect())) == page_rows
 
 
 def test_pipeline_catalog_table_sink_and_resume(spark, tmp_path):
@@ -260,3 +362,23 @@ def test_pipeline_catalog_table_sink_and_resume(spark, tmp_path):
 
     for stage in ["text", "mentions", "linked", "triples", "canonical", "edges"]:
         spark.sql(f"DROP TABLE IF EXISTS default.{stage}")
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_fused_pipeline_matches_staged(spark, tmp_path):
+    pages, world = generate_pages_df(spark, n_pages=150, n_entities=60, seed=11)
+    ad = alias_dictionary_df(spark, world)
+    staged = run_pipeline(
+        spark, pages, ad, str(tmp_path / "kg"), n_buckets=4, input_fingerprint="seed11",
+    )
+    before = _persistent_rdd_ids(spark)
+    fused = run_pipeline_fused(spark, pages, ad, n_buckets=4)
+    got = sorted(map(tuple, fused.collect()))
+    # only the dedup checkpoint and the components_auto pairs stay
+    assert len(_persistent_rdd_ids(spark) - before) <= 2
+    assert fused.columns == ["node1", "label", "node2", "id"]
+    assert got == sorted(map(tuple, staged.collect()))
+    assert triple_precision_recall(fused, expected_edges_df(spark, world)) == (1.0, 1.0)

@@ -65,6 +65,14 @@ def test_minhash_near_dup(spark):
     assert out[4] == 4 and out[5] == 5
 
 
+def test_minhash_near_dup_releases_what_it_persists(spark):
+    held = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: E731
+    before = held()
+    for df in (neardup_docs(spark), neardup_docs(spark).where("doc_id > 1")):
+        assert minhash_near_dup(df, num_hashes=64, bands=16, jaccard_threshold=0.5).count() > 0
+    assert held() - before == set()
+
+
 def test_simhash_near_dup(spark):
     df = neardup_docs(spark)
     out = {r["doc_id"]: r["cluster_id"] for r in simhash_near_dup(df).collect()}
