@@ -57,7 +57,11 @@ def _components_fixpoint(pairs: DataFrame, max_iterations: int = 50) -> DataFram
     e = pairs.where(F.col("u") != F.col("v")).distinct().localCheckpoint()
     prev_sig = None
     for _ in range(max_iterations):
-        e = _small_star(_large_star(e)).localCheckpoint()
+        # localCheckpoint is eager: the next round is materialized, so
+        # the blocks of this one can go.
+        nxt = _small_star(_large_star(e)).localCheckpoint()
+        release_checkpoint(e)
+        e = nxt
         # Convergence: the edge multiset is stable (order-insensitive hash).
         sig = e.agg(
             F.count(F.lit(1)).alias("n"),

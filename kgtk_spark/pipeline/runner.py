@@ -42,11 +42,15 @@ class StageManifest:
         self.path = os.path.join(out_dir, "_manifest")
 
     def committed(self) -> dict[str, str]:
-        """stage → fingerprint of committed stages."""
+        """stage → fingerprint of each stage's latest commit."""
         try:
-            rows = self.spark.read.parquet(self.path).filter(
-                F.col("status") == "committed"
-            ).collect()
+            rows = (
+                self.spark.read.parquet(self.path)
+                .filter(F.col("status") == "committed")
+                .groupBy("stage")
+                .agg(F.max_by("fingerprint", "committed_at").alias("fingerprint"))
+                .collect()
+            )
         except Exception:
             return {}
         return {r["stage"]: r["fingerprint"] for r in rows}

@@ -13,10 +13,15 @@ Naming parity rules (the driver hash-compares by sorted column name):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from kgtk_spark.operators import (
     add_id,
@@ -67,25 +72,89 @@ edges AS (
 """
 
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_PLAIN_LEAVES = (
+    pa.types.is_boolean, pa.types.is_int8, pa.types.is_int16, pa.types.is_int32,
+    pa.types.is_int64, pa.types.is_float32, pa.types.is_float64,
+    pa.types.is_decimal128, pa.types.is_string, pa.types.is_large_string,
+    pa.types.is_binary, pa.types.is_large_binary, pa.types.is_date32,
+)
+
+
+def _plain(t: pa.DataType) -> bool:
+    """True when Spark's Parquet reader maps ``t`` as ``from_arrow_type``
+    does: signed ints, floats, decimals, strings, binary, dates, µs/ms
+    timestamps, and lists, maps and structs of them."""
+    if pa.types.is_timestamp(t):  # pyarrow reads INT96 as ns
+        return t.unit in ("ms", "us")
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return _plain(t.value_type)
+    if pa.types.is_map(t):
+        return _plain(t.key_type) and _plain(t.item_type)
+    if pa.types.is_struct(t):
+        # field metadata is how Arrow marks variant/geometry structs
+        return t.num_fields > 0 and all(f.metadata is None and _plain(f.type) for f in t)
+    return any(leaf(t) for leaf in _PLAIN_LEAVES)
+
+
+def _footer(spark: SparkSession, path: str) -> tuple[StructType, int] | None:
+    """(Spark schema, row-group count) from the footer of a single local
+    parquet file, or None when Spark must infer the schema itself."""
+    if "://" in path or not os.path.isfile(path):
+        return None  # directory, glob or URI
+    conf = spark.conf
+    if conf.get("spark.sql.parquet.binaryAsString", "false").lower() == "true":
+        return None
+    try:
+        with pq.ParquetFile(path) as pf:
+            meta, arrow = pf.metadata, pf.schema_arrow
+    except (OSError, pa.ArrowException):
+        return None  # let Spark raise its own error
+    if _SPARK_SCHEMA_KEY in (meta.metadata or {}) or not all(_plain(f.type) for f in arrow):
+        return None
+    ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true").lower() == "true"
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz), meta.num_row_groups
+
+
 def load(
     spark: SparkSession, sf_dir: str, table: str, spread: bool = False
 ) -> DataFrame:
+    """``<sf_dir>/<table>.parquet`` as a DataFrame, built without a Spark job.
+
+    For a single local file the schema comes from its footer, read once
+    on the driver with pyarrow and passed to ``spark.read.schema``;
+    without it Spark runs a one-task job per read to infer the schema.
+    Spark infers it itself (the same job as before) for directories and
+    remote URIs, whose footers are not opened here, and for footers
+    whose Arrow→Spark mapping is not Spark's Parquet mapping: INT96 or
+    nanosecond timestamps, unsigned ints, or any other type outside
+    ``_plain``; also for files that carry a Spark-written schema and
+    under ``spark.sql.parquet.binaryAsString``.
+
+    ``spread=True`` round-robins the rows over 2× the session
+    parallelism when the file has fewer row groups than that
+    parallelism (without the footer: fewer scan splits, empty ones
+    included). A single-row-group file scans as one task, so the whole
+    map side (tokenize/explode/mapInPandas) would run on one core. A
+    no-op at real scale, where row groups outnumber cores. Safe only for
+    order-insensitive queries (every documents query here aggregates per
+    row, doc or group).
+    """
     # Pin the session timezone so timestamp rendering/date_trunc match
     # DuckDB's naive reading of the same parquet regardless of the
     # harness session's default TZ (the events table carries
     # timestamp[us] without UTC adjustment).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    path = f"{sf_dir}/{table}.parquet"
+    footer = _footer(spark, path)
+    if footer is None:
+        df = spark.read.parquet(path)
+    else:
+        df = spark.read.schema(footer[0]).parquet(path)
     if spread:
-        # Single-row-group parquet files cap the scan at one task, so
-        # the whole map side (tokenize/explode/mapInPandas) runs on one
-        # core. Round-robin repartition ONLY when the scan has fewer
-        # partitions than the session parallelism — a no-op at real
-        # scale where splits >> cores (guide §2.5 "input skew"). Safe
-        # only for order-insensitive queries (every documents/events
-        # query here aggregates per row, doc or group).
         p = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < p:
+        splits = df.rdd.getNumPartitions() if footer is None else footer[1]
+        if splits < p:
             df = df.repartition(p * 2)
     return df
 

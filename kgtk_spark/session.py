@@ -13,6 +13,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else min(16g, 60% of physical RAM):
+    a heap that can grow past the host's RAM gets the JVM killed instead
+    of collected. 16g when the RAM size cannot be read."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    cap_mb = 16 * 1024
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, kb * 6 // 10 // 1024)}m"
+
+
 def get_spark(
     app_name: str = "kgtk_spark",
     master: str | None = None,
@@ -52,10 +67,8 @@ def get_spark(
         # are the canonical small side of every semi-join here.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # In local mode the "driver" JVM hosts every executor thread, so
-        # the heap serves 32 concurrent tasks + broadcasts; 16g default
-        # (still env-overridable) avoids GC thrash at the driver-chosen
-        # larger bench scale factors. Cluster deployments override.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # the heap serves every concurrent task + broadcasts.
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

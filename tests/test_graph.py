@@ -369,3 +369,19 @@ def test_triangle_count_star_hub_stays_linear(spark):
     star = [("hub", f"leaf{i}") for i in range(200)]
     df = spark.createDataFrame(star, "node1 string, node2 string")
     assert triangle_count(df).first()["n_triangles"] == 0
+
+
+def test_components_fixpoint_releases_round_checkpoints(spark):
+    from kgtk_spark.graph.connected_components import _components_fixpoint
+
+    # A path takes several large/small-star rounds to collapse to a star.
+    n = 64
+    pairs = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n - 1)], "u string, v string"
+    )
+    held = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: E731
+    before = held()
+    out = _components_fixpoint(pairs)
+    assert len(held() - before) <= 1  # only the final round's checkpoint
+    comp = {r["node"]: r["component"] for r in out.collect()}
+    assert len(comp) == n and set(comp.values()) == {"n000"}

@@ -382,3 +382,23 @@ def test_fused_pipeline_matches_staged(spark, tmp_path):
     assert fused.columns == ["node1", "label", "node2", "id"]
     assert got == sorted(map(tuple, staged.collect()))
     assert triple_precision_recall(fused, expected_edges_df(spark, world)) == (1.0, 1.0)
+
+
+def test_manifest_committed_takes_latest_commit(spark, tmp_path):
+    from kgtk_spark.pipeline.runner import MANIFEST_SCHEMA, StageManifest
+
+    # Fingerprints A,B,A,B,A committed in that order: A is the latest.
+    commits = [("text", fp, 1, 1, 0.0, "committed", float(t))
+               for t, fp in enumerate("ABABA")]
+    out = str(tmp_path / "appended")
+    m = StageManifest(spark, out)
+    for row in commits:  # one append per commit, as record() does
+        spark.createDataFrame([row], MANIFEST_SCHEMA).write.mode("append").parquet(m.path)
+    assert m.committed() == {"text": "A"}
+    # The same rows compacted into one file in fingerprint order, so a
+    # reader that takes the last row seen gets B.
+    out = str(tmp_path / "compacted")
+    m = StageManifest(spark, out)
+    spark.createDataFrame(sorted(commits, key=lambda r: r[1]), MANIFEST_SCHEMA).coalesce(
+        1).write.parquet(m.path)
+    assert m.committed() == {"text": "A"}
