@@ -3,9 +3,8 @@
 Input contract (BASELINE.json input_hint): a table of
 ``(url: string, warc_ts: timestamp, html: binary, text: string, lang: string)``.
 
-Stages (each a DataFrame → DataFrame function; ``run_pipeline``
-materializes each to parquet with a manifest row for
-resume-from-checkpoint):
+Stages, each a DataFrame → DataFrame function, in the order of
+``runner.STAGES``:
 
 1. extract_text    — html → text when text is null; byte-identical per url
 2. detect_mentions — batched token-dictionary matcher over text
@@ -17,8 +16,12 @@ resume-from-checkpoint):
 6. materialize     — KGTK-schema edges (node1, label, node2, id),
                      bucketed by subject hash
 
-``run_pipeline_fused`` chains 1 → 4 → 5 → 6 in one plan: one Python pass
-over the page text, with no mention stages (nothing in it reads them).
+``run_pipeline`` walks that one stage list into one of three sinks:
+memory (no ``out_dir``; stages 1-3 are not run, since extract_triples
+reads the raw pages and nothing reads the mention spans; this is
+``run_pipeline_fused``), parquet directories under ``out_dir``, or
+catalog tables (``table_namespace``). The two writing sinks commit each
+stage to a manifest and resume what is still committed.
 """
 
 from kgtk_spark.pipeline.webgen import (

@@ -1,17 +1,35 @@
-"""Resumable pipeline runner with a per-stage manifest.
+"""One pipeline orchestration: an ordered stage list and a sink.
 
-Each stage materializes to parquet under ``out_dir/<stage>/`` and
-appends a manifest row (stage, fingerprint, row count, partitions,
-duration, status) to ``out_dir/_manifest/``. A rerun skips any stage
-whose manifest row is committed with a matching fingerprint and whose
-output directory still exists — resume-from-last-committed-snapshot
-(north_rule). On a cluster with an Iceberg catalog the same writes go
-through ``writeTo(...)`` table commits; parquet-directory-plus-manifest
-is the catalog-free equivalent (the parquet job commit protocol makes
-the directory write atomic; the manifest row is written only after).
+``run_pipeline`` walks ``STAGES`` once:
 
-Fingerprints chain: stage_fp = sha256(stage, config, upstream_fp), so
-changing an upstream stage or a config invalidates everything below it.
+    text → mentions → linked → triples → canonical → edges
+
+The sink, where each stage's output goes, follows from the arguments:
+
+- memory (no ``out_dir``): nothing is written. ``triples`` reads the raw
+  pages (extract_triples fills text from html in its own Python pass),
+  so ``text`` and the provenance stages ``mentions`` and ``linked`` are
+  not run. ``run_pipeline_fused`` is this sink.
+- table (``out_dir`` and ``table_namespace``): each stage is a catalog
+  table ``<namespace>.<stage>``; Iceberg ``writeTo`` commits when the
+  catalog is configured, session-catalog tables otherwise.
+- parquet (``out_dir`` only): each stage is a directory
+  ``out_dir/<stage>/`` (the parquet job commit makes the write atomic).
+
+Every sink shares the tail: the distinct (node1, label, node2) triples
+are checkpointed once, canonicalized with the dictionary size as the
+rewrite-map bound and materialized.
+
+The writing sinks commit each stage to a manifest under
+``out_dir/_manifest`` (stage, fingerprint, rows, partitions, duration)
+after its per-file lineage under ``out_dir/_manifest_lineage``. A rerun
+resumes a stage when its latest commit has the current fingerprint and
+the files the stage holds now are exactly the files that commit wrote,
+so what a run that crashed mid-write left behind is recomputed, never
+served. Fingerprints chain: stage_fp = sha256(stage, upstream_fp,
+config), and the chain starts from the input fingerprint and the
+alias dictionary (row count and an order-independent row hash), so a
+new input, dictionary or config recomputes everything below it.
 """
 
 from __future__ import annotations
@@ -19,21 +37,36 @@ from __future__ import annotations
 import hashlib
 import os
 import time
+from urllib.parse import unquote, urlparse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgtk_spark.pipeline import stages as S
+from kgtk_spark.sources.iceberg import iceberg_available, read_table, write_table
+
+STAGES = ("text", "mentions", "linked", "triples", "canonical", "edges")
+# run only by a writing sink: in memory triples reads the raw pages and
+# nothing reads the mention spans
+_WRITTEN_ONLY = ("text", "mentions", "linked")
 
 MANIFEST_SCHEMA = (
     "stage string, fingerprint string, rows long, partitions int, "
     "duration_sec double, status string, committed_at double"
 )
-LINEAGE_SCHEMA = "stage string, fingerprint string, file string, rows long"
+LINEAGE_SCHEMA = (
+    "stage string, fingerprint string, file string, rows long, committed_at double"
+)
 
 
 def _fp(*parts: str) -> str:
     return hashlib.sha256("\x1f".join(parts).encode()).hexdigest()[:16]
+
+
+def _path(uri: str) -> str:
+    """A file URI or path as a plain path (``file:///a%20b`` → ``/a b``)."""
+    return unquote(urlparse(uri).path)
 
 
 class StageManifest:
@@ -41,97 +74,92 @@ class StageManifest:
         self.spark = spark
         self.path = os.path.join(out_dir, "_manifest")
 
+    def _latest(self) -> DataFrame:
+        return (
+            self.spark.read.parquet(self.path)
+            .filter(F.col("status") == "committed")
+            .groupBy("stage")
+            .agg(
+                F.max_by("fingerprint", "committed_at").alias("fingerprint"),
+                F.max("committed_at").alias("committed_at"),
+            )
+        )
+
     def committed(self) -> dict[str, str]:
         """stage → fingerprint of each stage's latest commit."""
         try:
-            rows = (
-                self.spark.read.parquet(self.path)
-                .filter(F.col("status") == "committed")
-                .groupBy("stage")
-                .agg(F.max_by("fingerprint", "committed_at").alias("fingerprint"))
-                .collect()
-            )
+            rows = self._latest().collect()
         except Exception:
             return {}
         return {r["stage"]: r["fingerprint"] for r in rows}
 
-    def record(self, stage: str, fingerprint: str, rows: int, partitions: int, duration: float):
-        df = self.spark.createDataFrame(
-            [(stage, fingerprint, rows, partitions, float(duration), "committed", time.time())],
+    def committed_files(self) -> dict[tuple[str, str], set[str]]:
+        """(stage, fingerprint) of each stage's latest commit → the files
+        that commit wrote (bounded: the stages × their partitions)."""
+        try:
+            lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path + "_lineage")
+            rows = (
+                self._latest()
+                .join(lineage, ["stage", "fingerprint", "committed_at"])
+                .select("stage", "fingerprint", "file")
+                .collect()
+            )
+        except AnalysisException:
+            return {}
+        files: dict[tuple[str, str], set[str]] = {}
+        for r in rows:
+            files.setdefault((r["stage"], r["fingerprint"]), set()).add(r["file"])
+        return files
+
+    def commit(self, stage: str, fingerprint: str, per_file: list, duration: float):
+        """One lineage row per output file (``per_file`` = [(file, rows),
+        ...]), then the manifest row that makes the commit visible."""
+        at = time.time()
+        self.spark.createDataFrame(
+            [(stage, fingerprint, f, int(n), at) for f, n in per_file], LINEAGE_SCHEMA
+        ).write.mode("append").parquet(self.path + "_lineage")
+        rows = sum(n for _, n in per_file)
+        self.spark.createDataFrame(
+            [(stage, fingerprint, rows, len(per_file), float(duration), "committed", at)],
             MANIFEST_SCHEMA,
-        )
-        df.write.mode("append").parquet(self.path)
-
-    def record_lineage(self, stage: str, fingerprint: str, per_file: list):
-        """One row per output file (stage partition): the north_rule's
-        per-partition lineage. ``per_file`` = [(file, rows), ...]."""
-        df = self.spark.createDataFrame(
-            [(stage, fingerprint, f, int(n)) for f, n in per_file],
-            LINEAGE_SCHEMA,
-        )
-        df.write.mode("append").parquet(self.path + "_lineage")
-
-    def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(self.path + "_lineage")
+        ).write.mode("append").parquet(self.path)
 
 
 def _run_stage(
     spark: SparkSession,
     manifest: StageManifest,
-    committed: dict[str, str],
+    committed: dict[tuple[str, str], set[str]],
     out_dir: str,
     name: str,
     fingerprint: str,
     compute,
-    resume: bool,
-    table_namespace: str | None = None,
-    catalog: str = "iceberg",
+    table_namespace: str | None,
+    catalog: str,
 ) -> DataFrame:
-    """Run-or-resume one stage; returns the stage output DataFrame.
-
-    With ``table_namespace`` set, stage outputs are CATALOG TABLES
-    (``<namespace>.<stage>``): Iceberg ``writeTo`` commits when the
-    named catalog is configured, session-catalog tables otherwise —
-    resume checks ``tableExists`` instead of the directory.
-    """
-    from kgtk_spark.sources.iceberg import (
-        iceberg_available,
-        read_table,
-        table_exists,
-        write_table,
+    """Run-or-resume one stage of a writing sink; returns the stage
+    output as read back from the sink."""
+    where = dict(
+        identifier=f"{table_namespace}.{name}" if table_namespace else None,
+        path_fallback=os.path.join(out_dir, name),
+        catalog=catalog,
+        session_catalog=bool(table_namespace) and not iceberg_available(spark, catalog),
     )
-
-    path = os.path.join(out_dir, name)
-    if table_namespace:
-        ident = f"{table_namespace}.{name}"
-        use_session = not iceberg_available(spark, catalog)
-        if resume and committed.get(name) == fingerprint and table_exists(
-            spark, ident, catalog
-        ):
-            return read_table(spark, ident, path, catalog, session_catalog=use_session)
-        t0 = time.time()
-        df = compute()
-        write_table(df, ident, path, catalog, session_catalog=use_session)
-        out = read_table(spark, ident, path, catalog, session_catalog=use_session)
-    else:
-        if resume and committed.get(name) == fingerprint and os.path.exists(path):
-            return spark.read.parquet(path)
-        t0 = time.time()
-        df = compute()
-        df.write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
-    # Per-partition lineage: one (file, rows) pair per written parquet
-    # part — the collect is bounded by the partition count, and the
-    # same aggregation also yields the total row count (no extra scan).
-    per_file = [
-        (r["file"], r["rows"])
-        for r in out.groupBy(F.input_file_name().alias("file"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .collect()
-    ]
-    n = sum(rows for _, rows in per_file)
-    manifest.record(name, fingerprint, n, len(per_file), time.time() - t0)
-    manifest.record_lineage(name, fingerprint, per_file)
+    files = lambda df: {_path(f) for f in df.inputFiles()}  # noqa: E731
+    if (name, fingerprint) in committed:
+        try:
+            out = read_table(spark, **where)
+            if files(out) == committed[(name, fingerprint)]:
+                return out
+        except AnalysisException:
+            pass  # the output is gone: recompute
+    t0 = time.time()
+    write_table(compute(), **where)
+    out = read_table(spark, **where)
+    # One aggregation gives the rows per file; inputFiles adds the files
+    # without rows, so the lineage names every file the stage holds.
+    rows = {_path(r[0]): r[1] for r in out.groupBy(F.input_file_name()).count().collect()}
+    per_file = [(f, rows.get(f, 0)) for f in sorted(files(out))]
+    manifest.commit(name, fingerprint, per_file, time.time() - t0)
     return out
 
 
@@ -139,68 +167,70 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     alias_dict: DataFrame,
-    out_dir: str,
+    out_dir: str | None = None,
     n_buckets: int = 32,
     resume: bool = True,
     input_fingerprint: str = "",
     table_namespace: str | None = None,
     catalog: str = "iceberg",
+    alias_count: int | None = None,
 ) -> DataFrame:
-    """pages + alias dictionary → canonical KGTK edges (also on disk).
+    """pages + alias dictionary → canonical KGTK edges (node1, label,
+    node2, id); the sink follows from ``out_dir`` and
+    ``table_namespace`` (module docstring).
 
     ``input_fingerprint`` should identify the input snapshot (e.g. its
     generator seed/row count or an Iceberg snapshot id); stages chain
     from it, so a new input recomputes everything.
 
-    ``table_namespace`` switches every stage sink from parquet
-    directories to catalog tables (``<namespace>.<stage>``) — Iceberg
-    snapshot commits when ``catalog`` is configured, session-catalog
-    tables otherwise. Resume semantics are identical on both sinks.
+    ``alias_count``, the dictionary's row count when the caller knows
+    it, spares the memory sink its sizing job. A writing sink sizes and
+    hashes the dictionary in one aggregation for its fingerprint anyway.
     """
-    manifest = StageManifest(spark, out_dir)
-    committed = manifest.committed() if resume else {}
-    sink = dict(table_namespace=table_namespace, catalog=catalog)
+    if table_namespace and out_dir is None:
+        raise ValueError("the table sink keeps its manifest under out_dir")
+    digest = ""
+    if out_dir is not None or alias_count is None:
+        row = alias_dict.agg(
+            F.count(F.lit(1)), F.bit_xor(F.xxhash64("alias", "entity", "prior"))
+        ).first()
+        alias_count, digest = row[0], f"{row[0]}:{row[1]}"
 
-    # size the dictionary ONCE; each stage then picks broadcast vs the
-    # salted shuffle path without re-counting
-    n_aliases = alias_dict.count()
-
-    fp_text = _fp("extract_text", input_fingerprint)
-    text_df = _run_stage(
-        spark, manifest, committed, out_dir, "text", fp_text,
-        lambda: S.extract_text(pages), resume, **sink,
-    )
-
-    fp_mentions = _fp("detect_mentions", fp_text)
-    mentions = _run_stage(
-        spark, manifest, committed, out_dir, "mentions", fp_mentions,
-        lambda: S.detect_mentions(text_df, alias_dict, alias_count=n_aliases), resume, **sink,
-    )
-
-    fp_linked = _fp("link_entities", fp_mentions)
-    linked = _run_stage(
-        spark, manifest, committed, out_dir, "linked", fp_linked,
-        lambda: S.link_entities(mentions, alias_dict, alias_count=n_aliases), resume, **sink,
-    )
-
-    fp_triples = _fp("extract_triples", fp_linked)
-    triples = _run_stage(
-        spark, manifest, committed, out_dir, "triples", fp_triples,
-        lambda: S.extract_triples(text_df, alias_dict, alias_count=n_aliases), resume, **sink,
-    )
-
-    fp_canon = _fp("canonicalize", fp_triples)
-    canon = _run_stage(
-        spark, manifest, committed, out_dir, "canonical", fp_canon,
-        lambda: S.canonicalize(triples), resume, **sink,
-    )
-
-    fp_edges = _fp("materialize", fp_canon, str(n_buckets))
-    edges = _run_stage(
-        spark, manifest, committed, out_dir, "edges", fp_edges,
-        lambda: S.materialize(canon, n_buckets=n_buckets), resume, **sink,
-    )
-    return edges
+    out: dict[str, DataFrame] = {}
+    compute = {
+        "text": lambda: S.extract_text(pages),
+        "mentions": lambda: S.detect_mentions(out["text"], alias_dict, alias_count=alias_count),
+        "linked": lambda: S.link_entities(out["mentions"], alias_dict, alias_count=alias_count),
+        "triples": lambda: S.extract_triples(
+            out.get("text", pages), alias_dict, alias_count=alias_count
+        ),
+        # Dedup BEFORE the rewrite: canonicalize's per-row rewrite
+        # commutes with dropDuplicates on (node1, label, node2), and
+        # materialize dedups again after it anyway, so the two broadcast
+        # rewrite joins touch the distinct edge set instead of every raw
+        # triple. localCheckpoint so the distinct shuffle isn't recomputed
+        # for the sameAs split AND the rewrite. Rewrite-map rows are
+        # bounded by the dictionary (every sameAs endpoint is a dictionary
+        # entity), so canonicalize skips its size probe.
+        "canonical": lambda: S.canonicalize(
+            out["triples"].select("node1", "label", "node2").dropDuplicates().localCheckpoint(),
+            size_hint=alias_count,
+        ),
+        "edges": lambda: S.materialize(out["canonical"], n_buckets=n_buckets),
+    }
+    manifest = StageManifest(spark, out_dir) if out_dir is not None else None
+    committed = manifest.committed_files() if manifest and resume else {}
+    fp = _fp(input_fingerprint, digest)
+    for name in STAGES:
+        fp = _fp(name, fp, str(n_buckets) if name == "edges" else "")
+        if manifest:
+            out[name] = _run_stage(
+                spark, manifest, committed, out_dir, name, fp, compute[name],
+                table_namespace, catalog,
+            )
+        elif name not in _WRITTEN_ONLY:
+            out[name] = compute[name]()
+    return out["edges"]
 
 
 def run_pipeline_fused(
@@ -210,39 +240,11 @@ def run_pipeline_fused(
     n_buckets: int = 32,
     alias_count: int | None = None,
 ) -> DataFrame:
-    """Single-lineage variant: no intermediate parquet or manifest, one
-    Python pass over the pages.
-
-    extract_triples reads the raw pages; over a broadcast dictionary
-    it extracts the text, matches the sentences and resolves their
-    subject and object surfaces to entities in that one pass. Mention
-    spans are not produced (nothing here consumes them; run_pipeline
-    writes them as its mentions and linked stages). The only thing
-    materialized is the distinct triple set
-    (localCheckpoint), which canonicalize reads twice. This is the
-    throughput configuration for benchmarking and for inputs small
-    enough to not need mid-pipeline restart points; the
-    manifest-materializing ``run_pipeline`` is the resumable production
-    mode, with the same edges.
-    """
-    n_aliases = alias_dict.count() if alias_count is None else alias_count
-    triples = S.extract_triples(pages, alias_dict, alias_count=n_aliases)
-    # Dedup BEFORE the rewrite: canonicalize's per-row rewrite commutes
-    # with dropDuplicates on (node1, label, node2), and materialize
-    # dedups again after the rewrite anyway — so the two broadcast
-    # rewrite joins touch the distinct edge set (~2% of rows here)
-    # instead of every raw triple. localCheckpoint so the distinct
-    # shuffle isn't recomputed for the sameAs split AND the rewrite.
-    dedup = (
-        triples.select("node1", "label", "node2")
-        .dropDuplicates()
-        .localCheckpoint()
-    )
-    # rewrite-map rows are bounded by the alias dictionary (every
-    # sameAs endpoint is a dictionary entity) — pass the bound so
-    # canonicalize skips its size probe (no extra job in the hot path)
-    canon = S.canonicalize(dedup, size_hint=n_aliases)
-    return S.materialize(canon, n_buckets=n_buckets)
+    """``run_pipeline`` with the memory sink: one Python pass from the raw
+    pages to resolved triples, nothing written, only the distinct-triple
+    checkpoint persisted. The throughput configuration, with the same
+    edges as the writing sinks."""
+    return run_pipeline(spark, pages, alias_dict, n_buckets=n_buckets, alias_count=alias_count)
 
 
 def triple_precision_recall(

@@ -254,42 +254,28 @@ def best_alias_map(alias_dict: DataFrame) -> DataFrame:
 def link_entities(
     mentions: DataFrame,
     alias_dict: DataFrame,
-    context_scoring: bool = False,
     broadcast_threshold: int = ALIAS_BROADCAST_THRESHOLD,
     alias_count: int | None = None,
 ) -> DataFrame:
     """Resolve each mention to its best-prior entity.
 
-    Default path is ZERO-shuffle: the argmax over candidate senses is
-    precomputed per alias (best_alias_map) and the mentions stream takes
-    one broadcast hash join — map-side scoring, immune to hub-alias
-    skew, scales linearly with cores. Dictionaries above
-    ``broadcast_threshold`` rows switch to a salted shuffle join
-    (textops.skew.salted_join) — hub aliases spread over the salt
-    shards instead of making one straggler reducer.
-
-    ``context_scoring=True`` keeps the candidate-expansion + per-mention
-    aggregation path (one shuffle on the mention key) for scorers that
-    need page context; with prior-only scoring both paths are identical.
+    ZERO-shuffle: the argmax over candidate senses is precomputed per
+    alias (best_alias_map) and the mentions stream takes one broadcast
+    hash join — map-side scoring, immune to hub-alias skew, scales
+    linearly with cores. Dictionaries above ``broadcast_threshold`` rows
+    switch to a salted shuffle join (textops.skew.salted_join) — hub
+    aliases spread over the salt shards instead of making one straggler
+    reducer.
     """
-    if not context_scoring:
-        best = best_alias_map(alias_dict)
-        if _alias_count(alias_dict, alias_count) > broadcast_threshold:
-            from kgtk_spark.textops.skew import salted_join
+    best = best_alias_map(alias_dict)
+    if _alias_count(alias_dict, alias_count) > broadcast_threshold:
+        from kgtk_spark.textops.skew import salted_join
 
-            return salted_join(mentions, best, "surface").select(
-                "url", "begin", "end", "surface", "entity", "score"
-            )
-        return mentions.join(F.broadcast(best), "surface").select(
+        return salted_join(mentions, best, "surface").select(
             "url", "begin", "end", "surface", "entity", "score"
         )
-    cand = mentions.join(F.broadcast(alias_dict), mentions["surface"] == alias_dict["alias"])
-    return (
-        cand.groupBy("url", "begin", "end", "surface")
-        .agg(
-            F.expr("max_by(entity, prior)").alias("entity"),
-            F.max("prior").alias("score"),
-        )
+    return mentions.join(F.broadcast(best), "surface").select(
+        "url", "begin", "end", "surface", "entity", "score"
     )
 
 

@@ -17,7 +17,8 @@ three tiers, all behind the same call sites:
   (kgtk_spark/pipeline/runner.py) — the parquet committer makes each
   directory write atomic.
 
-The pipeline runner uses write_table/read_table/table_exists so
+The pipeline runner writes and reads every stage through
+write_table/read_table (``identifier=None`` is its parquet sink), so
 flipping to Iceberg is a config change, not a code change.
 """
 
@@ -30,19 +31,9 @@ def iceberg_available(spark: SparkSession, catalog: str = "iceberg") -> bool:
     return spark.conf.get(f"spark.sql.catalog.{catalog}", None) is not None
 
 
-def table_exists(
-    spark: SparkSession, identifier: str, catalog: str = "iceberg"
-) -> bool:
-    name = f"{catalog}.{identifier}" if iceberg_available(spark, catalog) else identifier
-    try:
-        return spark.catalog.tableExists(name)
-    except Exception:
-        return False
-
-
 def write_table(
     df: DataFrame,
-    identifier: str,
+    identifier: str | None,
     path_fallback: str,
     catalog: str = "iceberg",
     partition_by: list[str] | None = None,
@@ -50,11 +41,12 @@ def write_table(
 ) -> str:
     """Write to ``catalog.identifier`` if Iceberg is configured, to a
     session-catalog table if ``session_catalog``, else to
-    ``path_fallback`` parquet. Returns the location written."""
+    ``path_fallback`` parquet (also when ``identifier`` is None). Returns the
+    location written."""
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
-    if iceberg_available(spark, catalog):
+    if identifier is not None and iceberg_available(spark, catalog):
         writer = df.writeTo(f"{catalog}.{identifier}")
         if partition_by:
             writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
@@ -89,12 +81,12 @@ def write_table(
 
 def read_table(
     spark: SparkSession,
-    identifier: str,
+    identifier: str | None,
     path_fallback: str,
     catalog: str = "iceberg",
     session_catalog: bool = False,
 ) -> DataFrame:
-    if iceberg_available(spark, catalog):
+    if identifier is not None and iceberg_available(spark, catalog):
         return spark.table(f"{catalog}.{identifier}")
     if session_catalog:
         return spark.table(identifier)

@@ -368,6 +368,17 @@ def _persistent_rdd_ids(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
+def _jobs_started(spark, group, action):
+    """(result of ``action``, number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "count the jobs a call starts")
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_fused_pipeline_matches_staged(spark, tmp_path):
     pages, world = generate_pages_df(spark, n_pages=150, n_entities=60, seed=11)
     ad = alias_dictionary_df(spark, world)
@@ -382,6 +393,66 @@ def test_fused_pipeline_matches_staged(spark, tmp_path):
     assert fused.columns == ["node1", "label", "node2", "id"]
     assert got == sorted(map(tuple, staged.collect()))
     assert triple_precision_recall(fused, expected_edges_df(spark, world)) == (1.0, 1.0)
+
+    # The memory sink with the dictionary size given runs 11 jobs on this
+    # input; a provenance stage would add more (mention detection collects
+    # the dictionary when it is called). Only the dedup checkpoint stays.
+    n_aliases = ad.count()
+    before = _persistent_rdd_ids(spark)
+    rows, jobs = _jobs_started(spark, "memory-sink-jobs", lambda: run_pipeline_fused(
+        spark, pages, ad, n_buckets=4, alias_count=n_aliases).collect())
+    assert jobs <= 11, jobs
+    assert len(_persistent_rdd_ids(spark) - before) <= 1
+    assert sorted(map(tuple, rows)) == got
+
+
+def test_pipeline_resume_covers_the_dictionary(spark, tmp_path):
+    # The same input fingerprint with a smaller dictionary: the rerun on
+    # the first run's out_dir must give what a fresh run gives, not resume.
+    pages, world = generate_pages_df(spark, n_pages=150, n_entities=60, seed=11)
+    ad = alias_dictionary_df(spark, world)
+    small = ad.where(F.xxhash64("entity") % 2 == 0)  # about half the entities
+    out_dir = str(tmp_path / "kg")
+    edges = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    full = edges(run_pipeline(spark, pages, ad, out_dir, n_buckets=4, input_fingerprint="s11"))
+    rerun = edges(run_pipeline(spark, pages, small, out_dir, n_buckets=4, input_fingerprint="s11"))
+    fresh = edges(run_pipeline(
+        spark, pages, small, str(tmp_path / "fresh"), n_buckets=4, input_fingerprint="s11"))
+    assert 0 < len(fresh) < len(full)
+    assert rerun == fresh
+
+
+def test_pipeline_resume_recomputes_after_crashed_write(spark, tmp_path, monkeypatch):
+    from kgtk_spark.pipeline import stages as S
+
+    out_dir = str(tmp_path / "kg")
+    pages, world = generate_pages_df(spark, n_pages=40, n_entities=20, seed=13)
+    ad = alias_dictionary_df(spark, world)
+    edges = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    manifest = lambda: spark.read.parquet(f"{out_dir}/_manifest")  # noqa: E731
+    want = edges(run_pipeline(spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13"))
+
+    # A run on a new input dies inside canonical's write job, after the
+    # overwrite of canonical's committed output has begun.
+    canonicalize = S.canonicalize
+
+    def crashing(triples, **kw):
+        out = canonicalize(triples, **kw)
+        return out.where(F.assert_true(F.col("node1").isNull(), "injected crash").isNull())
+
+    monkeypatch.setattr(S, "canonicalize", crashing)
+    with pytest.raises(Exception, match="injected crash"):
+        run_pipeline(spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s14")
+    monkeypatch.undo()
+    assert manifest().count() == 6 + 4  # text, mentions, linked, triples
+
+    # canonical's latest commit is still s13's, but its output is not what
+    # that commit wrote: recompute it. edges is untouched and resumes.
+    assert edges(run_pipeline(
+        spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13")) == want
+    stages = [r["stage"] for r in manifest().collect()]
+    assert len(stages) == 6 + 4 + 5
+    assert stages.count("canonical") == 2 and stages.count("edges") == 1
 
 
 def test_manifest_committed_takes_latest_commit(spark, tmp_path):
