@@ -18,7 +18,9 @@ The sink, where each stage's output goes, follows from the arguments:
 
 Every sink shares the tail: the distinct (node1, label, node2) triples
 are checkpointed once, canonicalized with the dictionary size as the
-rewrite-map bound and materialized.
+rewrite-map bound and materialized. The writing sinks release that
+checkpoint once canonical is committed; the memory sink's returned edges
+still read it.
 
 The writing sinks commit each stage to a manifest under
 ``out_dir/_manifest`` (stage, fingerprint, rows, partitions, duration)
@@ -27,9 +29,11 @@ resumes a stage when its latest commit has the current fingerprint and
 the files the stage holds now are exactly the files that commit wrote,
 so what a run that crashed mid-write left behind is recomputed, never
 served. Fingerprints chain: stage_fp = sha256(stage, upstream_fp,
-config), and the chain starts from the input fingerprint and the
-alias dictionary (row count and an order-independent row hash), so a
-new input, dictionary or config recomputes everything below it.
+config), and the chain starts from the input fingerprint. The alias
+dictionary (row count and an order-independent row hash) enters at
+``mentions``, the first stage that reads it, so a new input, dictionary
+or config recomputes everything below where it enters; ``text`` resumes
+across dictionary changes.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgtk_spark.graph.connected_components import release_checkpoint
 from kgtk_spark.pipeline import stages as S
 from kgtk_spark.sources.iceberg import iceberg_available, read_table, write_table
 
@@ -197,6 +202,14 @@ def run_pipeline(
         alias_count, digest = row[0], f"{row[0]}:{row[1]}"
 
     out: dict[str, DataFrame] = {}
+    held: list[DataFrame] = []  # the dedup checkpoint, once canonical runs
+
+    def distinct_triples() -> DataFrame:
+        held.append(
+            out["triples"].select("node1", "label", "node2").dropDuplicates().localCheckpoint()
+        )
+        return held[-1]
+
     compute = {
         "text": lambda: S.extract_text(pages),
         "mentions": lambda: S.detect_mentions(out["text"], alias_dict, alias_count=alias_count),
@@ -212,22 +225,25 @@ def run_pipeline(
         # for the sameAs split AND the rewrite. Rewrite-map rows are
         # bounded by the dictionary (every sameAs endpoint is a dictionary
         # entity), so canonicalize skips its size probe.
-        "canonical": lambda: S.canonicalize(
-            out["triples"].select("node1", "label", "node2").dropDuplicates().localCheckpoint(),
-            size_hint=alias_count,
-        ),
+        "canonical": lambda: S.canonicalize(distinct_triples(), size_hint=alias_count),
         "edges": lambda: S.materialize(out["canonical"], n_buckets=n_buckets),
     }
     manifest = StageManifest(spark, out_dir) if out_dir is not None else None
     committed = manifest.committed_files() if manifest and resume else {}
-    fp = _fp(input_fingerprint, digest)
+    fp = _fp(input_fingerprint)
     for name in STAGES:
-        fp = _fp(name, fp, str(n_buckets) if name == "edges" else "")
+        # the dictionary enters the chain at mentions: text never reads it
+        fp = _fp(name, fp, {"mentions": digest, "edges": str(n_buckets)}.get(name, ""))
         if manifest:
             out[name] = _run_stage(
                 spark, manifest, committed, out_dir, name, fp, compute[name],
                 table_namespace, catalog,
             )
+            # canonical is written and read back from the sink, so nothing
+            # reads the dedup checkpoint any more (the memory sink's
+            # returned edges still do: it keeps it)
+            while held:
+                release_checkpoint(held.pop())
         elif name not in _WRITTEN_ONLY:
             out[name] = compute[name]()
     return out["edges"]

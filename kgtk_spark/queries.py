@@ -2448,8 +2448,9 @@ def q_tfidf_topk(spark, sf_dir):
 @query(
     "graph_triangles",
     # co-purchase graph: parts sharing an order; canonical u<v edges,
-    # then the three-way closure join (the engine uses the degree-
-    # oriented O(m^1.5) wedge formulation — same count by construction)
+    # then the three-way closure join (the engine counts degree-oriented
+    # wedges, O(m^1.5), on the driver below 2M edge rows and as a Spark
+    # join above; the same count by construction)
     "WITH li AS (SELECT 'P' || CAST(l_partkey AS VARCHAR) AS p, l_orderkey "
     "  FROM lineitem), "
     "e AS (SELECT DISTINCT a.p AS u, b.p AS v FROM li a "
@@ -2459,9 +2460,12 @@ def q_tfidf_topk(spark, sf_dir):
     "JOIN e ac ON ac.u = ab.u AND ac.v = bc.v",
 )
 def q_graph_triangles(spark, sf_dir):
-    """Triangle count on the part co-purchase graph via degree-
-    oriented wedge join (each edge oriented low->high (degree, id), so
-    hub vertices never self-join their full neighbor list).
+    """Triangle count on the part co-purchase graph with
+    ``triangle_count``: each edge oriented low->high (degree, id), so
+    hub vertices never pair up their full neighbor list. Up to
+    ``CSR_EDGE_LIMIT`` (2M) pair rows the pairs are collected once as
+    Arrow and counted by the driver's CSR kernel (sf0.01 and sf0.1 both
+    take it); above, by the Spark wedge join.
 
     The engine keeps the NUMERIC partkeys as node ids: the triangle
     count is invariant under any injective relabeling ('P' || k <-> k

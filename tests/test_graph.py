@@ -340,35 +340,103 @@ def test_scc_chain_of_cycles_worst_case(spark):
     assert rounds == sorted(rounds, reverse=True) and len(set(rounds)) == len(rounds)
 
 
-def test_triangle_count_known_graphs(spark):
-    from kgtk_spark.graph.stats import triangle_count
+def _triangles(df, monkeypatch) -> dict[str, int]:
+    """triangle_count of ``df`` on each path: the driver CSR kernel and
+    the Spark wedge join. A gate of -1 sends every graph, even an empty
+    one, to the wedge join (the collect is limit(0), and 0 rows > -1)."""
+    from kgtk_spark.graph import stats
 
+    ran, wedge, out = [], stats._wedge_triangles, {}
+    for path, limit in (("csr", stats.CSR_EDGE_LIMIT), ("wedge", -1)):
+        with monkeypatch.context() as m:
+            m.setattr(stats, "_wedge_triangles", lambda *a: ran.append(path) or wedge(*a))
+            m.setattr(stats, "CSR_EDGE_LIMIT", limit)
+            out[path] = stats.triangle_count(df).first()["n_triangles"]
+        assert ran == ["wedge"] * (path == "wedge"), f"{path} took the other path"
+    return out
+
+
+def test_triangle_count_known_graphs(spark, monkeypatch):
     def tri(edges):
         df = spark.createDataFrame(edges, "node1 string, node2 string")
-        return triangle_count(df).first()["n_triangles"]
+        return _triangles(df, monkeypatch)
 
     # K4: 4 triangles — with duplicate and reversed edges thrown in
     # (the canonicalize+distinct must absorb them) and a self-loop
     k4 = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
           ("c", "d"), ("c", "b"), ("a", "b"), ("d", "d")]
-    assert tri(k4) == 4
+    assert tri(k4) == {"csr": 4, "wedge": 4}
     # path graph: no triangles
-    assert tri([("a", "b"), ("b", "c"), ("c", "d")]) == 0
+    assert tri([("a", "b"), ("b", "c"), ("c", "d")]) == {"csr": 0, "wedge": 0}
     # two disjoint triangles + a pendant
     two = [("a", "b"), ("b", "c"), ("a", "c"),
            ("x", "y"), ("y", "z"), ("x", "z"), ("z", "w")]
-    assert tri(two) == 2
+    assert tri(two) == {"csr": 2, "wedge": 2}
+    # no edges at all
+    assert tri([]) == {"csr": 0, "wedge": 0}
 
 
-def test_triangle_count_star_hub_stays_linear(spark):
+def test_triangle_count_star_hub_stays_linear(spark, monkeypatch):
     """a 200-leaf star has NO triangles; the degree orientation points
-    every edge leaf->hub, so the hub's out-degree is 0 and the wedge
-    join emits nothing (naive orientation would wedge 200x199 pairs)."""
-    from kgtk_spark.graph.stats import triangle_count
-
+    every edge leaf->hub, so the hub's out-degree is 0 and no wedge is
+    formed (naive orientation would wedge 200x199 pairs)."""
     star = [("hub", f"leaf{i}") for i in range(200)]
     df = spark.createDataFrame(star, "node1 string, node2 string")
-    assert triangle_count(df).first()["n_triangles"] == 0
+    assert _triangles(df, monkeypatch) == {"csr": 0, "wedge": 0}
+
+
+@pytest.mark.parametrize("ids", ["string", "long"])
+def test_triangle_count_random_graph_matches_networkx(spark, monkeypatch, ids):
+    """A seeded random multigraph of 300 nodes and 3,000 rows, with
+    duplicate and reversed edges, self-loops and null endpoints; both
+    paths must give networkx's count on the simple graph beneath it.
+    String ids take the wedge join's two-column probe, small integer
+    ids its packed one; a tiny wedge chunk makes the CSR kernel split
+    its work across many chunks."""
+    import random
+
+    import networkx as nx
+
+    from kgtk_spark.graph import stats
+
+    rng = random.Random(6)
+    name = str if ids == "string" else int
+    rows = []
+    for _ in range(3000):
+        a, b = rng.randrange(300), rng.randrange(300)
+        rows.append((name(a), name(b)))
+    rows += [(b, a) for a, b in rows[:500]]  # reversed duplicates
+    rows += [(a, a) for a, _ in rows[:50]]  # self-loops
+    rows += [(None, b) for _, b in rows[:20]] + [(a, None) for a, _ in rows[:20]] + [(None, None)]
+    rng.shuffle(rows)
+    g = nx.Graph()
+    g.add_edges_from((a, b) for a, b in rows if a is not None and b is not None and a != b)
+    want = sum(nx.triangles(g).values()) // 3
+    assert want > 0
+
+    monkeypatch.setattr(stats, "_WEDGES_PER_CHUNK", 97)
+    df = spark.createDataFrame(rows, f"node1 {ids}, node2 {ids}")
+    assert _triangles(df, monkeypatch) == {"csr": want, "wedge": want}
+
+
+def test_triangle_count_driver_path_starts_two_jobs(spark):
+    """Under the gate, one bounded Arrow collect is the only job before
+    the result's own; nothing is left persisted."""
+    from kgtk_spark.graph.stats import triangle_count
+
+    sc = spark.sparkContext
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    df = spark.createDataFrame(k4, "node1 long, node2 long")
+    held = lambda: set(sc._jsc.getPersistentRDDs().keys())  # noqa: E731
+    before = held()
+    sc.setJobGroup("triangles_csr", "count the jobs triangle_count starts")
+    try:
+        n = triangle_count(df).first()["n_triangles"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 4
+    assert len(sc.statusTracker().getJobIdsForGroup("triangles_csr")) <= 2
+    assert held() - before == set()
 
 
 def test_components_fixpoint_releases_round_checkpoints(spark):

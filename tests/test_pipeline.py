@@ -420,6 +420,23 @@ def test_pipeline_resume_covers_the_dictionary(spark, tmp_path):
         spark, pages, small, str(tmp_path / "fresh"), n_buckets=4, input_fingerprint="s11"))
     assert 0 < len(fresh) < len(full)
     assert rerun == fresh
+    # text never reads the dictionary, so it resumes; the rest recommit
+    stages = [r["stage"] for r in spark.read.parquet(f"{out_dir}/_manifest").collect()]
+    assert {s: stages.count(s) for s in set(stages)} == {
+        "text": 1, "mentions": 2, "linked": 2, "triples": 2, "canonical": 2, "edges": 2,
+    }
+
+
+def test_staged_run_releases_the_dedup_checkpoint(spark, tmp_path):
+    # The writing sinks read canonical back from the sink, so once it is
+    # committed nothing reads the dedup checkpoint any more.
+    pages, world = generate_pages_df(spark, n_pages=40, n_entities=20, seed=13)
+    ad = alias_dictionary_df(spark, world)
+    before = _persistent_rdd_ids(spark)
+    edges = run_pipeline(spark, pages, ad, str(tmp_path / "kg"), n_buckets=2,
+                         input_fingerprint="s13")
+    assert edges.count() > 0
+    assert _persistent_rdd_ids(spark) - before == set()
 
 
 def test_pipeline_resume_recomputes_after_crashed_write(spark, tmp_path, monkeypatch):
