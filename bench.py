@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
 import time
@@ -65,6 +66,22 @@ def sf_of(sf_dir: str) -> float:
         return 0.1
 
 
+def scaling_stale(artifact: dict, cpus: int) -> bool:
+    """True unless the scaling artifact was measured at this checkout's
+    HEAD with this run's core count at its upper level (``local[4N]``)."""
+    try:
+        head = subprocess.run(
+            ["git", "-C", str(Path(__file__).resolve().parent), "rev-parse", "HEAD"],
+            capture_output=True, text=True, timeout=30,
+        ).stdout.strip()
+    except (OSError, subprocess.SubprocessError):
+        head = ""
+    commit = artifact.get("commit") or ""
+    n = artifact.get("n")
+    top = artifact.get(f"local{4 * n}", {}).get("cpus") if isinstance(n, int) else None
+    return not (commit and head.startswith(commit)) or top != cpus
+
+
 def run_noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -91,9 +108,11 @@ def main() -> None:
             "scaling_n_pages": s.get("n_pages"),
             "scaling_measured_utc": s.get("measured_utc"),
             "scaling_commit": s.get("commit"),
+            "scaling_stale": scaling_stale(s, cpus),
         }
     except Exception:
         scaling_fields = {"scaling_efficiency": None,
+                          "scaling_stale": True,
                           "scaling_note": "no BENCH/scaling_latest.json — "
                           "run tools/scaling_bench.py"}
 

@@ -18,7 +18,8 @@ as a final per-component aggregate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgtk_spark.schema import resolve_column
@@ -84,6 +85,17 @@ def release_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
+def _assignment(spark: SparkSession, rows) -> DataFrame:
+    """``(node, component)`` string rows computed on the driver, as a
+    frame built from an Arrow table: a JVM-only local relation, where
+    ``createDataFrame`` of a Python list starts a Python worker
+    (~0.45 s) on every action on the frame."""
+    nodes, comps = zip(*rows) if rows else ((), ())
+    return spark.createDataFrame(
+        pa.table({"node": pa.array(nodes, pa.string()), "component": pa.array(comps, pa.string())})
+    )
+
+
 def components_auto(
     pairs: DataFrame, driver_threshold: int = 100_000, max_iterations: int = 50
 ) -> DataFrame:
@@ -105,11 +117,6 @@ def components_auto(
         release_checkpoint(pairs)  # the fixpoint checkpointed its own copy
         return out
     release_checkpoint(pairs)  # every row is on the driver now
-    if not head:
-        return pairs.sparkSession.createDataFrame(
-            [], "node string, component string"
-        )
-
     parent: dict = {}
 
     def find(x: str) -> str:
@@ -128,9 +135,7 @@ def components_auto(
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru
-    return pairs.sparkSession.createDataFrame(
-        [(x, find(x)) for x in sorted(nodes)], "node string, component string"
-    )
+    return _assignment(pairs.sparkSession, [(x, find(x)) for x in sorted(nodes)])
 
 
 def connected_components(
@@ -380,17 +385,13 @@ def scc_auto(
         .distinct()
         .localCheckpoint()
     )
-    if n == 0:
-        return spark.createDataFrame([], "node string, component string")
     if n <= driver_threshold:
         rows = _tarjan([(r["u"], r["v"]) for r in pairs.collect()])
         # nodes in no cycle are their own singleton SCC (covered: tarjan
         # assigns every visited node)
-        return spark.createDataFrame(
-            sorted(rows.items()), "node string, component string"
-        )
+        return _assignment(spark, sorted(rows.items()))
 
-    assigned = spark.createDataFrame([], "node string, component string")
+    assigned = _assignment(spark, [])
     live = pairs
     rounds = 0
     while not live.isEmpty():
@@ -459,9 +460,7 @@ def scc_auto(
     # anything never peeled that still has edges → finish on the driver
     if not live.isEmpty():
         rest = _tarjan([(r["u"], r["v"]) for r in live.collect()])
-        assigned = assigned.union(
-            spark.createDataFrame(sorted(rest.items()), "node string, component string")
-        )
+        assigned = assigned.union(_assignment(spark, sorted(rest.items())))
     # isolated-by-peel nodes: every node not assigned is its own SCC
     singles = all_nodes.join(assigned, "node", "left_anti").select(
         "node", F.col("node").alias("component")

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kgtk_spark.graph.connected_components import release_checkpoint
 from kgtk_spark.schema import resolve_column
 
 
@@ -455,7 +456,12 @@ def triangle_count(
       grows by about 200 B per collected row: measured on 4 cores, the
       2M rows at the gate peaked at 470 MB with long or string ids.
     - Above it, the distributed wedge join (``_wedge_triangles``) runs
-      on the executors, as it does for graphs of any size.
+      on the executors and counts there; it releases its checkpoints
+      before it returns.
+
+    Both paths return the count as a literal over ``range(1)``: a
+    JVM-only plan, where ``createDataFrame`` of a Python list starts a
+    Python worker (~0.45 s) on every action.
     """
     n1, _, n2 = _edge_cols(edges)
     node1, node2 = node1 or n1, node2 or n2
@@ -466,19 +472,19 @@ def triangle_count(
     # limit(N + 1) answers "small enough for the driver?" and, when yes,
     # already delivers the rows (components_auto's take(threshold + 1)).
     head = raw.limit(CSR_EDGE_LIMIT + 1).toArrow()
+    spark = edges.sparkSession
     if head.num_rows > CSR_EDGE_LIMIT:
         del head
-        return _wedge_triangles(raw, broadcast_edge_limit)
-    spark = edges.sparkSession
-    n = _csr_triangles(head["u"], head["v"], spark.sparkContext.defaultParallelism)
-    # a literal over range(1): a JVM-only plan, where createDataFrame of
-    # a Python list starts a Python worker (~0.45 s) on every action
+        n = _wedge_triangles(raw, broadcast_edge_limit)
+    else:
+        n = _csr_triangles(head["u"], head["v"], spark.sparkContext.defaultParallelism)
     return spark.range(1).select(F.lit(n).cast("long").alias("n_triangles"))
 
 
-def _wedge_triangles(raw: DataFrame, broadcast_edge_limit: int) -> DataFrame:
+def _wedge_triangles(raw: DataFrame, broadcast_edge_limit: int) -> int:
     """The triangle count as Spark joins, for graphs above the driver
-    gate.
+    gate. The count is taken here with one ``first()``, so both
+    checkpoints below are released before the function returns.
 
     Physical shape: the canonical edge set and the (small) degree table
     are ``localCheckpoint``-ed, so the dedup + degree subtrees are
@@ -570,5 +576,7 @@ def _wedge_triangles(raw: DataFrame, broadcast_edge_limit: int) -> DataFrame:
         keys = ["w1", "w2"]
     if pack is not None and m <= broadcast_edge_limit:
         probe = F.broadcast(probe)
-    closed = wedges.join(probe, keys)
-    return closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+    n = wedges.join(probe, keys).agg(F.count(F.lit(1))).first()[0]
+    release_checkpoint(e)
+    release_checkpoint(deg)
+    return n

@@ -47,13 +47,3 @@ def zip_with_index(df: DataFrame, name: str = "__idx__") -> DataFrame:
         .drop("__zwi_pid__", "__zwi_mid__")
     )
 
-
-def spread_to_parallelism(df: DataFrame) -> DataFrame:
-    """Repartition up to the session's parallelism when the input has
-    fewer partitions (a single small parquet file scans as ONE split,
-    serializing per-row work onto one core). No-op at corpus scale
-    where inputs already carry many splits."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df

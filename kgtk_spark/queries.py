@@ -116,6 +116,12 @@ def _footer(spark: SparkSession, path: str) -> tuple[StructType, int] | None:
     return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz), meta.num_row_groups
 
 
+# Partitions per core that a spread read is round-robined into (see load).
+# One: at 2 per core every spread leaf ran slower (sf0.1, 4 cores; e.g.
+# doc_minhash_clusters 4.8 s against 3.0 s).
+SPREAD_PER_CORE = 1
+
+
 def load(
     spark: SparkSession, sf_dir: str, table: str, spread: bool = False
 ) -> DataFrame:
@@ -131,11 +137,14 @@ def load(
     ``_plain``; also for files that carry a Spark-written schema and
     under ``spark.sql.parquet.binaryAsString``.
 
-    ``spread=True`` round-robins the rows over 2× the session
-    parallelism when the file has fewer row groups than that
-    parallelism (without the footer: fewer scan splits, empty ones
-    included). A single-row-group file scans as one task, so the whole
-    map side (tokenize/explode/mapInPandas) would run on one core. A
+    ``spread=True`` is the engine's one input-parallelism rule; neither
+    the session nor any operator repartitions its input. The read is
+    spread when it holds fewer row groups than the session has cores
+    (``defaultParallelism``), counted from the footer, or from the
+    scan's splits (empty ones included) when there is no footer: a
+    single-row-group file scans as one task, so the whole map side
+    (tokenize/explode/mapInPandas) would run on one core. The rows are
+    then round-robined over ``SPREAD_PER_CORE`` × cores partitions. A
     no-op at real scale, where row groups outnumber cores. Safe only for
     order-insensitive queries (every documents query here aggregates per
     row, doc or group).
@@ -155,7 +164,7 @@ def load(
         p = spark.sparkContext.defaultParallelism
         splits = df.rdd.getNumPartitions() if footer is None else footer[1]
         if splits < p:
-            df = df.repartition(p * 2)
+            df = df.repartition(SPREAD_PER_CORE * p)
     return df
 
 
@@ -1132,7 +1141,7 @@ def q_exact_dedup(spark, sf_dir):
     "FROM documents",
 )
 def q_token_count(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     ws = token_count(docs)
     both = token_count(ws, out_col="n_bpe_tokens", method="bpe_regex")
     return both.select(
@@ -1148,7 +1157,7 @@ def q_token_count(spark, sf_dir):
     "FROM documents",
 )
 def q_fingerprint(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     return doc_fingerprint(docs).select("doc_id", "fingerprint")
 
 
@@ -1189,7 +1198,7 @@ def _langid_oracle() -> str:
 
 @query("doc_language_id", _langid_oracle())
 def q_language_id(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     return language_id(docs).select("doc_id", "lang_pred")
 
 
@@ -1203,7 +1212,7 @@ def q_language_id(spark, sf_dir):
 def q_quality(spark, sf_dir):
     """Quality feature columns (integer features only in the oracle —
     the float penalties are covered by unit tests)."""
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     return quality_score(docs).select(
         "doc_id",
         F.col("n_chars_q").cast("long").alias("n_chars_q"),
@@ -1232,7 +1241,7 @@ def q_ann_topk(spark, sf_dir):
     + ") / length(text), 6) AS punct_ratio FROM documents WHERE length(text) > 0",
 )
 def q_punct_ratio(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").filter(F.length("text") > 0)
+    docs = load(spark, sf_dir, "documents", spread=True).filter(F.length("text") > 0)
     return quality_score(docs).select("doc_id", "punct_ratio")
 
 
@@ -1255,7 +1264,7 @@ def q_ngram_jaccard(spark, sf_dir):
     twin of the hashed production path)."""
     from kgtk_spark.textops.dedup import ngram_jaccard_pairs
 
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     out = ngram_jaccard_pairs(docs, n=3, threshold=0.05, hashed=False)
     return out.select("u", "v", F.round("jaccard", 6).alias("jaccard"))
 
@@ -1270,7 +1279,7 @@ def _simhash_oracle() -> str:
 def q_simhash(spark, sf_dir):
     """60-bit JVM SimHash (md5-derived token hashes) — bit-exact twin
     of the DuckDB hex-parse oracle."""
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     return simhash_signatures(docs)
 
 
@@ -1303,7 +1312,7 @@ _MINHASH_ORACLE = (
 
 @query("doc_minhash_clusters", _MINHASH_ORACLE)
 def q_minhash(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     return minhash_near_dup(docs, jaccard_threshold=0.8, verify="exact")
 
 
@@ -1474,7 +1483,7 @@ def q_repetition(spark, sf_dir):
     top-bigram token mass) over the documents table."""
     from kgtk_spark.textops.quality import repetition_signals
 
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     return repetition_signals(docs)
 
 
@@ -1534,7 +1543,7 @@ def q_clean_corpus(spark, sf_dir):
     exact dedup → MinHash near-dup removal, value-checked end to end."""
     from kgtk_spark.textops.corpus import clean_corpus
 
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     return clean_corpus(docs)
 
 
@@ -2302,7 +2311,7 @@ def q_decontaminate(spark, sf_dir):
     held-out benchmark set (here: every 37th doc plays the benchmark)."""
     from kgtk_spark.textops.dedup import decontaminate
 
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     bench = docs.filter(F.col("doc_id") % 37 == 3).select("text")
     return decontaminate(docs, bench, n=8)
 

@@ -4,6 +4,11 @@ Defaults chosen for scale-out behavior (AQE on, adaptive skew-join on,
 Arrow for pandas UDFs). Shuffle partitions default to the local core
 count but on a real cluster should be ~2-3x total cores; all operators
 here express plans declaratively so Catalyst/AQE pick physical strategy.
+
+File scans keep Spark's own split sizing: the session sets no scan
+floor. Spreading a small input over the cores is decided once, where
+the input is read (``queries.load(..., spread=True)``), not here and
+not inside the operators.
 """
 
 from __future__ import annotations
@@ -54,12 +59,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Scan-parallelism FLOOR proportional to the session's cores:
-        # single-file/single-row-group inputs otherwise scan as one
-        # task. At cluster scale splits >> cores, so this is a no-op
-        # there (guide §6: split sizing should grow, not shrink, with
-        # data volume — a floor keyed to cores does exactly that).
-        .config("spark.sql.files.minPartitionNum", str(2 * shuffle_partitions))
         # Arrow transfer for pandas UDFs — the only sanctioned Python path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

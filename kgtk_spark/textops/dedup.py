@@ -116,9 +116,6 @@ def hashed_shingles(text_col: Column, n: int) -> Column:
     return gs_udf(token_hashes(text_col))
 
 
-from kgtk_spark.indexing import spread_to_parallelism as _spread
-
-
 def exact_dedup(
     df: DataFrame, key_cols: list[str], id_col: str = "doc_id"
 ) -> DataFrame:
@@ -139,7 +136,6 @@ def _shingles_and_sigs(
     (numpy rolling combine) and the MinHash signature (numpy
     permutation-min matrix op). No per-shingle Python, no re-tokenize
     between signature and verification."""
-    df = _spread(df)
     seeds = _splitmix64(np.arange(1, num_hashes + 1, dtype=np.uint64))
     empty_sig = [0] * num_hashes
 
@@ -459,7 +455,6 @@ def simhash_signatures(
     higher-order-function expressions don't codegen.
     """
     bits = SIMHASH_BITS
-    df = _spread(df)
     d = df.select(
         F.col(id_col),
         F.expr(
@@ -544,7 +539,7 @@ def ngram_jaccard_pairs(
         if hashed
         else word_ngrams(F.col(text_col), n)
     )
-    sh = _spread(df).select(F.col(id_col), grams.alias("sh"))
+    sh = df.select(F.col(id_col), grams.alias("sh"))
     return _jaccard_from_shingles(sh, id_col, threshold, df_cap, log_skipped)
 
 
@@ -766,7 +761,7 @@ def decontaminate(
     # count AND the semi-join — without it the explode + distinct
     # subtree (a Python gram kernel) executes twice
     bench = (
-        _spread(benchmark).select(
+        benchmark.select(
             F.explode(gh(token_hashes(F.col(bench_text_col)))).alias("__gh__")
         )
         .distinct()
@@ -774,7 +769,7 @@ def decontaminate(
     )
     if bench.count() <= broadcast_threshold:
         bench = F.broadcast(bench)
-    doc_grams = _spread(docs).select(
+    doc_grams = docs.select(
         F.col(id_col), F.explode(gh(token_hashes(F.col(text_col)))).alias("__gh__")
     )
     hits = (

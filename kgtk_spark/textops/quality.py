@@ -54,7 +54,6 @@ def token_count(
     (BPE_PIECE_RE) — the cheap JVM-side stand-in for a real BPE
     vocabulary when gating documents by token budget.
     """
-    df = _spread(df)
     c = F.trim(F.col(text_col))
     if method == "whitespace":
         n = F.when(c == "", F.lit(0)).otherwise(F.size(F.split(c, r"\s+")))
@@ -65,16 +64,9 @@ def token_count(
     return df.withColumn(out_col, n)
 
 
-def _spread(df):
-    from kgtk_spark.indexing import spread_to_parallelism
-
-    return spread_to_parallelism(df)
-
-
 def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
     """Marker-n-gram language heuristic: argmax of per-language marker
     hit counts; 'und' (undetermined) when nothing fires."""
-    df = _spread(df)
     padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
     scores = {
         lang: sum(
@@ -100,7 +92,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     (1.0 minus penalties; clamped to [0,1]). Formula mirrors the
     classic Gopher-style length and symbol-ratio rules.
     """
-    df = _spread(df)
     c = F.col(text_col)
     n_chars = F.length(c)
     punct = sum(
@@ -132,7 +123,7 @@ def doc_fingerprint(
     """Deterministic content fingerprint: md5 of whitespace-normalized,
     lowercased text — the cross-engine-stable normalize+hash."""
     norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    return _spread(df).withColumn(out_col, F.md5(norm))
+    return df.withColumn(out_col, F.md5(norm))
 
 
 def repetition_signals(
@@ -158,7 +149,7 @@ def repetition_signals(
     bigram denominator).
     """
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    t = _spread(df).select(
+    t = df.select(
         F.col(id_col), F.posexplode(toks).alias("pos", "w")
     ).repartition(F.col(id_col))
     words = (

@@ -439,6 +439,42 @@ def test_triangle_count_driver_path_starts_two_jobs(spark):
     assert held() - before == set()
 
 
+def test_triangle_count_wedge_path_releases_its_checkpoints(spark, monkeypatch):
+    """Above the gate the wedge join counts inside ``triangle_count`` and
+    releases both of its checkpoints: repeated calls leave nothing
+    persisted."""
+    from kgtk_spark.graph import stats
+
+    monkeypatch.setattr(stats, "CSR_EDGE_LIMIT", -1)
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    df = spark.createDataFrame(k4, "node1 long, node2 long")
+    held = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: E731
+    before = held()
+    for _ in range(3):
+        assert stats.triangle_count(df).first()["n_triangles"] == 4
+    assert held() - before == set()
+
+
+def test_driver_component_results_are_jvm_only(spark):
+    """Component assignments solved on the driver come back as a local
+    relation built from Arrow, so an action on them starts no Python
+    worker; empty inputs too."""
+    from kgtk_spark.graph.connected_components import components_auto, scc_auto
+
+    def plan(df):
+        return df._jdf.queryExecution().logical().getClass().getSimpleName()
+
+    pairs = spark.createDataFrame([("a", "b"), ("b", "a"), ("b", "c")], "u string, v string")
+    none = pairs.limit(0)
+    for solve in (components_auto, scc_auto):
+        for src in (pairs, none):
+            out = solve(src)
+            assert plan(out) == "LocalRelation", solve.__name__
+            assert out.schema.simpleString() == "struct<node:string,component:string>"
+    assert {tuple(r) for r in scc_auto(pairs).collect()} == {("a", "a"), ("b", "a"), ("c", "c")}
+    assert components_auto(none).count() == 0 and scc_auto(none).count() == 0
+
+
 def test_components_fixpoint_releases_round_checkpoints(spark):
     from kgtk_spark.graph.connected_components import _components_fixpoint
 

@@ -139,12 +139,17 @@ def test_single_file_load_starts_no_spark_job(spark, tmp_path):
 SPREAD_QUERIES = [
     "multimodal_wav_features", "multimodal_png_thumbnails", "multimodal_jpeg_features",
     "doc_span_dedup", "doc_span_dedup_keepone", "doc_gopher_quality", "doc_c4_filters",
+    "doc_token_count", "doc_fingerprint", "doc_language_id", "doc_quality",
+    "doc_punct_ratio", "doc_repetition", "doc_simhash", "doc_minhash_clusters",
+    "doc_ngram_jaccard", "doc_decontaminate", "doc_clean_corpus",
 ]
 
 
-def test_spread_queries_repartition_as_before(spark, monkeypatch):
-    """The footer's row-group count makes the same repartition decision
-    for every ``spread=True`` read that the scan's split count made."""
+def test_spread_queries_follow_the_footer_rule(spark, monkeypatch):
+    """Each spread query reads one table with ``spread=True``, and that
+    read is round-robined over ``SPREAD_PER_CORE`` × cores partitions
+    exactly when the file has fewer row groups than the session has
+    cores."""
     sf_dirs = sorted(d for d in glob.glob(f"{TESTDATA}/sf*") if os.path.isdir(d))
     if not sf_dirs:
         pytest.skip(f"{TESTDATA} has no scale factors")
@@ -154,11 +159,15 @@ def test_spread_queries_repartition_as_before(spark, monkeypatch):
 
     def recording_load(spark_, sf_dir, table, spread=False):
         df = load(spark_, sf_dir, table, spread=spread)
-        if spread:
-            plan = df._jdf.queryExecution().logical().getClass().getSimpleName()
-            before = spark.read.parquet(f"{sf_dir}/{table}.parquet").rdd.getNumPartitions() < p
-            seen.append((sf_dir, table, plan == "Repartition", before))
-        return df
+        if not spread:
+            return df
+        plan = df._jdf.queryExecution().logical()
+        n = plan.numPartitions() if plan.getClass().getSimpleName() == "Repartition" else None
+        groups = pq.ParquetFile(f"{sf_dir}/{table}.parquet").metadata.num_row_groups
+        seen.append((sf_dir, table, n, Q.SPREAD_PER_CORE * p if groups < p else None))
+        # The decision is made; an empty frame keeps the queries that run
+        # jobs while they are built (minhash, decontaminate) cheap.
+        return df.limit(0)
 
     monkeypatch.setattr(Q, "load", recording_load)
     for sf_dir in sf_dirs:
@@ -166,4 +175,39 @@ def test_spread_queries_repartition_as_before(spark, monkeypatch):
             n = len(seen)
             Q.QUERIES[name](spark, sf_dir)
             assert len(seen) == n + 1, name  # each reads one table with spread
-    assert all(now == before for _, _, now, before in seen), seen
+    assert all(got == want for _, _, got, want in seen), seen
+
+
+@pytest.mark.parametrize(
+    "op", ["token_count", "language_id", "quality_score", "simhash", "minhash_near_dup"]
+)
+def test_text_operators_do_not_repartition_their_input(spark, monkeypatch, op):
+    """Spreading is the read's decision: an operator given a 1-partition
+    input neither calls ``repartition(n)`` nor adds a ``Repartition`` to
+    its plan."""
+    from kgtk_spark import textops
+
+    docs = spark.range(0, 12, 1, 1).selectExpr(
+        "id AS doc_id", "concat('the cat and the dog of ', id % 3, ' sat') AS text"
+    )
+    calls = []
+    frame = type(docs)  # the session's concrete DataFrame class
+    repartition = frame.repartition
+
+    def recording_repartition(self, *args, **kwargs):
+        if args and isinstance(args[0], int):
+            calls.append(args[0])
+        return repartition(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "repartition", recording_repartition)
+    run = {
+        "token_count": textops.token_count,
+        "language_id": textops.language_id,
+        "quality_score": textops.quality_score,
+        "simhash": textops.simhash_signatures,
+        "minhash_near_dup": lambda d: textops.minhash_near_dup(d, jaccard_threshold=0.8),
+    }[op]
+    out = run(docs)
+    assert calls == []
+    assert "Repartition " not in out._jdf.queryExecution().logical().treeString()
+    assert out.count() == 12
