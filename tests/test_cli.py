@@ -6,7 +6,7 @@ from __future__ import annotations
 import glob
 
 from kgtk_spark.cli import build_parser, main
-from tests.conftest import REF_DATA
+from tests.conftest import REF_DATA, requires_reference
 
 SAMPLE = f"{REF_DATA}/sample_kgtk_edge_file.tsv"
 
@@ -19,6 +19,7 @@ def _read_out(path: str) -> list[str]:
     return lines
 
 
+@requires_reference("sample_kgtk_edge_file.tsv")
 def test_cli_filter_roundtrip(spark, tmp_path):
     out = str(tmp_path / "out")
     rc = main(["filter", "-i", SAMPLE, "-o", out, "-p", ";P31;",
@@ -32,6 +33,7 @@ def test_cli_filter_roundtrip(spark, tmp_path):
     assert all("\tP31\t" in r for r in rows)
 
 
+@requires_reference("sample_kgtk_edge_file.tsv")
 def test_cli_ifexists_and_stdout(spark, tmp_path, capsys):
     flt = str(tmp_path / "flt")
     assert main(["filter", "-i", SAMPLE, "-o", flt, "-p", ";P31;",
@@ -234,6 +236,11 @@ def test_cli_parser_covers_core_commands():
         assert callable(args.runner)
 
 
+@requires_reference(
+    "sample_kgtk_edge_file.tsv",
+    "sample_kgtk_edge_Q47158.tsv",
+    "sample_kgtk_edge_file_with_id.tsv",
+)
 def test_cli_cat_reference_expectations(spark, tmp_path):
     """Mirror of kgtk/tests/test_cat.py: row count + column preservation,
     csv / jsonl / jsonl-map output formats, two-file concat."""
@@ -314,6 +321,7 @@ def test_cli_validate_properties_pattern_file(spark, tmp_path):
     assert "P9999:reject" in rejected["Q5"]
 
 
+@requires_reference("sample_kgtk_edge_file.tsv")
 def test_cli_export_graphml(spark, tmp_path):
     out = str(tmp_path / "g.graphml")
     rc = main(["export-graphml", "-i", SAMPLE, "-o", out])

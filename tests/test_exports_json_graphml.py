@@ -11,6 +11,7 @@ from kgtk_spark.languages import validate_lang
 from kgtk_spark.operators.columns import reorder_columns
 from kgtk_spark.sources.graphml import export_graphml, read_graphml_edges
 from kgtk_spark.sources.wikidata_json import generate_wikidata_json
+from tests.conftest import requires_reference
 
 
 def test_graphml_roundtrip(spark, tmp_path_factory):
@@ -173,6 +174,7 @@ def test_tsv_csv_variants(spark):
     assert line("csv") == 'Q1,"say ""hi"" a|b",2020-01-01,"x,y"'
 
 
+@requires_reference("P10.tsv", "wikidata_properties.tsv", "P100.jsonl")
 def test_wikidata_json_generator_golden_P10(spark):
     """Structural parity with the reference's golden P100.jsonl
     (kgtk/tests/test_json_generation.py): same labels/descriptions,
@@ -217,6 +219,7 @@ def test_wikidata_json_generator_golden_P10(spark):
         assert mine[k] == golden[k], k
 
 
+@requires_reference("ranked_example.tsv", "wikidata_properties.tsv", "ranked0.jsonl")
 def test_wikidata_json_ranked_golden(spark):
     """has_rank mode vs the reference's golden ranked0.jsonl: per-edge
     golden used has_rank=False, so the default constant-rank mode must
@@ -272,6 +275,7 @@ def test_wikidata_json_ranked_golden(spark):
     assert "preferred" in ranks  # ranked_example.tsv carries preferred rows
 
 
+@requires_reference("Q57160439.tsv", "wikidata_properties.tsv", "Q571604390.jsonl")
 def test_wikidata_json_q57160439_golden(spark):
     """Third golden (Q571604390.jsonl): every claim matches."""
     import os

@@ -13,9 +13,10 @@ from kgtk_spark.operators.columns import kgtk_every_nth
 from kgtk_spark.schema import read_kgtk_tsv, write_kgtk_tsv
 from kgtk_spark.sources.iceberg import iceberg_available, read_table, write_table
 from kgtk_spark.textops.skew import salted_join
-from tests.conftest import REF_DATA
+from tests.conftest import REF_DATA, requires_reference
 
 
+@requires_reference("sample_kgtk_edge_file.tsv")
 def test_tsv_roundtrip_byte_parity(spark, sample_edges, tmp_path):
     """Reading the reference fixture and writing it back must reproduce
     the exact data lines (golden byte parity, FIXTURES.md note)."""

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgtk_spark.schema import read_kgtk_tsv, read_kgtk_tsv_repair
-from tests.conftest import REF_DATA
+from tests.conftest import REF_DATA, requires_reference
 
 # Plain KGTK TSVs (tab-separated, header, rectangular).
 CLEAN_FILES = [
@@ -45,6 +45,7 @@ def test_reference_tsv_reads_with_exact_row_count(spark, fname):
     assert len(df.columns) == len(raw_lines[0].split("\t"))
 
 
+@requires_reference("sample_kgtk_edge_file.tsv")
 def test_reference_values_classify(spark):
     """Every node2 in the main sample file classifies to a KGTK type
     and language-qualified strings carry valid ISO-639 codes."""
@@ -87,6 +88,7 @@ def test_corrupted_fixture_routes_to_reject(spark):
     assert good.count() + rejects.count() == n_data
 
 
+@requires_reference("sample_kgtk_edge_file_no_id.tsv", "sample_kgtk_edge_file_with_id.tsv")
 def test_add_id_reference_file_parity(spark):
     """Mirror kgtk/tests/test_add_id.py expectations on the reference's
     own files: default style yields exactly {E1..EN}; overwrite-id with
@@ -106,6 +108,7 @@ def test_add_id_reference_file_parity(spark):
         assert r["id"] == f'{r["node1"]}-{r["label"]}-{r["node2"]}'
 
 
+@requires_reference("sample_kgtk_edge_file.tsv", "sample_kgtk_nodes.tsv")
 def test_cat_reference_file_parity(spark):
     """Mirror kgtk/tests/test_cat.py: cat of one file preserves rows and
     columns; edge+node cat merges columns with missing filled empty."""
@@ -122,6 +125,7 @@ def test_cat_reference_file_parity(spark):
     assert set(both.columns) >= set(edge.columns) | set(nodes.columns)
 
 
+@requires_reference("sample_kgtk_nodes.tsv")
 def test_normalize_nodes_reference_goldens(spark):
     """Golden counts from kgtk/tests/test_normalize_nodes.py: the node
     sample normalizes to 52 edges (lists split), Q183 carries the three

@@ -8,6 +8,7 @@ from kgtk_spark.sources.wikidata_rdf import (
     generate_wikidata_triples,
     serialize_prefixes,
 )
+from tests.conftest import requires_reference
 
 
 def _props(spark):
@@ -175,6 +176,7 @@ def _parse_golden_ttl(path):
     return triples
 
 
+@requires_reference("P10.tsv", "wikidata_properties.tsv", "P10_truthy.ttl")
 def test_rdf_generator_matches_golden_ttl_families(spark):
     """Triple-set parity with the reference's P10_truthy.ttl for every
     predicate family both implementations emit: labels/aliases/
@@ -224,6 +226,7 @@ def test_rdf_generator_matches_golden_ttl_families(spark):
         assert m == g, (name, sorted(m ^ g)[:6])
 
 
+@requires_reference("Q57160439.tsv", "wikidata_properties.tsv", "Q57160439_truthy.ttl")
 def test_rdf_generator_matches_golden_ttl_q57160439(spark):
     """Same family parity on the reference's item-entity golden
     (labels, monolingual title, time, item and string claims)."""
