@@ -22,3 +22,7 @@ row-at-a-time Python.
 """
 
 __version__ = "0.1.0"
+
+from kgtk_spark import _zipcache
+
+_zipcache.install()

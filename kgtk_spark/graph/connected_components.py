@@ -117,17 +117,26 @@ def components_auto(
         release_checkpoint(pairs)  # the fixpoint checkpointed its own copy
         return out
     release_checkpoint(pairs)  # every row is on the driver now
+    comp = union_find((r["u"], r["v"]) for r in head)
+    return _assignment(pairs.sparkSession, sorted(comp.items()))
+
+
+def union_find(pairs) -> dict:
+    """node → lexicographically-min member of its component, over the
+    ``(u, v)`` pairs on the driver. A pair with a null endpoint or with
+    ``u == v`` is skipped, as Spark's ``u != v`` filter drops it."""
     parent: dict = {}
 
-    def find(x: str) -> str:
+    def find(x):
         while parent.get(x, x) != x:
             parent[x] = parent.get(parent[x], parent[x])
             x = parent[x]
         return x
 
     nodes = set()
-    for row in head:
-        u, v = row["u"], row["v"]
+    for u, v in pairs:
+        if u is None or v is None or u == v:
+            continue
         nodes.add(u)
         nodes.add(v)
         ru, rv = find(u), find(v)
@@ -135,7 +144,7 @@ def components_auto(
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru
-    return _assignment(pairs.sparkSession, [(x, find(x)) for x in sorted(nodes)])
+    return {x: find(x) for x in nodes}
 
 
 def connected_components(

@@ -12,9 +12,10 @@ Stages, each a DataFrame → DataFrame function, in the order of
 3. link_entities   — best-prior sense per mention (broadcast map-side)
 4. extract_triples — pattern-based SVO over sentences; subject and object
                      surfaces resolve to their best-prior entity
-5. canonicalize    — connected-components over sameAs clusters
+5. canonicalize    — connected-components over sameAs clusters (on the
+                     driver up to DRIVER_TRIPLE_LIMIT input rows)
 6. materialize     — KGTK-schema edges (node1, label, node2, id),
-                     bucketed by subject hash
+                     hash-partitioned on node1 by its one shuffle
 
 ``run_pipeline`` walks that one stage list into one of three sinks:
 memory (no ``out_dir``; stages 1-3 are not run, since extract_triples

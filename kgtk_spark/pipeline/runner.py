@@ -17,10 +17,9 @@ The sink, where each stage's output goes, follows from the arguments:
   ``out_dir/<stage>/`` (the parquet job commit makes the write atomic).
 
 Every sink shares the tail: the distinct (node1, label, node2) triples
-are checkpointed once, canonicalized with the dictionary size as the
-rewrite-map bound and materialized. The writing sinks release that
-checkpoint once canonical is committed; the memory sink's returned edges
-still read it.
+are canonicalized with the dictionary size as the rewrite-map bound and
+materialized. canonicalize checkpoints them once; when it resolves the
+KG on the driver it releases that checkpoint before it returns.
 
 The writing sinks commit each stage to a manifest under
 ``out_dir/_manifest`` (stage, fingerprint, rows, partitions, duration)
@@ -47,7 +46,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgtk_spark.graph.connected_components import release_checkpoint
 from kgtk_spark.pipeline import stages as S
 from kgtk_spark.sources.iceberg import iceberg_available, read_table, write_table
 
@@ -202,14 +200,6 @@ def run_pipeline(
         alias_count, digest = row[0], f"{row[0]}:{row[1]}"
 
     out: dict[str, DataFrame] = {}
-    held: list[DataFrame] = []  # the dedup checkpoint, once canonical runs
-
-    def distinct_triples() -> DataFrame:
-        held.append(
-            out["triples"].select("node1", "label", "node2").dropDuplicates().localCheckpoint()
-        )
-        return held[-1]
-
     compute = {
         "text": lambda: S.extract_text(pages),
         "mentions": lambda: S.detect_mentions(out["text"], alias_dict, alias_count=alias_count),
@@ -219,13 +209,17 @@ def run_pipeline(
         ),
         # Dedup BEFORE the rewrite: canonicalize's per-row rewrite
         # commutes with dropDuplicates on (node1, label, node2), and
-        # materialize dedups again after it anyway, so the two broadcast
-        # rewrite joins touch the distinct edge set instead of every raw
-        # triple. localCheckpoint so the distinct shuffle isn't recomputed
-        # for the sameAs split AND the rewrite. Rewrite-map rows are
-        # bounded by the dictionary (every sameAs endpoint is a dictionary
-        # entity), so canonicalize skips its size probe.
-        "canonical": lambda: S.canonicalize(distinct_triples(), size_hint=alias_count),
+        # materialize dedups again after it anyway, so the rewrite (on the
+        # driver, or as two broadcast joins above its gate) touches the
+        # distinct edge set instead of every raw triple. canonicalize
+        # checkpoints its input, so the distinct shuffle runs once.
+        # Rewrite-map rows are bounded by the dictionary (every sameAs
+        # endpoint is a dictionary entity), so the joins skip their size
+        # probe.
+        "canonical": lambda: S.canonicalize(
+            out["triples"].select("node1", "label", "node2").dropDuplicates(),
+            size_hint=alias_count,
+        ),
         "edges": lambda: S.materialize(out["canonical"], n_buckets=n_buckets),
     }
     manifest = StageManifest(spark, out_dir) if out_dir is not None else None
@@ -239,11 +233,6 @@ def run_pipeline(
                 spark, manifest, committed, out_dir, name, fp, compute[name],
                 table_namespace, catalog,
             )
-            # canonical is written and read back from the sink, so nothing
-            # reads the dedup checkpoint any more (the memory sink's
-            # returned edges still do: it keeps it)
-            while held:
-                release_checkpoint(held.pop())
         elif name not in _WRITTEN_ONLY:
             out[name] = compute[name]()
     return out["edges"]
@@ -257,9 +246,9 @@ def run_pipeline_fused(
     alias_count: int | None = None,
 ) -> DataFrame:
     """``run_pipeline`` with the memory sink: one Python pass from the raw
-    pages to resolved triples, nothing written, only the distinct-triple
-    checkpoint persisted. The throughput configuration, with the same
-    edges as the writing sinks."""
+    pages to resolved triples, nothing written, and nothing left persisted
+    when canonicalize resolves the KG on the driver. The throughput
+    configuration, with the same edges as the writing sinks."""
     return run_pipeline(spark, pages, alias_dict, n_buckets=n_buckets, alias_count=alias_count)
 
 

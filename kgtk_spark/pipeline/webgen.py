@@ -21,6 +21,7 @@ import html as html_mod
 import random
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -260,7 +261,8 @@ def generate_pages_distributed(
     """Executor-side page synthesis for large benchmark inputs.
 
     The World (entities/aliases/facts) is built on the driver and
-    broadcast; pages materialize in parallel from their index. Returns
+    broadcast; pages materialize in parallel from their index, once,
+    into a ``localCheckpoint`` that both returned frames read. Returns
     (pages_df, expected_edges_df, world) — expected edges are the
     distinct planted facts, computed distributedly.
     """
@@ -288,8 +290,17 @@ def generate_pages_distributed(
                 rows, columns=["url", "warc_ts", "html", "text", "lang", "planted"]
             )
 
-    base = spark.range(n_pages).repartition(partitions)
-    full = base.mapInPandas(gen, schema=full_schema)
+    # One eager checkpoint: pages and expected both read it, so each page
+    # is generated once. The two returned frames own it: Spark's
+    # ContextCleaner drops its blocks after both have been garbage-
+    # collected, and callers need no persist() of their own. The blocks
+    # are executor-local: a lost executor fails the read instead of
+    # regenerating the pages.
+    full = (
+        spark.range(0, n_pages, 1, partitions)
+        .mapInPandas(gen, schema=full_schema)
+        .localCheckpoint()
+    )
     pages = full.drop("planted")
     expected = (
         full.select(F.explode("planted").alias("f"))
@@ -306,15 +317,17 @@ def generate_pages_distributed(
 def alias_dictionary_df(spark: SparkSession, world: World) -> DataFrame:
     """(alias, entity, prior) — the broadcast dictionary for mention
     detection and linking. Prior splits mass across homonym senses."""
-    rows = []
     counts: dict[str, int] = {}
     for ent, forms in world.aliases.items():
         for form in forms:
             counts[form] = counts.get(form, 0) + 1
-    for ent, forms in world.aliases.items():
-        for form in forms:
-            rows.append((form, ent, 1.0 / counts[form]))
-    return spark.createDataFrame(rows, "alias string, entity string, prior double")
+    pairs = [(form, ent) for ent, forms in world.aliases.items() for form in forms]
+    # Arrow-built, like expected_edges_df: a JVM-only local relation
+    return spark.createDataFrame(pa.table({
+        "alias": pa.array([a for a, _ in pairs], pa.string()),
+        "entity": pa.array([e for _, e in pairs], pa.string()),
+        "prior": pa.array([1.0 / counts[a] for a, _ in pairs], pa.float64()),
+    }))
 
 
 def expected_edges_df(spark: SparkSession, world: World) -> DataFrame:
@@ -324,4 +337,9 @@ def expected_edges_df(spark: SparkSession, world: World) -> DataFrame:
     pages have been generated — an extractor cannot recover a fact no
     page mentions."""
     facts = sorted(world.emitted) if world.emitted else sorted(set(world.facts))
-    return spark.createDataFrame(facts, "node1 string, label string, node2 string")
+    # Built from Arrow: a JVM-only local relation, where createDataFrame
+    # of a Python list starts a Python worker on every action on the frame.
+    return spark.createDataFrame(pa.table({
+        col: pa.array([f[i] for f in facts], pa.string())
+        for i, col in enumerate(("node1", "label", "node2"))
+    }))

@@ -2234,16 +2234,16 @@ def q_paragraph_dedup(spark, sf_dir):
     # same replace chain (email -> ip -> phone) + counts on the raw text
     "SELECT doc_id, "
     "regexp_replace(regexp_replace(regexp_replace(text, "
-    "  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'), "
-    "  '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g'), "
-    "  '\+?[0-9]{1,3}[ .-]?\(?[0-9]{3}\)?[ .-][0-9]{3}[ .-][0-9]{4}\b', "
+    "  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'), "
+    "  '\\b(?:[0-9]{1,3}\\.){3}[0-9]{1,3}\\b', '<IP>', 'g'), "
+    "  '\\+?[0-9]{1,3}[ .-]?\\(?[0-9]{3}\\)?[ .-][0-9]{3}[ .-][0-9]{4}\\b', "
     "  '<PHONE>', 'g') AS text, "
     "CAST(len(regexp_extract_all(text, "
-    "  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS pii_email, "
+    "  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS INT) AS pii_email, "
     "CAST(len(regexp_extract_all(text, "
-    "  '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS INT) AS pii_ipv4, "
+    "  '\\b(?:[0-9]{1,3}\\.){3}[0-9]{1,3}\\b')) AS INT) AS pii_ipv4, "
     "CAST(len(regexp_extract_all(text, "
-    "  '\+?[0-9]{1,3}[ .-]?\(?[0-9]{3}\)?[ .-][0-9]{3}[ .-][0-9]{4}\b')) AS INT) "
+    "  '\\+?[0-9]{1,3}[ .-]?\\(?[0-9]{3}\\)?[ .-][0-9]{3}[ .-][0-9]{4}\\b')) AS INT) "
     "  AS pii_phone "
     "FROM documents",
 )

@@ -4,6 +4,8 @@ and resume-from-manifest."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -157,7 +159,25 @@ def test_mentions_and_linking(spark):
     assert ents <= valid
 
 
-def test_canonicalize_rewrites_dups(spark):
+def _canonicalize_paths(triples, monkeypatch, **kw) -> tuple:
+    """canonicalize of ``triples`` on each path, as (schema, sorted rows):
+    the driver path, and the Spark joins. A gate of -1 sends every input
+    to the joins (the collect is limit(0), and 0 rows > -1)."""
+    from kgtk_spark.pipeline import stages as S
+
+    ran, joins, out = [], S._canonicalize_joins, {}
+    for path, limit in (("driver", S.DRIVER_TRIPLE_LIMIT), ("spark", -1)):
+        with monkeypatch.context() as m:
+            m.setattr(S, "_canonicalize_joins", lambda *a: ran.append(path) or joins(*a))
+            m.setattr(S, "DRIVER_TRIPLE_LIMIT", limit)
+            df = S.canonicalize(triples, **kw)
+            out[path] = (df.schema, sorted(map(tuple, df.collect()), key=repr))
+        assert ran == ["spark"] * (path == "spark"), f"{path} took the other path"
+    assert out["driver"] == out["spark"]
+    return out["driver"]
+
+
+def test_canonicalize_rewrites_dups(spark, monkeypatch):
     t = spark.createDataFrame(
         [
             ("Q1__dup", "P31", "Q2", "u1"),
@@ -166,22 +186,59 @@ def test_canonicalize_rewrites_dups(spark):
         ],
         ["node1", "label", "node2", "url"],
     ).select("url", "node1", "label", "node2")
-    out = canonicalize(t).collect()
-    got = {(r["node1"], r["label"], r["node2"]) for r in out}
-    assert got == {("Q1", "P31", "Q2"), ("Q3", "P31", "Q1")}
+    schema, rows = _canonicalize_paths(t, monkeypatch)
+    assert schema == t.schema
+    assert rows == [("u1", "Q1", "P31", "Q2"), ("u1", "Q3", "P31", "Q1")]
 
 
-def test_canonicalize_large_map_takes_shuffle_path(spark):
+def test_canonicalize_nulls_self_loops_and_extra_columns(spark, monkeypatch):
+    # A sameAs chain (zb~zc~za: za is the min), a sameAs self-loop and a
+    # sameAs with a null endpoint (both ignored), null labels (dropped),
+    # null endpoints on ordinary edges (kept as null) and a url column
+    # that rides along unchanged.
+    t = spark.createDataFrame(
+        [
+            ("z", "sameAs", "z", "u0"),
+            ("zb", "sameAs", "zc", "u0"),
+            ("zc", "sameAs", "za", "u1"),
+            ("n", "sameAs", None, "u1"),
+            (None, "sameAs", "n", "u1"),
+            ("zb", "P31", "zc", "u2"),
+            ("zc", None, "zb", "u3"),
+            (None, None, None, "u3"),
+            (None, "P47", "zb", "u4"),
+            ("n", "P47", None, "u4"),
+            ("z", "P26", "zc", None),
+        ],
+        "node1 string, label string, node2 string, url string",
+    )
+    schema, rows = _canonicalize_paths(t, monkeypatch)
+    assert schema == t.schema
+    assert rows == sorted([
+        ("za", "P31", "za", "u2"),
+        (None, "P47", "za", "u4"),
+        ("n", "P47", None, "u4"),
+        ("z", "P26", "za", None),
+    ], key=repr)
+
+
+def test_canonicalize_large_map_takes_shuffle_path(spark, monkeypatch):
     # broadcast_threshold=0 forces the "sameAs map too big to broadcast"
     # route: the rewrite joins must run WITHOUT a broadcast exchange and
-    # produce results identical to the broadcast path.
+    # produce results identical to the broadcast path and the driver path.
+    from kgtk_spark.pipeline import stages as S
+
     rows = [(f"u{i}", f"Q{i}__dup", "P31", f"Q{(i + 1) % 30}") for i in range(30)]
     rows += [(f"u{i}", f"Q{i}__dup", "sameAs", f"Q{i}") for i in range(30)]
     t = spark.createDataFrame(rows, ["url", "node1", "label", "node2"])
+    key = lambda r: (r["url"], r["node1"], r["label"], r["node2"])  # noqa: E731
+    on_driver = sorted(map(key, canonicalize(t).collect()))
 
     # Disable size-based auto-broadcast so the plan shape reflects the
     # explicit hint alone (at web scale the map's stats exceed the
-    # threshold anyway; the guard controls the FORCED broadcast).
+    # threshold anyway; the guard controls the FORCED broadcast). A
+    # driver gate of -1 keeps this small input on the Spark joins.
+    monkeypatch.setattr(S, "DRIVER_TRIPLE_LIMIT", -1)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -192,10 +249,15 @@ def test_canonicalize_large_map_takes_shuffle_path(spark):
         bcast = canonicalize(t)  # hint overrides the -1 threshold
         assert "BroadcastHashJoin" in bcast._jdf.queryExecution().executedPlan().toString()
 
-        key = lambda r: (r["url"], r["node1"], r["label"], r["node2"])  # noqa: E731
-        assert sorted(map(key, shuf.collect())) == sorted(map(key, bcast.collect()))
+        assert sorted(map(key, shuf.collect())) == sorted(map(key, bcast.collect())) == on_driver
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def _exchanges(df) -> list[str]:
+    """Each Exchange of the physical plan, without its plan id."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"Exchange [^\[\n]*", plan)
 
 
 def test_materialize_ids_and_buckets(spark):
@@ -204,6 +266,11 @@ def test_materialize_ids_and_buckets(spark):
         ["url", "node1", "label", "node2"],
     )
     out = materialize(t, n_buckets=4)
+    # one shuffle, on node1 alone, and the output stays bucketed on it
+    # (plans read before any action: AQE's final plan repeats the initial)
+    (ex,) = _exchanges(out)
+    assert re.fullmatch(r"Exchange hashpartitioning\(node1#\d+, 4\), REPARTITION_BY_NUM, ", ex), ex
+    assert _exchanges(out.groupBy("node1", "label").count()) == [ex]
     rows = out.collect()
     assert len(rows) == 2  # deduped
     ids = {r["id"] for r in rows}
@@ -388,21 +455,21 @@ def test_fused_pipeline_matches_staged(spark, tmp_path):
     before = _persistent_rdd_ids(spark)
     fused = run_pipeline_fused(spark, pages, ad, n_buckets=4)
     got = sorted(map(tuple, fused.collect()))
-    # only the dedup checkpoint and the components_auto pairs stay
-    assert len(_persistent_rdd_ids(spark) - before) <= 2
+    # canonicalize resolves on the driver and releases its checkpoint
+    assert _persistent_rdd_ids(spark) - before == set()
     assert fused.columns == ["node1", "label", "node2", "id"]
     assert got == sorted(map(tuple, staged.collect()))
     assert triple_precision_recall(fused, expected_edges_df(spark, world)) == (1.0, 1.0)
 
-    # The memory sink with the dictionary size given runs 11 jobs on this
+    # The memory sink with the dictionary size given runs 7 jobs on this
     # input; a provenance stage would add more (mention detection collects
-    # the dictionary when it is called). Only the dedup checkpoint stays.
+    # the dictionary when it is called). Nothing stays persisted.
     n_aliases = ad.count()
     before = _persistent_rdd_ids(spark)
     rows, jobs = _jobs_started(spark, "memory-sink-jobs", lambda: run_pipeline_fused(
         spark, pages, ad, n_buckets=4, alias_count=n_aliases).collect())
-    assert jobs <= 11, jobs
-    assert len(_persistent_rdd_ids(spark) - before) <= 1
+    assert jobs <= 7, jobs
+    assert _persistent_rdd_ids(spark) - before == set()
     assert sorted(map(tuple, rows)) == got
 
 
@@ -428,8 +495,8 @@ def test_pipeline_resume_covers_the_dictionary(spark, tmp_path):
 
 
 def test_staged_run_releases_the_dedup_checkpoint(spark, tmp_path):
-    # The writing sinks read canonical back from the sink, so once it is
-    # committed nothing reads the dedup checkpoint any more.
+    # canonicalize releases its checkpoint of the distinct triples when it
+    # resolves the KG on the driver, so no stage leaves a persisted RDD.
     pages, world = generate_pages_df(spark, n_pages=40, n_entities=20, seed=13)
     ad = alias_dictionary_df(spark, world)
     before = _persistent_rdd_ids(spark)
@@ -453,9 +520,13 @@ def test_pipeline_resume_recomputes_after_crashed_write(spark, tmp_path, monkeyp
     # overwrite of canonical's committed output has begun.
     canonicalize = S.canonicalize
 
+    def crash(node1):
+        raise RuntimeError("injected crash")
+
     def crashing(triples, **kw):
-        out = canonicalize(triples, **kw)
-        return out.where(F.assert_true(F.col("node1").isNull(), "injected crash").isNull())
+        # a Python UDF: the optimizer cannot evaluate it over canonicalize's
+        # local relation while planning, so it fires inside the write job
+        return canonicalize(triples, **kw).where(F.udf(crash, "boolean")("node1"))
 
     monkeypatch.setattr(S, "canonicalize", crashing)
     with pytest.raises(Exception, match="injected crash"):

@@ -211,3 +211,34 @@ def test_text_operators_do_not_repartition_their_input(spark, monkeypatch, op):
     assert calls == []
     assert "Repartition " not in out._jdf.queryExecution().logical().treeString()
     assert out.count() == 12
+
+
+def test_pii_scrub_matches_its_oracle_on_every_kind(spark, tmp_path):
+    # One document holds an email, an IPv4 address and a phone number; the
+    # catalog data holds no IPv4 address or phone number, so only this
+    # input checks the oracle's word-boundary patterns.
+    import duckdb
+
+    from tools.check_oracles import value_hash
+
+    text = ["mail ann@example.org from 10.0.0.12 or call +1 555 123 4567 today", "nothing"]
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, 2], pa.int64()), "text": text}),
+        tmp_path / "documents.parquet",
+    )
+    sql = Q.ORACLES["doc_pii_scrub"]
+    assert not [c for c in sql if ord(c) < 32 and c != "\n"]
+
+    got = Q.QUERIES["doc_pii_scrub"](spark, str(tmp_path))
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')")
+    res = con.sql(sql)
+    want = res.fetchall()
+    assert value_hash(want, list(res.columns)) == value_hash(
+        [tuple(r) for r in got.collect()], got.columns
+    )
+    first = next(r for r in want if r[0] == 1)
+    assert dict(zip(res.columns, first)) == {
+        "doc_id": 1, "text": "mail <EMAIL> from <IP> or call <PHONE> today",
+        "pii_email": 1, "pii_ipv4": 1, "pii_phone": 1,
+    }
