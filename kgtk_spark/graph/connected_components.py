@@ -85,15 +85,27 @@ def release_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
-def _assignment(spark: SparkSession, rows) -> DataFrame:
-    """``(node, component)`` string rows computed on the driver, as a
-    frame built from an Arrow table: a JVM-only local relation, where
-    ``createDataFrame`` of a Python list starts a Python worker
+def collect_bounded(df: DataFrame, n: int) -> pa.Table | None:
+    """The rows of ``df`` as one Arrow table when it has at most ``n``,
+    else None: the one driver gate. ``limit(n + 1)`` answers "small
+    enough for the driver?" and, when yes, already holds the rows, in
+    one job that brings at most ``n + 1`` rows to the driver. A caller
+    whose above-gate path re-reads ``df`` checkpoints it first, so that
+    its input is evaluated once."""
+    head = df.limit(n + 1).toArrow()
+    return head if head.num_rows <= n else None
+
+
+def _assignment(spark: SparkSession, comp: dict) -> DataFrame:
+    """``node -> component`` computed on the driver, as a frame built
+    from an Arrow table, sorted by node: a JVM-only local relation,
+    where ``createDataFrame`` of a Python list starts a Python worker
     (~0.45 s) on every action on the frame."""
-    nodes, comps = zip(*rows) if rows else ((), ())
-    return spark.createDataFrame(
-        pa.table({"node": pa.array(nodes, pa.string()), "component": pa.array(comps, pa.string())})
-    )
+    nodes = sorted(comp)
+    return spark.createDataFrame(pa.table({
+        "node": pa.array(nodes, pa.string()),
+        "component": pa.array([comp[x] for x in nodes], pa.string()),
+    }))
 
 
 def components_auto(
@@ -108,17 +120,14 @@ def components_auto(
     input is checkpointed once, so the upstream pipeline (LSH, verify,
     extraction) never executes twice."""
     pairs = pairs.where(F.col("u") != F.col("v")).localCheckpoint()
-    # take(threshold + 1) answers "small enough for the driver?" AND,
-    # when yes, already delivers the rows — one incremental job instead
-    # of a full count followed by a collect.
-    head = pairs.take(driver_threshold + 1)
-    if len(head) > driver_threshold:
+    head = collect_bounded(pairs, driver_threshold)
+    if head is None:
         out = _components_fixpoint(pairs, max_iterations=max_iterations)
         release_checkpoint(pairs)  # the fixpoint checkpointed its own copy
         return out
     release_checkpoint(pairs)  # every row is on the driver now
-    comp = union_find((r["u"], r["v"]) for r in head)
-    return _assignment(pairs.sparkSession, sorted(comp.items()))
+    comp = union_find(zip(head["u"].to_pylist(), head["v"].to_pylist()))
+    return _assignment(pairs.sparkSession, comp)
 
 
 def union_find(pairs) -> dict:
@@ -298,7 +307,7 @@ def connected_components(
 # kgtk/gt/connected_components.py:43,156 → label_components(directed=True))
 # ---------------------------------------------------------------------------
 
-def _tarjan(pairs: list[tuple[str, str]]) -> dict[str, str]:
+def _tarjan(pairs) -> dict[str, str]:
     """Iterative Tarjan SCC on the driver; component id = min member."""
     adj: dict[str, list[str]] = {}
     nodes: set[str] = set()
@@ -361,8 +370,10 @@ def scc_auto(
     round_log: list | None = None,
 ) -> DataFrame:
     """(node, component = min member of its SCC), adaptive like
-    components_auto: driver Tarjan under ``driver_threshold`` edges,
-    else the distributed COLORING algorithm (Orzan; also Slota et al.):
+    components_auto: driver Tarjan up to ``driver_threshold`` edge rows
+    (self-loops dropped, duplicates kept), read by one bounded collect;
+    else the distributed COLORING algorithm (Orzan; also Slota et al.)
+    over the distinct edges:
 
     repeat until no edges remain:
       1. forward min-label propagation to fixpoint (color);
@@ -386,26 +397,22 @@ def scc_auto(
     appended per outer round — used by tests to assert the bound.
     """
     spark = pairs.sparkSession
-    pairs = pairs.where(F.col("u") != F.col("v")).distinct().localCheckpoint()
-    n = pairs.count()
-    all_nodes = (
-        pairs.select(F.col("u").alias("node"))
-        .union(pairs.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    if n <= driver_threshold:
-        rows = _tarjan([(r["u"], r["v"]) for r in pairs.collect()])
+    pairs = pairs.where(F.col("u") != F.col("v"))
+    head = collect_bounded(pairs, driver_threshold)
+    if head is not None:
         # nodes in no cycle are their own singleton SCC (covered: tarjan
         # assigns every visited node)
-        return _assignment(spark, sorted(rows.items()))
+        return _assignment(spark, _tarjan(zip(head["u"].to_pylist(), head["v"].to_pylist())))
+    pairs = pairs.distinct().localCheckpoint()
 
-    assigned = _assignment(spark, [])
+    assigned = _assignment(spark, {})
     live = pairs
     rounds = 0
     while not live.isEmpty():
-        if rounds >= max_rounds and live.count() <= driver_threshold:
-            break  # residue is driver-sized — finish exactly below
+        if rounds >= max_rounds:
+            head = collect_bounded(live, driver_threshold)
+            if head is not None:
+                break  # residue is driver-sized — finish exactly below
         if round_log is not None:
             round_log.append(live.count())
         rounds += 1
@@ -467,10 +474,15 @@ def scc_auto(
             .localCheckpoint()
         )
     # anything never peeled that still has edges → finish on the driver
-    if not live.isEmpty():
-        rest = _tarjan([(r["u"], r["v"]) for r in live.collect()])
-        assigned = assigned.union(_assignment(spark, sorted(rest.items())))
+    if head is not None:
+        rest = _tarjan(zip(head["u"].to_pylist(), head["v"].to_pylist()))
+        assigned = assigned.union(_assignment(spark, rest))
     # isolated-by-peel nodes: every node not assigned is its own SCC
+    all_nodes = (
+        pairs.select(F.col("u").alias("node"))
+        .union(pairs.select(F.col("v").alias("node")))
+        .distinct()
+    )
     singles = all_nodes.join(assigned, "node", "left_anti").select(
         "node", F.col("node").alias("component")
     )

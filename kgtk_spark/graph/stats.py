@@ -1,7 +1,7 @@
 """Graph statistics: degrees, PageRank, HITS — DataFrame-native.
 
 Reference: kgtk/cli/graph_statistics.py:55-181 + kgtk/gt/analysis_utils.py
-(degrees :27-45, pagerank damping 0.85 :49-57, HITS :60-74, top-N :77-83).
+(degrees :27-45, pagerank damping 0.85 :49-57, HITS :60-74).
 The reference delegates to graph-tool's C++ centrality; here PageRank is
 the canonical iterative join-aggregate (contribs = edges ⋈ ranks →
 groupBy(dst).sum; rank = (1-d)/N + d·Σ), checkpointed per iteration —
@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kgtk_spark.graph.connected_components import release_checkpoint
+from kgtk_spark.graph.connected_components import collect_bounded, release_checkpoint
 from kgtk_spark.schema import resolve_column
 
 
@@ -61,24 +61,34 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
+def _dense_ids(u: pa.ChunkedArray, v: pa.ChunkedArray) -> tuple[pa.Array, np.ndarray, np.ndarray]:
+    """One dictionary over both endpoint columns, for any id type, with
+    null as one more id: the vertex set in first-seen order, and the
+    dense int64 id of every ``u`` and every ``v``."""
+    codes = pa.chunked_array(u.chunks + v.chunks, u.type).dictionary_encode(null_encoding="encode")
+    if codes.num_chunks == 0:
+        return pa.array([], u.type), np.zeros(0, np.int64), np.zeros(0, np.int64)
+    ids = np.concatenate([c.indices.to_numpy() for c in codes.chunks]).astype(np.int64)
+    # the chunks share one dictionary, complete in the last one
+    return codes.chunks[-1].dictionary, ids[: len(u)], ids[len(u) :]
+
+
 def _pagerank_driver(
-    pairs: list,
-    nodes: list,
+    src: np.ndarray,
+    dst: np.ndarray,
+    n: int,
     damping: float,
     max_iterations: int,
     tolerance: float,
     check_delta_every: int,
-):
-    """Same iteration semantics as the distributed loop, in numpy —
-    for graphs small enough that per-iteration Spark job launches
-    dominate (the values agree with the DataFrame path to float
-    round-off; both are ROUND(…, 6)-stable vs the SQL oracle)."""
-    import numpy as np
-
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    src = np.array([idx[u] for u, _ in pairs], dtype=np.int64)
-    dst = np.array([idx[v] for _, v in pairs], dtype=np.int64)
+) -> np.ndarray:
+    """Same iteration semantics as the distributed loop, in numpy, over
+    the dense ids of ``n`` vertices — for graphs small enough that
+    per-iteration Spark job launches dominate (the values agree with
+    the DataFrame path to float round-off; both are ROUND(…, 6)-stable
+    vs the SQL oracle)."""
+    if n == 0:
+        return np.zeros(0)
     out_deg = np.bincount(src, minlength=n).astype(np.float64)
     dangling = out_deg == 0
     rank = np.full(n, 1.0 / n)
@@ -95,7 +105,7 @@ def _pagerank_driver(
                 rank = new_rank
                 break
         rank = new_rank
-    return [(v, float(rank[idx[v]])) for v in nodes]
+    return rank
 
 
 def pagerank(
@@ -111,37 +121,34 @@ def pagerank(
     Dangling-node mass is redistributed uniformly each round. Ranks are
     probabilities (sum to 1), matching graph-tool's convention.
 
-    One Spark job per iteration: the dangling-mass sum rides along as a
-    one-row crossJoin inside the same localCheckpoint that materializes
-    the contribs aggregation (the per-iteration checkpoint keeps the
-    plan shallow, so the agg subtree never compounds). The convergence
-    delta — an extra one-row collect — is only checked every
-    ``check_delta_every`` iterations; set ``tolerance=0`` to disable
-    early stopping entirely (fixed iteration count, oracle-exact).
+    Up to ``driver_threshold`` edge rows, one bounded Arrow collect
+    feeds a numpy loop on the driver and the result is an Arrow-built
+    local relation. Above it, each iteration is a join-aggregate: the
+    dangling-mass sum rides along as a one-row crossJoin inside the same
+    localCheckpoint that materializes the contribs aggregation (the
+    per-iteration checkpoint keeps the plan shallow, so the agg subtree
+    never compounds). Counted with a job group on a 5-edge input
+    (local[4], AQE on), that is 9 Spark jobs per iteration, since AQE
+    runs every shuffle stage as a job of its own, plus 5 per
+    convergence check and 14 outside the loop. The convergence delta is
+    only checked every ``check_delta_every`` iterations; set
+    ``tolerance=0`` to disable early stopping entirely (fixed iteration
+    count, oracle-exact).
     """
     n1, _, n2 = _edge_cols(edges)
     pairs = edges.select(F.col(n1).alias("src"), F.col(n2).alias("dst"))
+    head = collect_bounded(pairs, driver_threshold)
+    if head is not None:
+        nodes, src, dst = _dense_ids(head["src"], head["dst"])
+        rank = _pagerank_driver(
+            src, dst, len(nodes), damping, max_iterations, tolerance, check_delta_every
+        )
+        return edges.sparkSession.createDataFrame(
+            pa.table({"node": nodes, "vertex_pagerank": rank})
+        )
 
     verts = vertices(edges).localCheckpoint()
     n = verts.count()
-    if n == 0:
-        return verts.withColumn("vertex_pagerank", F.lit(0.0))
-
-    # Gate on the raw edge count (cheap count-pushdown scan) — do NOT
-    # checkpoint the full edge list just to size it.
-    if edges.count() <= driver_threshold:
-        rows = _pagerank_driver(
-            [(r["src"], r["dst"]) for r in pairs.collect()],
-            [r["node"] for r in verts.collect()],
-            damping,
-            max_iterations,
-            tolerance,
-            check_delta_every,
-        )
-        return edges.sparkSession.createDataFrame(
-            rows, "node string, vertex_pagerank double"
-        )
-
     out_deg = pairs.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
     # Pre-join the out-degree once; this frame is reused every iteration.
     links = pairs.join(out_deg, "src").localCheckpoint()
@@ -197,15 +204,10 @@ def pagerank(
     return ranks.withColumnRenamed("rank", "vertex_pagerank")
 
 
-def _hits_driver(pairs: list, nodes: list, max_iterations: int):
-    """numpy twin of the distributed HITS loop (same semantics: auth
-    from hubs, hub from RAW auth, joint L2 normalization per round)."""
-    import numpy as np
-
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    src = np.array([idx[u] for u, _ in pairs], dtype=np.int64)
-    dst = np.array([idx[v] for _, v in pairs], dtype=np.int64)
+def _hits_driver(src: np.ndarray, dst: np.ndarray, n: int, max_iterations: int):
+    """numpy twin of the distributed HITS loop over the dense ids of
+    ``n`` vertices (same semantics: auth from hubs, hub from RAW auth,
+    joint L2 normalization per round) → (hub, auth)."""
     hub = np.ones(n)
     auth = np.ones(n)
     for _ in range(max_iterations):
@@ -217,7 +219,7 @@ def _hits_driver(pairs: list, nodes: list, max_iterations: int):
         an = float(np.sqrt((auth_raw * auth_raw).sum())) or 1.0
         hub = hub_raw / hn
         auth = auth_raw / an
-    return [(v, float(hub[idx[v]]), float(auth[idx[v]])) for v in nodes]
+    return hub, auth
 
 
 def hits(
@@ -228,18 +230,15 @@ def hits(
 ) -> DataFrame:
     """HITS hubs/authorities with L2 normalization per round."""
     n1, _, n2 = _edge_cols(edges)
-    if edges.count() <= driver_threshold:
-        p = edges.select(F.col(n1).alias("src"), F.col(n2).alias("dst")).collect()
-        vs = vertices(edges).collect()
-        rows = _hits_driver(
-            [(r["src"], r["dst"]) for r in p],
-            [r["node"] for r in vs],
-            max_iterations,
-        )
+    pairs = edges.select(F.col(n1).alias("src"), F.col(n2).alias("dst"))
+    head = collect_bounded(pairs, driver_threshold)
+    if head is not None:
+        nodes, src, dst = _dense_ids(head["src"], head["dst"])
+        hub, auth = _hits_driver(src, dst, len(nodes), max_iterations)
         return edges.sparkSession.createDataFrame(
-            rows, "node string, vertex_hubs double, vertex_auth double"
+            pa.table({"node": nodes, "vertex_hubs": hub, "vertex_auth": auth})
         )
-    pairs = edges.select(F.col(n1).alias("src"), F.col(n2).alias("dst")).localCheckpoint()
+    pairs = pairs.localCheckpoint()
     verts = vertices(edges).localCheckpoint()
 
     scores = verts.select("node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
@@ -298,7 +297,6 @@ def graph_statistics(
     edges: DataFrame,
     compute_pagerank: bool = False,
     compute_hits: bool = False,
-    top_n: int = 5,
 ) -> DataFrame:
     """Emit statistic edges in the reference layout
     (kgtk/cli/graph_statistics.py:149-178): one edge per (node, statistic)
@@ -342,17 +340,6 @@ def graph_statistics(
     )
 
 
-def top_relations(edges: DataFrame, n: int = 10) -> DataFrame:
-    """Top-N relation frequencies (kgtk/gt/analysis_utils.py:99-104)."""
-    _, lb, _ = _edge_cols(edges)
-    return (
-        edges.groupBy(F.col(lb).alias("relation"))
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.desc("freq"), "relation")
-        .limit(n)
-    )
-
-
 def degree_summary(edges: DataFrame) -> DataFrame:
     """Mean / stddev / max of in-, out- and total degree — the summary
     block graph-statistics logs (kgtk/gt/analysis_utils.py:27-45,
@@ -391,15 +378,12 @@ def _csr_triangles(u: pa.ChunkedArray, v: pa.ChunkedArray, workers: int) -> int:
     edge. Edges are packed into one int64 (src * n + dst) and sorted, so
     that array is both the CSR (out-neighbours of x are contiguous and
     ascending) and the probe structure (``searchsorted``)."""
-    m = len(u)
-    if m == 0:
+    if len(u) == 0:
         return 0
-    codes = pa.chunked_array(u.chunks + v.chunks).dictionary_encode()
-    n = len(codes.chunks[-1].dictionary)  # the chunks share one dictionary
-    ids = np.concatenate([c.indices.to_numpy() for c in codes.chunks]).astype(np.int64)
-    a, b = ids[:m], ids[m:]
+    nodes, a, b = _dense_ids(u, v)
+    n = len(nodes)
     lo, hi = np.divmod(np.unique(np.minimum(a, b) * n + np.maximum(a, b)), n)
-    del ids, a, b
+    del nodes, a, b
     deg = np.bincount(lo, minlength=n) + np.bincount(hi, minlength=n)
     rank = np.empty(n, np.int64)
     rank[np.argsort(deg, kind="stable")] = np.arange(n)  # any total order is acyclic
@@ -447,8 +431,8 @@ def triangle_count(
     the orientation is acyclic.
 
     Two paths, chosen by one bounded collect: the canonical edge rows
-    (``least``/``greatest``, self-loops dropped, duplicates kept) are
-    collected as Arrow with ``limit(CSR_EDGE_LIMIT + 1)``.
+    (``least``/``greatest``, self-loops dropped, duplicates kept) go
+    through ``collect_bounded`` with ``CSR_EDGE_LIMIT``.
 
     - Up to ``CSR_EDGE_LIMIT`` rows (2M) the collect already holds the
       graph, and ``_csr_triangles`` counts it on the driver with numpy:
@@ -469,12 +453,9 @@ def triangle_count(
         F.least(F.col(node1), F.col(node2)).alias("u"),
         F.greatest(F.col(node1), F.col(node2)).alias("v"),
     ).filter(F.col("u") != F.col("v"))
-    # limit(N + 1) answers "small enough for the driver?" and, when yes,
-    # already delivers the rows (components_auto's take(threshold + 1)).
-    head = raw.limit(CSR_EDGE_LIMIT + 1).toArrow()
+    head = collect_bounded(raw, CSR_EDGE_LIMIT)
     spark = edges.sparkSession
-    if head.num_rows > CSR_EDGE_LIMIT:
-        del head
+    if head is None:
         n = _wedge_triangles(raw, broadcast_edge_limit)
     else:
         n = _csr_triangles(head["u"], head["v"], spark.sparkContext.defaultParallelism)

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kgtk_spark.graph.connected_components import (
+    collect_bounded,
     components_auto,
     release_checkpoint,
     union_find,
@@ -445,7 +446,7 @@ def canonicalize(
 
     Mirrors the reference's sameAs canonicalization
     (kgtk/cskg_utils.py:88-147). The input is checkpointed once, then
-    one bounded collect, ``limit(DRIVER_TRIPLE_LIMIT + 1).toArrow()``,
+    one bounded collect, ``collect_bounded(triples, DRIVER_TRIPLE_LIMIT)``,
     picks the path:
 
     - up to ``DRIVER_TRIPLE_LIMIT`` rows (100k) the collect already
@@ -466,9 +467,8 @@ def canonicalize(
     # Evaluate the input once, whichever path runs: the collect reads this
     # checkpoint, and above the gate so do the sameAs split and the rewrite.
     triples = triples.localCheckpoint()
-    head = triples.limit(DRIVER_TRIPLE_LIMIT + 1).toArrow()
-    if head.num_rows > DRIVER_TRIPLE_LIMIT:
-        del head
+    head = collect_bounded(triples, DRIVER_TRIPLE_LIMIT)
+    if head is None:
         # the returned joins read the checkpoint: it lives as long as they
         # do (Spark's ContextCleaner drops it once they are garbage-collected)
         return _canonicalize_joins(triples, same_as_label, broadcast_threshold, size_hint)

@@ -2214,7 +2214,7 @@ def q_kmv_users(spark, sf_dir):
     "  LATERAL unnest(generate_series(1, len(p))) AS s(i)), "
     "normed AS (SELECT doc_id, pos, para, "
     "  trim(regexp_replace(regexp_replace(regexp_replace(lower(trim(para)), "
-    "  '[0-9]+', '', 'g'), '[[:punct:]]+', '', 'g'), '\s+', ' ', 'g')) AS np "
+    "  '[0-9]+', '', 'g'), '[[:punct:]]+', '', 'g'), '\\s+', ' ', 'g')) AS np "
     "  FROM paras), "
     "hot AS (SELECT np FROM normed GROUP BY np HAVING COUNT(*) >= 2) "
     "SELECT doc_id, string_agg(para, chr(10) ORDER BY pos) AS text "

@@ -16,7 +16,7 @@ from kgtk_spark.graph import (
     reachable_nodes,
 )
 from kgtk_spark.graph.reachable import paths
-from kgtk_spark.graph.stats import hits, top_relations
+from kgtk_spark.graph.stats import hits
 
 
 def edge_df(spark, pairs):
@@ -129,15 +129,6 @@ def test_graph_statistics_layout(spark):
     assert all(r["id"] == f'{r["node1"]}-{r["label"]}-1' for r in out)
 
 
-def test_top_relations(spark):
-    df = spark.createDataFrame(
-        [("a", "P1", "b"), ("c", "P1", "d"), ("e", "P2", "f")],
-        ["node1", "label", "node2"],
-    )
-    out = top_relations(df, 1).collect()
-    assert out[0]["relation"] == "P1" and out[0]["freq"] == 2
-
-
 def test_reachable_nodes(spark):
     df = edge_df(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")])
     out = reachable_nodes(df, ["a", "x"]).collect()
@@ -218,6 +209,29 @@ def test_hits_driver_and_distributed_agree(spark):
     for k in drv:
         assert abs(drv[k][0] - dist[k][0]) < 1e-9
         assert abs(drv[k][1] - dist[k][1]) < 1e-9
+
+
+def test_pagerank_and_hits_driver_count_a_null_endpoint_as_one_vertex(spark):
+    """The driver paths give a null endpoint one vertex of its own, with
+    the values the per-row driver loops gave it."""
+    edges = spark.createDataFrame(
+        [("a", "e", "b"), ("b", "e", None), (None, "e", "a"), ("c", "e", "a"), ("a", "e", "c")],
+        "node1 string, label string, node2 string",
+    )
+    pr = {r["node"]: r["vertex_pagerank"]
+          for r in pagerank(edges, max_iterations=10, tolerance=0.0).collect()}
+    want = {None: 0.20831520589931565, "a": 0.386690500005059,
+            "b": 0.20249714704781263, "c": 0.20249714704781263}
+    assert pr.keys() == want.keys()
+    assert all(abs(pr[k] - want[k]) < 1e-12 for k in want)
+    h = {r["node"]: (r["vertex_hubs"], r["vertex_auth"])
+         for r in hits(edges, max_iterations=8).collect()}
+    want = {None: (0.5773488009175647, 0.0031894235470431398),
+            "a": (0.5773488009175647, 0.8164924280430438),
+            "b": (0.002255268753584237, 0.4082462140215219),
+            "c": (0.5773488009175647, 0.4082462140215219)}
+    assert h.keys() == want.keys()
+    assert all(abs(h[k][i] - want[k][i]) < 1e-12 for k in want for i in (0, 1))
 
 
 def test_components_auto_driver_and_fixpoint_agree(spark):
@@ -419,24 +433,49 @@ def test_triangle_count_random_graph_matches_networkx(spark, monkeypatch, ids):
     assert _triangles(df, monkeypatch) == {"csr": want, "wedge": want}
 
 
-def test_triangle_count_driver_path_starts_two_jobs(spark):
-    """Under the gate, one bounded Arrow collect is the only job before
-    the result's own; nothing is left persisted."""
+@pytest.mark.parametrize(
+    "path",
+    ["pagerank", "hits", "scc_auto", "components_auto", "canonicalize", "triangle_count"],
+)
+def test_driver_paths_run_few_jobs(spark, path):
+    """Under its gate, each driver path is one bounded Arrow collect
+    (behind one checkpoint where the path above the gate re-reads its
+    input) and one JVM-only result: at most 3 Spark jobs through a noop
+    write of the result (2 for triangle_count, whose result is a literal
+    over ``range(1)``), and nothing left persisted."""
+    from kgtk_spark.graph.connected_components import components_auto, scc_auto
     from kgtk_spark.graph.stats import triangle_count
+    from kgtk_spark.pipeline.stages import canonicalize
 
     sc = spark.sparkContext
-    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
-    df = spark.createDataFrame(k4, "node1 long, node2 long")
+    edges = spark.createDataFrame(
+        [("a", "e", "b"), ("b", "e", "c"), ("c", "e", "a"), ("a", "e", "c"), ("d", "e", "a")],
+        "node1 string, label string, node2 string",
+    )
+    pairs = edges.select(F.col("node1").alias("u"), F.col("node2").alias("v"))
+    k4 = spark.createDataFrame(
+        [(a, b) for a in range(4) for b in range(a + 1, 4)], "node1 long, node2 long"
+    )
+    run = {
+        "pagerank": lambda: pagerank(edges),
+        "hits": lambda: hits(edges),
+        "scc_auto": lambda: scc_auto(pairs),
+        "components_auto": lambda: components_auto(pairs),
+        "canonicalize": lambda: canonicalize(edges.union(
+            spark.createDataFrame([("d", "sameAs", "a")], edges.schema))),
+        "triangle_count": lambda: triangle_count(k4),
+    }[path]
     held = lambda: set(sc._jsc.getPersistentRDDs().keys())  # noqa: E731
     before = held()
-    sc.setJobGroup("triangles_csr", "count the jobs triangle_count starts")
+    sc.setJobGroup(path, f"count the jobs {path} starts")
     try:
-        n = triangle_count(df).first()["n_triangles"]
+        run().write.format("noop").mode("overwrite").save()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert n == 4
-    assert len(sc.statusTracker().getJobIdsForGroup("triangles_csr")) <= 2
+    assert len(sc.statusTracker().getJobIdsForGroup(path)) <= (2 if path == "triangle_count" else 3)
     assert held() - before == set()
+    if path == "triangle_count":
+        assert run().first()["n_triangles"] == 4
 
 
 def test_triangle_count_wedge_path_releases_its_checkpoints(spark, monkeypatch):
@@ -456,9 +495,9 @@ def test_triangle_count_wedge_path_releases_its_checkpoints(spark, monkeypatch):
 
 
 def test_driver_component_results_are_jvm_only(spark):
-    """Component assignments solved on the driver come back as a local
-    relation built from Arrow, so an action on them starts no Python
-    worker; empty inputs too."""
+    """Component assignments, PageRank and HITS solved on the driver come
+    back as a local relation built from Arrow, so an action on them
+    starts no Python worker; empty inputs too."""
     from kgtk_spark.graph.connected_components import components_auto, scc_auto
 
     def plan(df):
@@ -473,6 +512,17 @@ def test_driver_component_results_are_jvm_only(spark):
             assert out.schema.simpleString() == "struct<node:string,component:string>"
     assert {tuple(r) for r in scc_auto(pairs).collect()} == {("a", "a"), ("b", "a"), ("c", "c")}
     assert components_auto(none).count() == 0 and scc_auto(none).count() == 0
+
+    edges = pairs.select(F.col("u").alias("node1"), F.col("v").alias("node2"))
+    for solve, schema in (
+        (pagerank, "struct<node:string,vertex_pagerank:double>"),
+        (hits, "struct<node:string,vertex_hubs:double,vertex_auth:double>"),
+    ):
+        for src, n in ((edges, 3), (edges.limit(0), 0)):
+            out = solve(src)
+            assert plan(out) == "LocalRelation", solve.__name__
+            assert out.schema.simpleString() == schema
+            assert out.count() == n
 
 
 def test_components_fixpoint_releases_round_checkpoints(spark):
