@@ -438,6 +438,7 @@ def scc_auto(
                 .where(F.col("color") != F.col("old"))
                 .isEmpty()
             )
+            release_checkpoint(color)
             color = prop
             if changed:
                 break
@@ -464,15 +465,26 @@ def scc_auto(
                 .localCheckpoint()
             )
             if step.isEmpty():
+                release_checkpoint(step)
                 break
-            reached = reached.union(step).localCheckpoint()
+            nxt = reached.union(step).localCheckpoint()
+            release_checkpoint(reached)
+            release_checkpoint(step)
+            reached = nxt
         scc = reached.select("node", F.col("c").alias("component"))
-        assigned = assigned.union(scc).localCheckpoint()
-        live = (
+        new_assigned = assigned.union(scc).localCheckpoint()
+        new_live = (
             live.join(scc.select(F.col("node").alias("u")), "u", "left_anti")
             .join(scc.select(F.col("node").alias("v")), "v", "left_anti")
             .localCheckpoint()
         )
+        # The first round's assigned is a local relation and its live is
+        # pairs, which the result reads: neither is a checkpoint to drop.
+        for df in (color, ec, reached) + ((assigned, live) if rounds > 1 else ()):
+            release_checkpoint(df)
+        assigned, live = new_assigned, new_live
+    if rounds:
+        release_checkpoint(live)
     # anything never peeled that still has edges → finish on the driver
     if head is not None:
         rest = _tarjan(zip(head["u"].to_pylist(), head["v"].to_pylist()))

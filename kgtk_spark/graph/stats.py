@@ -187,6 +187,7 @@ def pagerank(
             )
             .localCheckpoint()
         )
+        delta = None
         if tolerance > 0 and (
             (i + 1) % check_delta_every == 0 or i == max_iterations - 1
         ):
@@ -195,12 +196,15 @@ def pagerank(
                 .agg(F.sum(F.abs(F.col("rank") - F.col("old"))))
                 .collect()[0][0]
             )
-            ranks = new_ranks
-            if delta is not None and delta < tolerance:
-                break
-        else:
-            ranks = new_ranks
+        if i:  # the first ranks is a projection of verts, not a checkpoint
+            release_checkpoint(ranks)
+        ranks = new_ranks
+        if delta is not None and delta < tolerance:
+            break
 
+    # The result reads only its own checkpoint once a round has run.
+    for df in (links, dangling_nodes) + ((verts,) if max_iterations else ()):
+        release_checkpoint(df)
     return ranks.withColumnRenamed("rank", "vertex_pagerank")
 
 
@@ -242,6 +246,7 @@ def hits(
     verts = vertices(edges).localCheckpoint()
 
     scores = verts.select("node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
+    checkpointed = None
     for i in range(max_iterations):
         auth = (
             pairs.join(scores.select(F.col("node").alias("src"), "hub"), "src")
@@ -283,9 +288,15 @@ def hits(
                 / F.when(an.isNull() | (an == 0.0), F.lit(1.0)).otherwise(an)
             ).alias("auth"),
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % checkpoint_every == 0 or i == max_iterations - 1:
             scores = scores.localCheckpoint()
+            if checkpointed is not None:
+                release_checkpoint(checkpointed)  # the new one no longer reads it
+            checkpointed = scores
 
+    # The result reads only its own checkpoint once a round has run.
+    for df in (pairs, verts) if max_iterations else ():
+        release_checkpoint(df)
     return scores.select(
         "node",
         F.col("hub").alias("vertex_hubs"),

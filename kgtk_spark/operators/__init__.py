@@ -27,9 +27,8 @@ from kgtk_spark.operators.columns import (
     reorder_columns,
     kgtk_sort,
     kgtk_head,
-    kgtk_sample,
 )
-from kgtk_spark.operators.clean import kgtk_clean, kgtk_validate
+from kgtk_spark.operators.clean import kgtk_clean
 from kgtk_spark.operators.unreify import unreify_rdf_statements, unreify_values
 from kgtk_spark.operators.validate_properties import (
     PropertyPattern,
@@ -61,9 +60,7 @@ __all__ = [
     "kgtk_calc",
     "kgtk_sort",
     "kgtk_head",
-    "kgtk_sample",
     "kgtk_clean",
-    "kgtk_validate",
     "unreify_rdf_statements",
     "unreify_values",
     "validate_properties",

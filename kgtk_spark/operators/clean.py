@@ -25,22 +25,6 @@ def _valid_predicate(df: DataFrame, columns: list[str] | None):
     return reduce(lambda a, b: a & b, tests)
 
 
-def kgtk_validate(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Report mode: per-column invalid-cell counts (no row output).
-
-    Returns a one-row DataFrame of counts — the reference prints a
-    report (kgtk/cli/validate.py); we return it as data.
-    """
-    cols = columns or df.columns
-    aggs = [
-        F.sum(
-            F.when(~is_valid_udf(F.coalesce(F.col(c), F.lit(""))), 1).otherwise(0)
-        ).alias(f"invalid_{c}")
-        for c in cols
-    ]
-    return df.agg(*aggs)
-
-
 def kgtk_clean(
     df: DataFrame, columns: list[str] | None = None
 ) -> tuple[DataFrame, DataFrame]:

@@ -135,10 +135,6 @@ def kgtk_head(df: DataFrame, n: int) -> DataFrame:
     return df.limit(n)
 
 
-def kgtk_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    return df.sample(fraction=fraction, seed=seed)
-
-
 def kgtk_every_nth(
     df: DataFrame, n: int, order_by: list[str] | None = None
 ) -> DataFrame:

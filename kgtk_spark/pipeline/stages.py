@@ -176,7 +176,7 @@ def detect_mentions_distributed(
     """Mention detection for dictionaries too big to broadcast.
 
     Semantics-identical twin of the token matcher
-    (aho.TokenDictMatcher): token-boundary matches, longest match
+    (matcher.TokenDictMatcher): token-boundary matches, longest match
     first, non-overlapping. The dictionary stays a DataFrame:
 
     1. the distinct alias token-LENGTHS are collected (a handful of

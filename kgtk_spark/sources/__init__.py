@@ -13,10 +13,7 @@ projection + format-string stages.
 from kgtk_spark.sources.ntriples import export_ntriples, import_ntriples
 from kgtk_spark.sources.wikidata import import_wikidata_jsonl
 from kgtk_spark.sources.exports import export_cypher, to_markdown
-from kgtk_spark.sources.wikidata_rdf import (
-    generate_wikidata_triples,
-    serialize_prefixes,
-)
+from kgtk_spark.sources.wikidata_rdf import generate_wikidata_triples
 from kgtk_spark.sources.cskg import (
     CSKG_COLUMNS,
     import_atomic,
@@ -45,5 +42,4 @@ __all__ = [
     "read_conceptnet_csv",
     "read_visualgenome_scene_graphs",
     "generate_wikidata_triples",
-    "serialize_prefixes",
 ]

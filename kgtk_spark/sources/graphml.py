@@ -79,20 +79,3 @@ def export_graphml(
                     fp.write(f'<data key="ed{_esc(a)}">{_esc(str(v))}</data>')
             fp.write("</edge>\n")
         fp.write("</graph>\n</graphml>\n")
-
-
-def read_graphml_edges(path: str) -> list[tuple[str, str, str]]:
-    """Parse a GraphML file back to (node1, predicate, node2) tuples —
-    the roundtrip verifier for :func:`export_graphml`."""
-    import xml.etree.ElementTree as ET
-
-    ns = {"g": "http://graphml.graphdrawing.org/xmlns"}
-    root = ET.parse(path).getroot()
-    out = []
-    for e in root.findall(".//g:edge", ns):
-        pred = ""
-        for d in e.findall("g:data", ns):
-            if d.get("key") == "edpredicate":
-                pred = d.text or ""
-        out.append((e.get("source"), pred, e.get("target")))
-    return out

@@ -33,9 +33,6 @@ _UNESCAPES = [
     ("\x00", "\\"),
 ]
 
-TSV_FORMATS = ("kgtk", "tsv", "tsv-unquoted", "tsv-unquoted-ep", "tsv-csvlike", "csv")
-
-
 def _unstringify(c: Column, unescape_pipe: bool = True) -> Column:
     body = F.when(
         c.startswith('"'),

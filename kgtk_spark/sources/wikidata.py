@@ -1,4 +1,4 @@
-"""Wikidata JSON dump → KGTK node/edge/qualifier files.
+"""Wikidata JSON dump → KGTK node and edge files.
 
 Reference: kgtk/cli/import_wikidata.py (1284 LoC) — a pyrallel process
 pool over dump chunks writing numbered fragments. Spark replaces the
@@ -201,36 +201,3 @@ def import_wikidata_jsonl(
         .withColumn("id", F.concat_ws("-", "node1", "label", "node2"))
     )
     return nodes, edges.select("id", "node1", "label", "node2")
-
-
-def wikidata_qualifier_edges(spark: SparkSession, path_or_df: str | DataFrame) -> DataFrame:
-    """Qualifier file: (id=edge_id-qprop, node1=edge_id, label=qprop, node2=value)
-    — the reference's third output (import_wikidata qualifier file)."""
-    raw = (
-        spark.read.schema(WIKIDATA_SCHEMA).json(path_or_df)
-        if isinstance(path_or_df, str)
-        else path_or_df
-    )
-    exploded = raw.select(
-        F.col("id").alias("entity"),
-        F.explode(F.map_values(F.col("claims"))).alias("claim_group"),
-    ).select("entity", F.explode("claim_group").alias("claim"))
-    snak = F.col("claim")["mainsnak"]
-    with_edge_id = exploded.filter(snak["snaktype"] == "value").select(
-        F.concat_ws(
-            "-", "entity", snak["property"], _value_to_kgtk(snak["datavalue"])
-        ).alias("edge_id"),
-        F.col("claim")["qualifiers"].alias("quals"),
-    )
-    qsnaks = (
-        with_edge_id.filter(F.col("quals").isNotNull())
-        .select("edge_id", F.explode(F.map_values("quals")).alias("qgroup"))
-        .select("edge_id", F.explode("qgroup").alias("q"))
-        .filter(F.col("q")["snaktype"] == "value")
-    )
-    return qsnaks.select(
-        F.concat_ws("-", "edge_id", F.col("q")["property"]).alias("id"),
-        F.col("edge_id").alias("node1"),
-        F.col("q")["property"].alias("label"),
-        _value_to_kgtk(F.col("q")["datavalue"]).alias("node2"),
-    )

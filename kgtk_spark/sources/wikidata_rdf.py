@@ -35,22 +35,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-WIKIDATA_PREFIXES = {
-    "wd": "http://www.wikidata.org/entity/",
-    "wds": "http://www.wikidata.org/entity/statement/",
-    "wdt": "http://www.wikidata.org/prop/direct/",
-    "p": "http://www.wikidata.org/prop/",
-    "ps": "http://www.wikidata.org/prop/statement/",
-    "pq": "http://www.wikidata.org/prop/qualifier/",
-    "wikibase": "http://wikiba.se/ontology#",
-    "rdf": "http://www.w3.org/1999/02/22-rdf-syntax-ns#",
-    "rdfs": "http://www.w3.org/2000/01/rdf-schema#",
-    "schema": "http://schema.org/",
-    "skos": "http://www.w3.org/2004/02/skos/core#",
-    "xsd": "http://www.w3.org/2001/XMLSchema#",
-    "geo": "http://www.opengis.net/ont/geosparql#",
-}
-
 # generator.py:26-27 BAD_CHARS → '_' (one JVM translate call).
 _BAD_CHARS = ":&, ()'\"/\\[];|"
 
@@ -392,43 +376,3 @@ def generate_wikidata_triples(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.distinct()
-
-
-def serialize_prefixes() -> str:
-    """Turtle prefix header (generator.py:serialize_prefix)."""
-    return (
-        "\n".join(
-            f"@prefix {k}: <{v}> ." for k, v in WIKIDATA_PREFIXES.items()
-        )
-        + "\n"
-    )
-
-
-def triples_to_turtle_lines(triples: DataFrame) -> DataFrame:
-    """(subject, predicate, object) → one N-Triples-style Turtle line
-    per row (column ``line``), prefixed-name terms kept compact.
-
-    Line-oriented, so the write distributes (``df.write.text``); prepend
-    :func:`serialize_prefixes` for a complete Turtle document. Terms
-    arriving from :func:`generate_wikidata_triples` are already valid
-    Turtle tokens (CURIEs, typed/tagged literals, <IRI>s)."""
-    return triples.select(
-        F.concat_ws(" ", "subject", "predicate", "object", F.lit(".")).alias("line")
-    )
-
-
-def write_turtle(triples: DataFrame, path: str, single_file: bool = False) -> None:
-    """Write a Turtle file: prefix header + one triple per line.
-
-    The header rides as a tiny DataFrame unioned in front; with
-    ``single_file`` the whole output coalesces to one part (the
-    reference writes one stream; at scale keep it partitioned and cat
-    the prefix file in front)."""
-    spark = triples.sparkSession
-    header = spark.createDataFrame(
-        [(l,) for l in serialize_prefixes().splitlines()], "line string"
-    )
-    out = header.unionByName(triples_to_turtle_lines(triples))
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").text(path)

@@ -28,14 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("checksum", T.StringType()),
-    ]
-)
-
 
 def attach_binary_payload(
     df: DataFrame, source_col: str = "text", media_type: str = "image/fake"
@@ -69,8 +61,7 @@ def decode_image_bytes(b: bytes) -> np.ndarray:
     PPM/PGM, and JPEG (full T.81 huffman decode, baseline sequential
     AND progressive — ``_decode_jpeg``). Returns a (H, W) float64
     GRAYSCALE array (ITU-R 601 luma for color inputs). Raises
-    ValueError on anything else (WebP/video need codec libs this
-    container lacks — see ``_decode_real``)."""
+    ValueError on anything else (WebP/video need codec libraries)."""
     if b[:8] == b"\x89PNG\r\n\x1a\n":
         return _decode_png(b)
     if b[:2] == b"BM":
@@ -820,22 +811,6 @@ def encode_gray_jpeg(img: np.ndarray, quant: np.ndarray | None = None) -> bytes:
     return bytes(out + wtr.out + b"\xff\xd9")
 
 
-def _decode_real(payload: bytes):
-    """Decoder hook: REAL for PNG/BMP/PPM/PGM/baseline-JPEG
-    (decode_image_bytes); formats needing codec libraries
-    (WebP/video) are not decodable in this
-    container."""
-    try:
-        return decode_image_bytes(payload)
-    except ValueError as e:
-        raise NotImplementedError(
-            "media decode for this format requires codec libraries "
-            "(PIL/av) not present in this environment; "
-            "extract_features_stub uses deterministic byte-level "
-            f"features instead ({e})"
-        ) from e
-
-
 def extract_features_stub(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload", bins: int = 16
 ) -> DataFrame:
@@ -1082,7 +1057,7 @@ def resize_image_stub(
     """Thumbnail pipeline with a STUBBED decode and a REAL resize.
 
     Decode is faked (payload bytes reshaped into a square grayscale
-    image — PIL is not in this container; `_decode_real` raises), but
+    image, as no image library is a dependency), but
     the downsample that follows is the genuine vectorized block-mean a
     real thumbnailer runs, and the schema/batching are production
     shape. Output: row-major ``out_h × out_w`` mean intensities."""

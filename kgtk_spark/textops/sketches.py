@@ -1,4 +1,4 @@
-"""Mergeable sketches for approximate distinct counting.
+"""KMV sketches for approximate distinct counting.
 
 KMV (K-minimum-values, Bar-Yossef et al. 2002): hash every value into
 [0, 2^60), keep the k smallest distinct hashes per group; with U_k the
@@ -6,15 +6,10 @@ k-th smallest normalized to [0,1), the distinct-count estimate is
 (k-1)/U_k — relative error ≈ 1/√k. Groups with fewer than k distinct
 hashes are EXACT (the sketch holds them all).
 
-Two properties make this the sketch to ship here:
-
-- it is DETERMINISTIC given the hash function — and the hash is the
-  same md5-60bit construction the SimHash oracle uses, so the whole
-  estimator (not just its error bound) is reproducible in ANSI
-  SQL/DuckDB and sits under the value-hash correctness gate;
-- the sketch is a sorted array of ≤ k longs: mergeable (union + keep
-  k smallest), so partial sketches from different partitions/days
-  compose without touching raw data again.
+The sketch is DETERMINISTIC given the hash function — and the hash is
+the same md5-60bit construction the SimHash oracle uses, so the whole
+estimator (not just its error bound) is reproducible in ANSI SQL/DuckDB
+and sits under the value-hash correctness gate.
 
 Memory is bounded: the per-group top-k runs as a window rank over
 distinct (group, hash) rows — never a collect_set of the whole group.
@@ -65,20 +60,6 @@ def kmv_distinct(
         (k - 1) * _SPACE / kth
     )
     return s.select(*group_cols, F.round(est, 6).alias("distinct_estimate"))
-
-
-def kmv_merge(sketches: DataFrame, group_cols: list[str], k: int = 64) -> DataFrame:
-    """Merge partial sketches (e.g. per-day) into coarser groups:
-    union the hash sets, keep the k smallest."""
-    exploded = sketches.select(*group_cols, F.explode("sketch").alias("__h__")).distinct()
-    w = Window.partitionBy(*group_cols).orderBy("__h__")
-    topk = exploded.withColumn("__rk__", F.row_number().over(w)).filter(
-        F.col("__rk__") <= k
-    )
-    return topk.groupBy(*group_cols).agg(
-        F.sort_array(F.collect_list("__h__")).alias("sketch"),
-        F.count(F.lit(1)).alias("n_seen"),
-    )
 
 
 def stable_sample(

@@ -80,12 +80,6 @@ TRUE_SYMBOL = "True"
 FALSE_SYMBOL = "False"
 LIST_SEP_RE = re.compile(r"(?<!\\)\|")
 
-DATA_TYPES = [
-    "empty", "list", "number", "quantity", "string",
-    "language_qualified_string", "location_coordinates", "date_and_times",
-    "extension", "boolean", "symbol",
-]
-
 # Field catalog (kgtk/value/kgtkvalue.py:127-187) — the struct returned by
 # parse_fields and consumed by explode/implode.
 FIELD_NAMES = [
@@ -327,22 +321,6 @@ def is_valid(value: str) -> bool:
 # pandas UDFs (Arrow-batched; memoized per batch — KG values repeat heavily)
 # ---------------------------------------------------------------------------
 
-@F.pandas_udf(T.StringType())
-def classify_udf(s: pd.Series) -> pd.Series:
-    memo: dict[str, str] = {}
-
-    def one(v):
-        if v is None:
-            return "empty"
-        r = memo.get(v)
-        if r is None:
-            r = classify(v)
-            memo[v] = r
-        return r
-
-    return s.map(one)
-
-
 @F.pandas_udf(T.BooleanType())
 def is_valid_udf(s: pd.Series) -> pd.Series:
     memo: dict[str, bool] = {}
@@ -373,11 +351,6 @@ def parse_fields_udf(s: pd.Series) -> pd.DataFrame:
         return r
 
     return pd.DataFrame([one(v) for v in s], columns=FIELD_NAMES)
-
-
-@F.pandas_udf(T.StringType())
-def stringify_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: stringify(v) if v is not None else None)
 
 
 @F.pandas_udf(T.StringType())

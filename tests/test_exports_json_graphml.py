@@ -9,9 +9,26 @@ import pytest
 
 from kgtk_spark.languages import validate_lang
 from kgtk_spark.operators.columns import reorder_columns
-from kgtk_spark.sources.graphml import export_graphml, read_graphml_edges
+from kgtk_spark.sources.graphml import export_graphml
 from kgtk_spark.sources.wikidata_json import generate_wikidata_json
 from tests.conftest import requires_reference
+
+
+def read_graphml_edges(path: str) -> list[tuple[str, str, str]]:
+    """Parse a GraphML file back to (node1, predicate, node2) tuples —
+    the roundtrip verifier for :func:`export_graphml`."""
+    import xml.etree.ElementTree as ET
+
+    ns = {"g": "http://graphml.graphdrawing.org/xmlns"}
+    root = ET.parse(path).getroot()
+    out = []
+    for e in root.findall(".//g:edge", ns):
+        pred = ""
+        for d in e.findall("g:data", ns):
+            if d.get("key") == "edpredicate":
+                pred = d.text or ""
+        out.append((e.get("source"), pred, e.get("target")))
+    return out
 
 
 def test_graphml_roundtrip(spark, tmp_path_factory):

@@ -539,3 +539,27 @@ def test_components_fixpoint_releases_round_checkpoints(spark):
     assert len(held() - before) <= 1  # only the final round's checkpoint
     comp = {r["node"]: r["component"] for r in out.collect()}
     assert len(comp) == n and set(comp.values()) == {"n000"}
+
+
+def test_graph_loops_release_superseded_checkpoints(spark):
+    """Above the driver gate, pagerank, hits and scc_auto release every
+    checkpoint their result no longer reads. After a noop write of the
+    result (which reads it back), pagerank and hits hold only the
+    result's own checkpoint, and scc_auto its distinct edges and its
+    last assignment."""
+    from kgtk_spark.graph.connected_components import scc_auto
+
+    edges = spark.createDataFrame(
+        [("a", "e", "b"), ("b", "e", "c"), ("c", "e", "a"), ("a", "e", "c"), ("d", "e", "a")],
+        "node1 string, label string, node2 string",
+    )
+    pairs = edges.select(F.col("node1").alias("u"), F.col("node2").alias("v"))
+    held = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: E731
+    for name, run, most in (
+        ("pagerank", lambda: pagerank(edges, max_iterations=3, driver_threshold=0), 1),
+        ("hits", lambda: hits(edges, max_iterations=3, checkpoint_every=1, driver_threshold=0), 1),
+        ("scc_auto", lambda: scc_auto(pairs, driver_threshold=0), 2),
+    ):
+        before = held()
+        run().write.format("noop").mode("overwrite").save()
+        assert len(held() - before) <= most, name

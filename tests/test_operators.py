@@ -4,7 +4,8 @@ test_cat.py, test_normalize_nodes.py) on the reference's own fixtures.
 
 The golden-count tests skip where the reference fixtures are absent. The
 bad-pattern check does not depend on the data: it runs on a one-row
-in-memory edge frame when the reference sample is absent."""
+in-memory edge frame when the reference sample is absent. The RDF unreify
+operator and the zip_with_index row numbering run on in-memory frames."""
 
 from __future__ import annotations
 
@@ -37,6 +38,8 @@ from kgtk_spark.operators import (
     rename_columns,
     reorder_columns,
 )
+from kgtk_spark.indexing import zip_with_index
+from kgtk_spark.operators.unreify import unreify_rdf_statements
 from kgtk_spark.schema import read_kgtk_tsv
 from tests.conftest import REF_DATA, requires_reference
 
@@ -317,3 +320,34 @@ def test_sort_and_head(sample_edges):
     first = sample_edges.agg(F.min("node1")).collect()[0][0]
     assert out["node1"] == first
     assert kgtk_head(sample_edges, 5).count() == 5
+
+
+def test_unreify_rdf_statements(spark):
+    edges = spark.createDataFrame(
+        [
+            ("St1", "rdf:type", "rdf:Statement"),
+            ("St1", "rdf:subject", "Q1"),
+            ("St1", "rdf:predicate", "P31"),
+            ("St1", "rdf:object", "Q5"),
+            ("St1", "P585", "^2020"),          # qualifier on the statement
+            ("Q7", "P31", "Q5"),               # untouched direct edge
+        ],
+        ["node1", "label", "node2"],
+    )
+    out = unreify_rdf_statements(edges).collect()
+    rows = {(r["node1"], r["label"], r["node2"]) for r in out}
+    assert ("Q1", "P31", "Q5") in rows            # collapsed direct edge
+    assert ("Q1-P31-Q5", "P585", "^2020") in rows  # qualifier re-anchored
+    assert ("Q7", "P31", "Q5") in rows             # passthrough
+    assert not any(r["node1"] == "St1" for r in out)  # reification gone
+    assert len(rows) == 3
+
+
+def test_zip_with_index_is_contiguous(spark):
+    df = spark.range(0, 1000).repartition(7)
+    out = zip_with_index(df, "idx")
+    idxs = sorted(r["idx"] for r in out.collect())
+    assert idxs == list(range(1000))
+    # order within a partition is preserved
+    rows = out.collect()
+    assert len({r["idx"] for r in rows}) == 1000

@@ -1,5 +1,5 @@
-"""Byte-parity TSV roundtrip, SQL function surface, skew spreading,
-Iceberg fallback, every-nth sampling."""
+"""Byte-parity TSV roundtrip, skew spreading, Iceberg fallback,
+every-nth sampling."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
-from kgtk_spark.functions import register_functions
 from kgtk_spark.operators.columns import kgtk_every_nth
 from kgtk_spark.schema import read_kgtk_tsv, write_kgtk_tsv
 from kgtk_spark.sources.iceberg import iceberg_available, read_table, write_table
@@ -30,19 +29,6 @@ def test_tsv_roundtrip_byte_parity(spark, sample_edges, tmp_path):
 
     assert got_lines[0] == orig_lines[0]  # header
     assert sorted(got_lines[1:]) == sorted(orig_lines[1:])  # data bytes
-
-
-def test_sql_function_surface(spark):
-    register_functions(spark)
-    row = spark.sql(
-        "SELECT kgtk_data_type('10[9,11]m') AS dt, kgtk_valid('!x') AS v, "
-        "kgtk_fields('^1999-01-02').year AS y, "
-        "kgtk_unstringify(kgtk_stringify('a|b')) AS rt"
-    ).collect()[0]
-    assert row["dt"] == "quantity"
-    assert row["v"] is False
-    assert row["y"] == 1999
-    assert row["rt"] == "a|b"
 
 
 def test_salted_join_spreads_hot_key(spark):

@@ -1,7 +1,6 @@
 """Broad ingest robustness over the reference repo's own test data:
 every KGTK TSV in kgtk/tests/data must read cleanly (line counts match,
-values classify), and the corrupted fixture must route rows to the
-reject channel rather than fail."""
+values classify)."""
 
 from __future__ import annotations
 
@@ -11,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from kgtk_spark.schema import read_kgtk_tsv, read_kgtk_tsv_repair
+from kgtk_spark.schema import read_kgtk_tsv
 from tests.conftest import REF_DATA, requires_reference
 
 # Plain KGTK TSVs (tab-separated, header, rectangular).
@@ -75,17 +74,6 @@ def test_reference_values_classify(spark):
         (F.col("f.data_type") == "language_qualified_string") & ~F.col("f.valid")
     ).count()
     assert bad_lang == 0
-
-
-def test_corrupted_fixture_routes_to_reject(spark):
-    path = os.path.join(REF_DATA, "corrupted_kgtk.tsv")
-    if not os.path.exists(path):
-        pytest.skip("corrupted fixture absent")
-    good, rejects = read_kgtk_tsv_repair(spark, path)
-    # reading must not throw; every input line is either parsed or rejected
-    with open(path, encoding="utf-8") as fp:
-        n_data = len(fp.read().splitlines()) - 1
-    assert good.count() + rejects.count() == n_data
 
 
 @requires_reference("sample_kgtk_edge_file_no_id.tsv", "sample_kgtk_edge_file_with_id.tsv")

@@ -123,40 +123,3 @@ def test_to_markdown(spark):
     md = to_markdown(df)
     assert md.splitlines()[0] == "| c1 | c2 |"
     assert "| x | 1 |" in md
-
-
-def test_wikidata_qualifiers(spark, tmp_path_factory):
-    from kgtk_spark.sources.wikidata import wikidata_qualifier_edges
-
-    entity = dict(WD_ENTITY)
-    entity["claims"] = {
-        "P26": [
-            {
-                "mainsnak": {
-                    "snaktype": "value",
-                    "property": "P26",
-                    "datavalue": {"type": "wikibase-entityid", "value": {"id": "Q14623681"}},
-                },
-                "qualifiers": {
-                    "P580": [
-                        {
-                            "snaktype": "value",
-                            "property": "P580",
-                            "datavalue": {
-                                "type": "time",
-                                "value": {"time": "+1991-11-25T00:00:00Z", "precision": 11},
-                            },
-                        }
-                    ]
-                },
-            }
-        ]
-    }
-    p = tmp_path_factory.mktemp("wdq") / "dump.jsonl"
-    p.write_text(json.dumps(entity) + "\n")
-    quals = wikidata_qualifier_edges(spark, str(p)).collect()
-    assert len(quals) == 1
-    q = quals[0]
-    assert q["node1"] == "Q42-P26-Q14623681"
-    assert q["label"] == "P580"
-    assert q["node2"] == "^1991-11-25T00:00:00Z/11"

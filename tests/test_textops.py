@@ -337,10 +337,10 @@ def test_multimodal_stub(docs):
 
 
 def test_decode_stub_raises():
-    from kgtk_spark.textops.multimodal import _decode_real
+    from kgtk_spark.textops.multimodal import decode_image_bytes
 
-    with pytest.raises(NotImplementedError):
-        _decode_real(b"x")
+    with pytest.raises(ValueError):
+        decode_image_bytes(b"x")
 
 
 def test_ivf_topk_overlaps_exact(spark, emb):

@@ -119,17 +119,16 @@ def test_is_valid():
 def test_udfs(spark):
     from pyspark.sql import functions as F
 
-    from kgtk_spark.values import classify_udf, is_valid_udf, parse_fields_udf
+    from kgtk_spark.values import is_valid_udf, parse_fields_udf
 
     df = spark.createDataFrame(
         [("Q42",), ('"s"',), ("10[9,11]m",), ("^1980",), ("",)], ["v"]
     )
     rows = df.select(
-        classify_udf("v").alias("dt"),
         is_valid_udf("v").alias("ok"),
         parse_fields_udf("v").alias("f"),
     ).collect()
-    assert [r["dt"] for r in rows] == [
+    assert [r["f"]["data_type"] for r in rows] == [
         "symbol",
         "string",
         "quantity",

@@ -4,10 +4,7 @@ kgtk/tests/data/P10_truthy.ttl and dates_truthy.ttl)."""
 
 from __future__ import annotations
 
-from kgtk_spark.sources.wikidata_rdf import (
-    generate_wikidata_triples,
-    serialize_prefixes,
-)
+from kgtk_spark.sources.wikidata_rdf import generate_wikidata_triples
 from tests.conftest import requires_reference
 
 
@@ -128,12 +125,6 @@ def test_bad_chars_replaced_in_ids(spark):
     got = _triples(spark, [("Q1", "P1629", "Q2:b c", "id (1)")])
     assert ("wd:Q1", "wdt:P1629", "wd:Q2_b_c") in got
     assert ("wd:Q1", "p:P1629", "wds:Q1-id__1_") in got
-
-
-def test_prefix_header():
-    hdr = serialize_prefixes()
-    assert "@prefix wd: <http://www.wikidata.org/entity/> ." in hdr
-    assert "@prefix wikibase: <http://wikiba.se/ontology#> ." in hdr
 
 
 def _parse_golden_ttl(path):
@@ -262,24 +253,3 @@ def test_rdf_generator_matches_golden_ttl_q57160439(spark):
     m = fam(mine, prefixes=("p:", "wdt:", "ps:"))
     g = fam(golden, prefixes=("p:", "wdt:", "ps:"))
     assert m == g, sorted(m ^ g)[:8]
-
-
-def test_write_turtle_roundtrip(spark, tmp_path_factory):
-    """Turtle writer output parses back (via the same scoped reader the
-    golden tests use) to exactly the generated triple set."""
-    import glob
-    import os
-
-    edges = spark.createDataFrame(
-        [("Q1", "P1629", "Q2", "Q1-P1629-1"), ("Q1", "label", "'one'@en", "Q1-l-1")],
-        "node1 string, label string, node2 string, id string",
-    )
-    from kgtk_spark.sources.wikidata_rdf import generate_wikidata_triples, write_turtle
-
-    triples = generate_wikidata_triples(edges, _props(spark))
-    path = str(tmp_path_factory.mktemp("ttl") / "out.ttl")
-    write_turtle(triples, path, single_file=True)
-    part = glob.glob(os.path.join(path, "part-*"))[0]
-    parsed = _parse_golden_ttl(part)
-    expected = {(r["subject"], r["predicate"], r["object"]) for r in triples.collect()}
-    assert parsed == expected
