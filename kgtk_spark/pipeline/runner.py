@@ -9,7 +9,9 @@ The sink, where each stage's output goes, follows from the arguments:
 - memory (no ``out_dir``): nothing is written. ``triples`` reads the raw
   pages (extract_triples fills text from html in its own Python pass),
   so ``text`` and the provenance stages ``mentions`` and ``linked`` are
-  not run. ``run_pipeline_fused`` is this sink.
+  not run. Nothing reads a triple's url here, so the Python pass emits
+  each Arrow batch's distinct (node1, label, node2) and no url.
+  ``run_pipeline_fused`` is this sink.
 - table (``out_dir`` and ``table_namespace``): each stage is a catalog
   table ``<namespace>.<stage>``; Iceberg ``writeTo`` commits when the
   catalog is configured, session-catalog tables otherwise.
@@ -204,8 +206,11 @@ def run_pipeline(
         "text": lambda: S.extract_text(pages),
         "mentions": lambda: S.detect_mentions(out["text"], alias_dict, alias_count=alias_count),
         "linked": lambda: S.link_entities(out["mentions"], alias_dict, alias_count=alias_count),
+        # only a writing sink keeps each triple's url; in memory the
+        # Python pass emits each batch's distinct triples
         "triples": lambda: S.extract_triples(
-            out.get("text", pages), alias_dict, alias_count=alias_count
+            out.get("text", pages), alias_dict, alias_count=alias_count,
+            with_url=out_dir is not None,
         ),
         # Dedup BEFORE the rewrite: canonicalize's per-row rewrite
         # commutes with dropDuplicates on (node1, label, node2), and

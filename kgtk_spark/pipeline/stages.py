@@ -13,7 +13,10 @@ Scale notes (the whole point):
 - triple extraction over a broadcast dictionary is ONE pass per page
   with no shuffle and no join: each sentence's subject and object
   surfaces resolve through a broadcast dict of the best sense per
-  alias, in the same Python pass that matches the sentence;
+  alias (argmax on the driver over one Arrow collect of the
+  dictionary), in the same Python pass that matches the sentence;
+  without provenance (the memory sink) the pass emits only each
+  batch's distinct (node1, label, node2), no url;
 - canonicalization collects a KG of up to DRIVER_TRIPLE_LIMIT (100k)
   rows in one bounded Arrow collect and resolves it on the driver
   (union-find over the sameAs pairs, Arrow rewrite of both endpoints),
@@ -120,10 +123,11 @@ def detect_mentions(
 ) -> DataFrame:
     """(url, begin, end, surface) for every dictionary hit in ``text``.
 
-    Dictionaries up to ``broadcast_threshold`` rows are collected once
-    on the driver and broadcast; each executor builds the word-level
-    matcher (matcher.TokenDictMatcher) once (cached) and streams Arrow
-    batches through it — one hash probe per token. ABOVE the threshold
+    Dictionaries up to ``broadcast_threshold`` rows have their distinct
+    aliases collected once on the driver (one Arrow collect) and
+    broadcast; each executor builds the word-level matcher
+    (matcher.TokenDictMatcher) once (cached) and streams Arrow batches
+    through it — one hash probe per token. ABOVE the threshold
     the dictionary never touches the driver:
     detect_mentions_distributed runs a salted candidate equi-join
     instead (pass ``alias_count`` to skip the size probe when the
@@ -131,11 +135,9 @@ def detect_mentions(
     """
     if _alias_count(alias_dict, alias_count) > broadcast_threshold:
         return detect_mentions_distributed(pages, alias_dict)
-    spark = pages.sparkSession
-    aliases = tuple(
-        r["alias"] for r in alias_dict.select("alias").distinct().collect()
-    )
-    bc = spark.sparkContext.broadcast(aliases)
+    # one Arrow collect; the matcher does not depend on the alias order
+    aliases = tuple(pc.unique(alias_dict.select("alias").toArrow()["alias"]).to_pylist())
+    bc = pages.sparkSession.sparkContext.broadcast(aliases)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -341,34 +343,71 @@ def raw_triples(pages: DataFrame) -> DataFrame:
     return pages.select("url", "text").mapInPandas(run, schema=TRIPLE_SCHEMA)
 
 
+def _best_sense(alias_dict: DataFrame) -> dict:
+    """best_alias_map's surface → entity as a driver dict, from ONE Arrow
+    collect of the dictionary. The argmax is an Arrow sort under
+    best_alias_map's rule, ``min_by(entity, struct(-prior, entity))``, in
+    Spark's order: a null field sorts first and NaN above every number
+    (hence the ``nan`` key). A null surface is dropped: it never equals a
+    regex group."""
+    rank = -F.col("prior")
+    t = (
+        alias_dict.where(F.col("alias").isNotNull())
+        .select("alias", "entity", F.isnan(rank).alias("nan"), rank.alias("rank"))
+        .toArrow()
+    )
+    t = t.take(pc.sort_indices(
+        t, [("nan", "ascending"), ("rank", "ascending"), ("entity", "ascending")],
+        null_placement="at_start",
+    ))
+    # a later key overwrites an earlier one: walk backwards, so each
+    # alias keeps its first (minimal) row
+    return dict(zip(reversed(t["alias"].to_pylist()), reversed(t["entity"].to_pylist())))
+
+
+def _resolve(text: str | None, entity_of: dict) -> Iterator[tuple[str, str, str]]:
+    """(node1, label, node2) per SVO line of ``text`` whose subject and
+    object are both aliases — the inner join's rule."""
+    if text:
+        for subj, pred, obj in _svo(text):
+            if subj in entity_of and obj in entity_of:
+                yield entity_of[subj], pred, entity_of[obj]
+
+
 def extract_triples(
     pages: DataFrame,
     alias_dict: DataFrame,
     broadcast_threshold: int = ALIAS_BROADCAST_THRESHOLD,
     alias_count: int | None = None,
+    with_url: bool = True,
 ) -> DataFrame:
     """(url, node1, label, node2) per SVO sentence whose subject and
-    object both resolve to an entity.
+    object both resolve to an entity. With ``with_url=False``, what the
+    memory sink keeps: only (node1, label, node2), and the broadcast
+    pass matches each Arrow batch's distinct lines once and emits the
+    batch's distinct triples, a fraction of the rows leaving Python.
 
     ``pages`` may still carry ``html``: null ``text`` is then filled
     from it first (extract_text's rule), in the same Python pass — a
     chained extract_text would start a second Python worker per task.
 
     Broadcastable dictionaries take ONE mapInPandas pass per page (no
-    join, no shuffle): each Python worker holds the best-sense map
-    (best_alias_map, collected once, bounded by ``broadcast_threshold``)
-    as a dict, and each sentence's subject and object surfaces are
-    looked up in it — the inner join's rule, so a sentence whose
-    subject or object is not an alias is dropped. Above
+    join, no shuffle): each Python worker holds the best-sense map as a
+    dict, built on the driver from one Arrow collect of the dictionary
+    (_best_sense, best_alias_map's rule, bounded by
+    ``broadcast_threshold``), and each sentence's subject and object
+    surfaces are looked up in it — the inner join's rule, so a sentence
+    whose subject or object is not an alias is dropped. Above
     ``broadcast_threshold`` dictionary rows the regex triples
     (raw_triples) resolve their surfaces with two salted shuffle joins
-    against the best-sense map instead.
+    against best_alias_map instead.
     """
-    best = best_alias_map(alias_dict)
     has_html = "html" in pages.columns
+    cols = ["url", "node1", "label", "node2"] if with_url else ["node1", "label", "node2"]
     if _alias_count(alias_dict, alias_count) > broadcast_threshold:
         from kgtk_spark.textops.skew import salted_join
 
+        best = best_alias_map(alias_dict)
         s = best.select(F.col("surface").alias("subj_surface"), F.col("entity").alias("subj"))
         o = best.select(F.col("surface").alias("obj_surface"), F.col("entity").alias("obj"))
         if has_html:
@@ -379,31 +418,27 @@ def extract_triples(
             F.col("subj").alias("node1"),
             F.col("pred").alias("label"),
             F.col("obj").alias("node2"),
-        )
-    # a null surface never equals a regex group, so dropping it is exact
-    rows = best.where(F.col("surface").isNotNull()).select("surface", "entity").collect()
-    bc = pages.sparkSession.sparkContext.broadcast({r[0]: r[1] for r in rows})
+        ).select(cols)
+    bc = pages.sparkSession.sparkContext.broadcast(_best_sense(alias_dict))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         entity_of = bc.value
         for pdf in batches:
             if has_html:
                 pdf = _fill_text(pdf)
-            out = {"url": [], "node1": [], "label": [], "node2": []}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if not text:
-                    continue
-                for subj, pred, obj in _svo(text):
-                    if subj in entity_of and obj in entity_of:
-                        out["url"].append(url)
-                        out["node1"].append(entity_of[subj])
-                        out["label"].append(pred)
-                        out["node2"].append(entity_of[obj])
-            yield pd.DataFrame(out)
+            if with_url:
+                rows = [
+                    (url, *t)
+                    for url, text in zip(pdf["url"], pdf["text"])
+                    for t in _resolve(text, entity_of)
+                ]
+            else:  # nothing reads the url: distinct lines in, distinct triples out
+                lines = dict.fromkeys(ln for text in pdf["text"] if text for ln in text.split("\n"))
+                rows = dict.fromkeys(_resolve("\n".join(lines), entity_of))
+            yield pd.DataFrame(list(rows), columns=cols)
 
-    return pages.select("url", "text", *(["html"] if has_html else [])).mapInPandas(
-        run, schema="url string, node1 string, label string, node2 string"
-    )
+    read = (["url"] if with_url else []) + ["text"] + (["html"] if has_html else [])
+    return pages.select(read).mapInPandas(run, schema=", ".join(f"{c} string" for c in cols))
 
 
 # ---------------------------------------------------------------------------

@@ -171,10 +171,11 @@ def load(
 def tpch_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Spark twin of EDGES_CTE."""
     def tag(df, prefix, key, label, prefix2, key2):
-        return df.select(
-            F.concat(F.lit(prefix), F.col(key).cast("string")).alias("node1"),
-            F.lit(label).alias("label"),
-            F.concat(F.lit(prefix2), F.col(key2).cast("string")).alias("node2"),
+        # one selectExpr: Column objects cost a py4j round trip each
+        return df.selectExpr(
+            f"concat('{prefix}', CAST({key} AS STRING)) AS node1",
+            f"'{label}' AS label",
+            f"concat('{prefix2}', CAST({key2} AS STRING)) AS node2",
         )
 
     c = tag(load(spark, sf_dir, "customer"), "C", "c_custkey", "in_nation", "N", "c_nationkey")

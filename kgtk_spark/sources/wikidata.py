@@ -196,7 +196,6 @@ def import_wikidata_jsonl(
             "node1",
             snak["property"].alias("label"),
             _value_to_kgtk(snak["datavalue"]).alias("node2"),
-            F.col("claim")["qualifiers"].alias("__quals__"),
         )
         .withColumn("id", F.concat_ws("-", "node1", "label", "node2"))
     )

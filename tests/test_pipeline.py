@@ -24,7 +24,12 @@ from kgtk_spark.pipeline import (
 )
 from kgtk_spark.pipeline.matcher import TokenDictMatcher
 from kgtk_spark.pipeline.runner import run_pipeline_fused
-from kgtk_spark.pipeline.stages import ALIAS_BROADCAST_THRESHOLD, extract_text_bytes
+from kgtk_spark.pipeline.stages import (
+    ALIAS_BROADCAST_THRESHOLD,
+    _best_sense,
+    best_alias_map,
+    extract_text_bytes,
+)
 from kgtk_spark.pipeline.webgen import generate_page_rows, html_of_text
 
 
@@ -382,6 +387,42 @@ def test_large_dictionary_takes_shuffle_path(spark):
         assert sorted(map(tkey, raw.collect())) == page_rows
 
 
+def test_driver_best_sense_matches_best_alias_map(spark):
+    # The broadcast path's driver-side argmax (one Arrow collect) must give
+    # best_alias_map's rows, min_by(entity, struct(-prior, entity)), on the
+    # cases where Spark's order is easy to get wrong.
+    import pyarrow as pa
+
+    nan = float("nan")
+    rows = [
+        ("tie", "Q2", 0.5), ("tie", "Q1", 0.5), ("tie", "Q3", 0.4),
+        ("null prior", "Q5", 0.9), ("null prior", "Q6", None),
+        ("nan prior", "Q7", nan), ("nan prior", "Q8", 0.1),
+        ("all nan", "Q9", nan), ("all nan", "Q1", nan),
+        ("null entity", "Q1", 0.7), ("null entity", None, 0.7),
+        ("signed zero", "Q2", 0.0), ("signed zero", "Q1", -0.0),
+        ("dup", "Q2", 0.3), ("dup", "Q2", 0.3), ("dup", "Q1", 0.2),
+        ("Zürich", "Q11", 1.0), ("Zürich", "Q10", 1.0),
+        ("東京", "Q12", 0.2), ("東京", "Q13", 0.8),
+        (None, "Q14", 1.0),
+    ]
+    ad = spark.createDataFrame(pa.table({
+        "alias": pa.array([r[0] for r in rows], pa.string()),
+        "entity": pa.array([r[1] for r in rows], pa.string()),
+        "prior": pa.array([r[2] for r in rows], pa.float64()),
+    }))
+    want = {r["surface"]: r["entity"] for r in best_alias_map(ad).collect()}
+    assert None in want  # the Spark map keeps the null surface; the dict drops it
+    del want[None]
+    assert _best_sense(ad) == want
+    # Spark's order, pinned: the min entity on a tie, a null prior (and a
+    # null entity) first, NaN above every number
+    assert (want["tie"], want["null prior"], want["nan prior"], want["all nan"]) == (
+        "Q1", "Q6", "Q8", "Q1")
+    assert want["null entity"] is None
+    assert (want["dup"], want["Zürich"], want["東京"]) == ("Q2", "Q10", "Q13")
+
+
 def test_pipeline_catalog_table_sink_and_resume(spark, tmp_path):
     # table mode: every stage lands as a catalog table (session catalog
     # in-container; Iceberg writeTo when a catalog is configured) with
@@ -446,29 +487,52 @@ def _jobs_started(spark, group, action):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_fused_pipeline_matches_staged(spark, tmp_path):
+def test_fused_pipeline_matches_staged(spark, tmp_path, monkeypatch):
+    from kgtk_spark.pipeline import stages as S
+
     pages, world = generate_pages_df(spark, n_pages=150, n_entities=60, seed=11)
     ad = alias_dictionary_df(spark, world)
     staged = run_pipeline(
         spark, pages, ad, str(tmp_path / "kg"), n_buckets=4, input_fingerprint="seed11",
     )
+    # record the memory sink's Python pass: it carries no url and emits
+    # each batch's distinct triples; extract_triples called alone still
+    # returns the url
+    passes = []
+    extract = S.extract_triples
+
+    def recording(*args, **kwargs):
+        passes.append(extract(*args, **kwargs))
+        return passes[-1]
+
+    monkeypatch.setattr(S, "extract_triples", recording)
     before = _persistent_rdd_ids(spark)
     fused = run_pipeline_fused(spark, pages, ad, n_buckets=4)
+    monkeypatch.undo()
     got = sorted(map(tuple, fused.collect()))
     # canonicalize resolves on the driver and releases its checkpoint
     assert _persistent_rdd_ids(spark) - before == set()
     assert fused.columns == ["node1", "label", "node2", "id"]
     assert got == sorted(map(tuple, staged.collect()))
     assert triple_precision_recall(fused, expected_edges_df(spark, world)) == (1.0, 1.0)
+    (memory_pass,) = passes
+    assert memory_pass.columns == ["node1", "label", "node2"]
+    with_url = extract_triples(pages, ad)
+    assert with_url.columns == ["url", "node1", "label", "node2"]
+    assert memory_pass.count() < with_url.count()
+    assert sorted(map(tuple, memory_pass.distinct().collect())) == sorted(
+        map(tuple, with_url.select("node1", "label", "node2").distinct().collect()))
 
-    # The memory sink with the dictionary size given runs 7 jobs on this
-    # input; a provenance stage would add more (mention detection collects
-    # the dictionary when it is called). Nothing stays persisted.
+    # The memory sink with the dictionary size given runs 6 jobs on this
+    # input: the best-sense map's Arrow collect, the Python pass with the
+    # dedup shuffle, canonicalize's checkpoint and bounded collect, and
+    # materialize. A provenance stage would add more (mention detection
+    # collects the dictionary when it is called). Nothing stays persisted.
     n_aliases = ad.count()
     before = _persistent_rdd_ids(spark)
     rows, jobs = _jobs_started(spark, "memory-sink-jobs", lambda: run_pipeline_fused(
         spark, pages, ad, n_buckets=4, alias_count=n_aliases).collect())
-    assert jobs <= 7, jobs
+    assert jobs <= 6, jobs
     assert _persistent_rdd_ids(spark) - before == set()
     assert sorted(map(tuple, rows)) == got
 
