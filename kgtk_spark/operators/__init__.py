@@ -35,7 +35,6 @@ from kgtk_spark.operators.validate_properties import (
     validate_properties,
 )
 from kgtk_spark.operators.columns import kgtk_every_nth
-from kgtk_spark.operators.value_repair import ValueRepairOptions, repair_values
 
 __all__ = [
     "kgtk_filter",
@@ -66,6 +65,4 @@ __all__ = [
     "validate_properties",
     "PropertyPattern",
     "kgtk_every_nth",
-    "ValueRepairOptions",
-    "repair_values",
 ]

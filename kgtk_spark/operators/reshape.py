@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from kgtk_spark.lists import split_list, split_list_nonempty
 from kgtk_spark.schema import resolve_column
-from kgtk_spark.values import FIELD_NAMES, parse_fields_udf, stringify
+from kgtk_spark.values import FIELD_NAMES, parse_fields_udf
 
 
 def kgtk_expand(df: DataFrame, key_columns: list[str] | None = None) -> DataFrame:
@@ -228,4 +228,4 @@ def normalize_nodes(
     return out
 
 
-__all__ = ["kgtk_expand", "kgtk_explode", "kgtk_implode", "normalize_nodes", "stringify"]
+__all__ = ["kgtk_expand", "kgtk_explode", "kgtk_implode", "normalize_nodes"]

@@ -26,9 +26,7 @@ stage to a manifest and resume what is still committed.
 """
 
 from kgtk_spark.pipeline.webgen import (
-    generate_pages_df,
     generate_world,
-    expected_edges_df,
     alias_dictionary_df,
 )
 from kgtk_spark.pipeline.stages import (
@@ -42,9 +40,7 @@ from kgtk_spark.pipeline.stages import (
 from kgtk_spark.pipeline.runner import run_pipeline, triple_precision_recall
 
 __all__ = [
-    "generate_pages_df",
     "generate_world",
-    "expected_edges_df",
     "alias_dictionary_df",
     "extract_text",
     "detect_mentions",

@@ -28,6 +28,12 @@ Scale notes (the whole point):
 - materialize shuffles once, hash-partitioning on node1 before the
   dedup, so its output is truly bucketed by subject and the downstream
   graph operators and compact co-locate by subject without a shuffle.
+
+Each size gate is a module constant, read when the stage is called:
+ALIAS_BROADCAST_THRESHOLD, DRIVER_TRIPLE_LIMIT and
+REWRITE_BROADCAST_THRESHOLD. No caller passes its own; a test takes the
+other path on a small input by monkeypatching the constant (to 0, or -1
+for DRIVER_TRIPLE_LIMIT).
 """
 
 from __future__ import annotations
@@ -118,12 +124,11 @@ def _alias_count(alias_dict: DataFrame, alias_count: int | None) -> int:
 def detect_mentions(
     pages: DataFrame,
     alias_dict: DataFrame,
-    broadcast_threshold: int = ALIAS_BROADCAST_THRESHOLD,
     alias_count: int | None = None,
 ) -> DataFrame:
     """(url, begin, end, surface) for every dictionary hit in ``text``.
 
-    Dictionaries up to ``broadcast_threshold`` rows have their distinct
+    Dictionaries up to ALIAS_BROADCAST_THRESHOLD rows have their distinct
     aliases collected once on the driver (one Arrow collect) and
     broadcast; each executor builds the word-level matcher
     (matcher.TokenDictMatcher) once (cached) and streams Arrow batches
@@ -133,7 +138,7 @@ def detect_mentions(
     instead (pass ``alias_count`` to skip the size probe when the
     caller already knows it).
     """
-    if _alias_count(alias_dict, alias_count) > broadcast_threshold:
+    if _alias_count(alias_dict, alias_count) > ALIAS_BROADCAST_THRESHOLD:
         return detect_mentions_distributed(pages, alias_dict)
     # one Arrow collect; the matcher does not depend on the alias order
     aliases = tuple(pc.unique(alias_dict.select("alias").toArrow()["alias"]).to_pylist())
@@ -172,9 +177,7 @@ def detect_mentions(
 _TOK_RE = re.compile(r"\S+")
 
 
-def detect_mentions_distributed(
-    pages: DataFrame, alias_dict: DataFrame, salt_buckets: int = 16
-) -> DataFrame:
+def detect_mentions_distributed(pages: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """Mention detection for dictionaries too big to broadcast.
 
     Semantics-identical twin of the token matcher
@@ -233,7 +236,7 @@ def detect_mentions_distributed(
             yield pd.DataFrame(rows)
 
     cands = pages.select("url", "text").mapInPandas(emit, schema=cand_schema)
-    hits = salted_join(cands, grams_dict, "gram", salt_buckets=salt_buckets).select(
+    hits = salted_join(cands, grams_dict, "gram").select(
         "url", "begin", "end", F.col("gram").alias("surface")
     )
 
@@ -268,7 +271,6 @@ def best_alias_map(alias_dict: DataFrame) -> DataFrame:
 def link_entities(
     mentions: DataFrame,
     alias_dict: DataFrame,
-    broadcast_threshold: int = ALIAS_BROADCAST_THRESHOLD,
     alias_count: int | None = None,
 ) -> DataFrame:
     """Resolve each mention to its best-prior entity.
@@ -276,13 +278,13 @@ def link_entities(
     ZERO-shuffle: the argmax over candidate senses is precomputed per
     alias (best_alias_map) and the mentions stream takes one broadcast
     hash join — map-side scoring, immune to hub-alias skew, scales
-    linearly with cores. Dictionaries above ``broadcast_threshold`` rows
+    linearly with cores. Dictionaries above ALIAS_BROADCAST_THRESHOLD rows
     switch to a salted shuffle join (textops.skew.salted_join) — hub
     aliases spread over the salt shards instead of making one straggler
     reducer.
     """
     best = best_alias_map(alias_dict)
-    if _alias_count(alias_dict, alias_count) > broadcast_threshold:
+    if _alias_count(alias_dict, alias_count) > ALIAS_BROADCAST_THRESHOLD:
         from kgtk_spark.textops.skew import salted_join
 
         return salted_join(mentions, best, "surface").select(
@@ -377,7 +379,6 @@ def _resolve(text: str | None, entity_of: dict) -> Iterator[tuple[str, str, str]
 def extract_triples(
     pages: DataFrame,
     alias_dict: DataFrame,
-    broadcast_threshold: int = ALIAS_BROADCAST_THRESHOLD,
     alias_count: int | None = None,
     with_url: bool = True,
 ) -> DataFrame:
@@ -395,16 +396,16 @@ def extract_triples(
     join, no shuffle): each Python worker holds the best-sense map as a
     dict, built on the driver from one Arrow collect of the dictionary
     (_best_sense, best_alias_map's rule, bounded by
-    ``broadcast_threshold``), and each sentence's subject and object
+    ALIAS_BROADCAST_THRESHOLD), and each sentence's subject and object
     surfaces are looked up in it — the inner join's rule, so a sentence
     whose subject or object is not an alias is dropped. Above
-    ``broadcast_threshold`` dictionary rows the regex triples
+    ALIAS_BROADCAST_THRESHOLD dictionary rows the regex triples
     (raw_triples) resolve their surfaces with two salted shuffle joins
     against best_alias_map instead.
     """
     has_html = "html" in pages.columns
     cols = ["url", "node1", "label", "node2"] if with_url else ["node1", "label", "node2"]
-    if _alias_count(alias_dict, alias_count) > broadcast_threshold:
+    if _alias_count(alias_dict, alias_count) > ALIAS_BROADCAST_THRESHOLD:
         from kgtk_spark.textops.skew import salted_join
 
         best = best_alias_map(alias_dict)
@@ -468,12 +469,7 @@ DRIVER_TRIPLE_LIMIT = 100_000
 REWRITE_BROADCAST_THRESHOLD = 2_000_000
 
 
-def canonicalize(
-    triples: DataFrame,
-    same_as_label: str = SAME_AS_LABEL,
-    broadcast_threshold: int = REWRITE_BROADCAST_THRESHOLD,
-    size_hint: int | None = None,
-) -> DataFrame:
+def canonicalize(triples: DataFrame, size_hint: int | None = None) -> DataFrame:
     """Collapse sameAs clusters: rewrite node1/node2 to the cluster's
     lexicographically-smallest member; drop the sameAs edges (and the
     rows with a null label). Every other column and the input schema
@@ -494,11 +490,11 @@ def canonicalize(
       through components_auto (driver union-find when small,
       large/small-star fixpoint at scale) and the rewrite map (one row
       per non-canonical entity) is joined back.
-      It is broadcast only while it stays under ``broadcast_threshold``
-      rows; above that the two rewrites run as shuffle joins — a
-      web-scale sameAs graph can have hundreds of millions of
-      non-canonical ids, which must never transit the driver or every
-      executor."""
+      It is broadcast only while it stays under
+      REWRITE_BROADCAST_THRESHOLD rows; above that the two rewrites run
+      as shuffle joins — a web-scale sameAs graph can have hundreds of
+      millions of non-canonical ids, which must never transit the
+      driver or every executor."""
     # Evaluate the input once, whichever path runs: the collect reads this
     # checkpoint, and above the gate so do the sameAs split and the rewrite.
     triples = triples.localCheckpoint()
@@ -506,10 +502,10 @@ def canonicalize(
     if head is None:
         # the returned joins read the checkpoint: it lives as long as they
         # do (Spark's ContextCleaner drops it once they are garbage-collected)
-        return _canonicalize_joins(triples, same_as_label, broadcast_threshold, size_hint)
+        return _canonicalize_joins(triples, size_hint)
     release_checkpoint(triples)  # every row is on the driver now
-    same = head.filter(pc.equal(head["label"], same_as_label))
-    rest = head.filter(pc.not_equal(head["label"], same_as_label))  # null labels go
+    same = head.filter(pc.equal(head["label"], SAME_AS_LABEL))
+    rest = head.filter(pc.not_equal(head["label"], SAME_AS_LABEL))  # null labels go
     comp = union_find(zip(same["node1"].to_pylist(), same["node2"].to_pylist()))
     rewrite = {x: c for x, c in comp.items() if x != c}
     if rewrite:
@@ -522,12 +518,10 @@ def canonicalize(
     return triples.sparkSession.createDataFrame(rest, schema=triples.schema)
 
 
-def _canonicalize_joins(
-    triples: DataFrame, same_as_label: str, broadcast_threshold: int, size_hint: int | None
-) -> DataFrame:
+def _canonicalize_joins(triples: DataFrame, size_hint: int | None) -> DataFrame:
     """canonicalize above the driver gate, as Spark joins."""
-    same = triples.filter(F.col("label") == same_as_label)
-    rest = triples.filter(F.col("label") != same_as_label)
+    same = triples.filter(F.col("label") == SAME_AS_LABEL)
+    rest = triples.filter(F.col("label") != SAME_AS_LABEL)
 
     pairs = same.select(F.col("node1").alias("u"), F.col("node2").alias("v"))
     # (node, component=min member); small sameAs graphs resolve on the
@@ -546,7 +540,7 @@ def _canonicalize_joins(
         n_rewrite = rewrite.count()
     else:
         n_rewrite = size_hint
-    if n_rewrite <= broadcast_threshold:
+    if n_rewrite <= REWRITE_BROADCAST_THRESHOLD:
         rewrite = F.broadcast(rewrite)
     out = (
         rest.join(rewrite, rest["node1"] == rewrite["__from__"], "left")

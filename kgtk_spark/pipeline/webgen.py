@@ -4,7 +4,10 @@ Synthesizes, from a seed, exactly the input_hint table shape
 ``(url, warc_ts, html, text, lang)`` plus the ground truth needed to
 score the pipeline: the planted (subj, pred, obj) facts and the alias
 dictionary. Entity mentions are drawn Zipfian so a few hub entities
-dominate — this exercises the salted/AQE skew-join path (FIXTURES.md §6).
+dominate — the skew the salted joins are for (FIXTURES.md §6). Those
+joins run only above ``stages.ALIAS_BROADCAST_THRESHOLD`` dictionary
+rows; a test takes them on these pages by monkeypatching that constant
+to 0.
 
 A slice of entities have *duplicate* ids (``Q{i}__dup``) whose aliases
 appear in "also known as" sentences, planting sameAs edges that the
@@ -42,6 +45,13 @@ PREDICATES = [
 SAME_AS_PHRASE = "is also known as"
 SAME_AS_LABEL = "sameAs"
 
+# Share of entities that get a duplicate id (a sameAs edge to collapse),
+# planted facts per page (inclusive range), and share of pages that arrive
+# as html with null text.
+DUP_FRACTION = 0.1
+FACTS_PER_PAGE = (3, 10)
+HTML_FRACTION = 0.3
+
 _SYLLABLES = [
     "ka", "lo", "mi", "ra", "ven", "dor", "sel", "tan", "bur", "nis",
     "qua", "fel", "gor", "hul", "jin", "pex", "rho", "sil", "tur", "wex",
@@ -73,9 +83,6 @@ class World:
     dup_of: dict[str, str] = field(default_factory=dict)    # dup Qid → canonical Qid
     facts: list[tuple[str, str, str]] = field(default_factory=list)  # canonical ids
     same_as: list[tuple[str, str]] = field(default_factory=list)
-    # facts actually planted on at least one generated page — the
-    # ground truth an extractor can possibly recover (recall denominator)
-    emitted: set = field(default_factory=set)
 
 
 def _entity_name(rng: random.Random, i: int) -> str:
@@ -83,7 +90,7 @@ def _entity_name(rng: random.Random, i: int) -> str:
     return ("".join(parts)).capitalize() + f" {i}"
 
 
-def generate_world(n_entities: int = 200, seed: int = 42, dup_fraction: float = 0.1) -> World:
+def generate_world(n_entities: int = 200, seed: int = 42) -> World:
     rng = random.Random(seed)
     w = World(n_entities=n_entities)
     for i in range(n_entities):
@@ -98,7 +105,7 @@ def generate_world(n_entities: int = 200, seed: int = 42, dup_fraction: float = 
         w.aliases[q] = alts
 
     # Duplicate ids for a slice of entities — canonicalization targets.
-    n_dup = int(n_entities * dup_fraction)
+    n_dup = int(n_entities * DUP_FRACTION)
     for i in range(n_dup):
         canon = w.entities[rng.randrange(n_entities)]
         dup = f"{canon}__dup"
@@ -142,85 +149,13 @@ def _phrase_for(pred: str) -> str:
     raise KeyError(pred)
 
 
-def generate_page_rows(
-    n_pages: int = 500,
-    n_entities: int = 200,
-    seed: int = 42,
-    facts_per_page: tuple[int, int] = (3, 10),
-    html_fraction: float = 0.3,
-    world: World | None = None,
-) -> tuple[list[tuple], World]:
-    """Rows of the pages table + the world. Deterministic in (args, seed)."""
-    w = world or generate_world(n_entities=n_entities, seed=seed)
-    rng = random.Random(seed * 7919 + 13)
-    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-
-    dups_of: dict[str, list[str]] = {}
-    for d, c in w.dup_of.items():
-        dups_of.setdefault(c, []).append(d)
-
-    rows = []
-    for i in range(n_pages):
-        url = f"https://example.org/{seed}/{i}"
-        ts = t0 + dt.timedelta(seconds=i * 37)
-        sentences: list[str] = []
-        k = rng.randint(*facts_per_page)
-        for _ in range(k):
-            s, p, o = w.facts[rng.randrange(len(w.facts))]
-            w.emitted.add((s, p, o))
-            # Subject may surface via a duplicate id's alias form.
-            s_id = s
-            dups = dups_of.get(s)
-            if dups and rng.random() < 0.3:
-                s_id = dups[0]
-            s_alias = rng.choice(w.aliases[s_id])
-            o_alias = rng.choice(w.aliases[o])
-            sentences.append(f"{s_alias} {_phrase_for(p)} {o_alias} .")
-            if rng.random() < 0.25:
-                sentences.append(rng.choice(_FILLER) + " .")
-        # sameAs sentences: dup alias "is also known as" canonical name.
-        if w.same_as and rng.random() < 0.4:
-            d, c = w.same_as[rng.randrange(len(w.same_as))]
-            sentences.append(f"{w.aliases[d][0]} {SAME_AS_PHRASE} {w.aliases[c][0]} .")
-        text = "\n".join(sentences)
-        has_html = rng.random() < html_fraction
-        html = html_of_text(text, f"page {i}") if has_html else None
-        # When html is present, text arrives null → extraction must rebuild it.
-        rows.append((url, ts, html, None if has_html else text, "en"))
-    return rows, w
-
-
-def generate_pages_df(
-    spark: SparkSession,
-    n_pages: int = 500,
-    n_entities: int = 200,
-    seed: int = 42,
-    partitions: int | None = None,
-    world: World | None = None,
-) -> tuple[DataFrame, World]:
-    rows, w = generate_page_rows(
-        n_pages=n_pages, n_entities=n_entities, seed=seed, world=world
-    )
-    df = spark.createDataFrame(rows, PAGES_SCHEMA)
-    if partitions:
-        df = df.repartition(partitions, "url")
-    return df, w
-
-
-def _gen_page_indexed(
-    world: World,
-    dups_of: dict[str, list[str]],
-    seed: int,
-    i: int,
-    facts_per_page: tuple[int, int] = (3, 10),
-    html_fraction: float = 0.3,
-) -> tuple:
+def _gen_page_indexed(world: World, dups_of: dict[str, list[str]], seed: int, i: int) -> tuple:
     """One page from (world, seed, page-index) alone — executor-safe.
 
-    Unlike generate_page_rows (sequential driver RNG), each page gets an
-    independent RNG keyed by index, so generation parallelizes over any
-    partitioning and any cluster size with identical output.
-    Returns (url, warc_ts, html, text, lang, planted_facts).
+    Each page gets an independent RNG keyed by its index, so generation
+    parallelizes over any partitioning and any cluster size with
+    identical output. Returns (url, warc_ts, html, text, lang,
+    planted_facts).
     """
     rng = random.Random(f"{seed}:{i}")
     t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
@@ -228,7 +163,7 @@ def _gen_page_indexed(
     ts = t0 + dt.timedelta(seconds=i * 37)
     sentences: list[str] = []
     planted: list[str] = []
-    k = rng.randint(*facts_per_page)
+    k = rng.randint(*FACTS_PER_PAGE)
     for _ in range(k):
         s, p, o = world.facts[rng.randrange(len(world.facts))]
         planted.append(f"{s}\x1f{p}\x1f{o}")
@@ -245,7 +180,7 @@ def _gen_page_indexed(
         d, c = world.same_as[rng.randrange(len(world.same_as))]
         sentences.append(f"{world.aliases[d][0]} {SAME_AS_PHRASE} {world.aliases[c][0]} .")
     text = "\n".join(sentences)
-    has_html = rng.random() < html_fraction
+    has_html = rng.random() < HTML_FRACTION
     html = html_of_text(text, f"page {i}") if has_html else None
     return (url, ts, html, None if has_html else text, "en", planted)
 
@@ -256,14 +191,14 @@ def generate_pages_distributed(
     n_entities: int = 2000,
     seed: int = 42,
     partitions: int = 64,
-    facts_per_page: tuple[int, int] = (3, 10),
 ) -> tuple[DataFrame, DataFrame, World]:
-    """Executor-side page synthesis for large benchmark inputs.
+    """Executor-side page synthesis: the one page generator, for the
+    benchmarks and the tests alike.
 
     The World (entities/aliases/facts) is built on the driver and
     broadcast; pages materialize in parallel from their index, once,
     into a ``localCheckpoint`` that both returned frames read. Returns
-    (pages_df, expected_edges_df, world) — expected edges are the
+    (pages, expected, world) — expected edges are the
     distinct planted facts, computed distributedly.
     """
     import pandas as pd
@@ -283,7 +218,7 @@ def generate_pages_distributed(
         world, dups = bc.value
         for pdf in batches:
             rows = [
-                _gen_page_indexed(world, dups, seed, int(i), facts_per_page)
+                _gen_page_indexed(world, dups, seed, int(i))
                 for i in pdf["id"]
             ]
             yield pd.DataFrame(
@@ -322,24 +257,10 @@ def alias_dictionary_df(spark: SparkSession, world: World) -> DataFrame:
         for form in forms:
             counts[form] = counts.get(form, 0) + 1
     pairs = [(form, ent) for ent, forms in world.aliases.items() for form in forms]
-    # Arrow-built, like expected_edges_df: a JVM-only local relation
+    # Built from Arrow: a JVM-only local relation, where createDataFrame
+    # of a Python list starts a Python worker on every action on the frame.
     return spark.createDataFrame(pa.table({
         "alias": pa.array([a for a, _ in pairs], pa.string()),
         "entity": pa.array([e for _, e in pairs], pa.string()),
         "prior": pa.array([1.0 / counts[a] for a, _ in pairs], pa.float64()),
-    }))
-
-
-def expected_edges_df(spark: SparkSession, world: World) -> DataFrame:
-    """Ground-truth canonical (node1, label, node2) edges for P/R scoring.
-
-    Uses the facts actually planted on pages (``world.emitted``) when the
-    pages have been generated — an extractor cannot recover a fact no
-    page mentions."""
-    facts = sorted(world.emitted) if world.emitted else sorted(set(world.facts))
-    # Built from Arrow: a JVM-only local relation, where createDataFrame
-    # of a Python list starts a Python worker on every action on the frame.
-    return spark.createDataFrame(pa.table({
-        col: pa.array([f[i] for f in facts], pa.string())
-        for i, col in enumerate(("node1", "label", "node2"))
     }))

@@ -12,19 +12,14 @@ from kgtk_spark.textops.dedup import (
     decontaminate,
     exact_dedup,
     minhash_near_dup,
-    minhash_signatures,
     ngram_jaccard_pairs,
     remove_duplicate_spans,
-    simhash_near_dup,
     simhash_signatures,
     url_dedup,
 )
 from kgtk_spark.textops.similarity import (
     brute_force_topk,
     cosine_pairs,
-    ivf_build,
-    ivf_topk,
-    lsh_bucketed_topk,
 )
 from kgtk_spark.textops.quality import (
     doc_fingerprint,
@@ -39,30 +34,21 @@ from kgtk_spark.textops.quality import (
 from kgtk_spark.textops.corpus import clean_corpus
 from kgtk_spark.textops.skew import salted_join
 from kgtk_spark.textops.multimodal import (
-    attach_binary_payload,
     audio_features,
     decode_image_bytes,
     encode_gray_jpeg,
-    extract_features_stub,
-    resize_image_stub,
-    sample_video_frames,
 )
 
 __all__ = [
     "canonicalize_url",
     "decontaminate",
     "exact_dedup",
-    "minhash_signatures",
     "minhash_near_dup",
     "simhash_signatures",
-    "simhash_near_dup",
     "ngram_jaccard_pairs",
     "remove_duplicate_spans",
     "url_dedup",
     "brute_force_topk",
-    "lsh_bucketed_topk",
-    "ivf_build",
-    "ivf_topk",
     "cosine_pairs",
     "language_id",
     "quality_score",
@@ -74,11 +60,7 @@ __all__ = [
     "repetition_signals",
     "salted_join",
     "clean_corpus",
-    "attach_binary_payload",
     "decode_image_bytes",
     "encode_gray_jpeg",
-    "extract_features_stub",
     "audio_features",
-    "sample_video_frames",
-    "resize_image_stub",
 ]

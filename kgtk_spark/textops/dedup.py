@@ -164,19 +164,6 @@ def _shingles_and_sigs(
     ).select(id_col, F.col("__b__.gs").alias("gs"), F.col("__b__.sig").alias("sig"))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """(id, sig: array<long>) MinHash signatures."""
-    return _shingles_and_sigs(df, text_col, id_col, num_hashes, shingle_k).select(
-        id_col, "sig"
-    )
-
-
 def _lsh_candidates(
     sigs: DataFrame,
     id_col: str,
@@ -502,15 +489,6 @@ def simhash_oracle_sql(table: str = "documents", id_col: str = "doc_id") -> str:
     )
 
 
-def simhash_near_dup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, cluster_id) — cluster = min id sharing the signature."""
-    sigs = simhash_signatures(df, text_col, id_col)
-    reps = sigs.groupBy("simhash").agg(F.min(id_col).alias("cluster_id"))
-    return sigs.join(reps, "simhash").select(id_col, "cluster_id")
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -735,6 +713,11 @@ def _gram_hash_col(n: int):
     return gh
 
 
+# Distinct benchmark grams up to which decontaminate broadcasts the gram
+# set; the grams are 8-byte hashes, so 5M of them are 40 MB of values.
+DECONTAMINATE_BROADCAST_GRAMS = 5_000_000
+
+
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -742,7 +725,6 @@ def decontaminate(
     id_col: str = "doc_id",
     bench_text_col: str = "text",
     n: int = 13,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """(id, contaminated: boolean) — true iff the doc shares at least
     one whitespace-token ``n``-gram with any benchmark text.
@@ -752,8 +734,9 @@ def decontaminate(
     STRINGS are ever materialized or shuffled; at 100 TB the gram-string
     explode would dwarf the corpus). The benchmark gram set — the small
     side by construction (an eval suite, not a crawl) — broadcasts into
-    a semi-join under ``broadcast_threshold`` distinct grams and falls
-    back to a shuffle semi-join above it. One distinct per side, one
+    a semi-join up to DECONTAMINATE_BROADCAST_GRAMS distinct grams and
+    falls back to a shuffle semi-join above it (a test takes that path
+    by monkeypatching the constant to 0). One distinct per side, one
     semi-join, one left join back to ids: no quadratic path anywhere.
     """
     gh = _gram_hash_col(n)
@@ -767,7 +750,7 @@ def decontaminate(
         .distinct()
         .localCheckpoint()
     )
-    if bench.count() <= broadcast_threshold:
+    if bench.count() <= DECONTAMINATE_BROADCAST_GRAMS:
         bench = F.broadcast(bench)
     doc_grams = docs.select(
         F.col(id_col), F.explode(gh(token_hashes(F.col(text_col)))).alias("__gh__")

@@ -1,23 +1,19 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing over ``binary`` payload columns.
 
-Images/audio/video ride as ``binary`` columns with a metadata struct;
-decode/feature-extraction run as Arrow-batched ``mapInPandas`` stages.
+Images and audio ride as ``binary`` columns; decode/feature-extraction
+run as Arrow-batched ``mapInPandas`` stages.
 Decoders are REAL where stdlib+numpy suffice: PNG, BMP, PPM/PGM,
 JPEG (full T.81 huffman decode — baseline sequential AND progressive
 with spectral selection / successive approximation), and WAV/PCM
 audio; a baseline JPEG ENCODER (``encode_gray_jpeg``) closes the
 round-trip. The codec libraries (PIL/ffmpeg/av) are NOT in this
-container, so WebP / video decode remains a clearly-marked stub:
-``extract_features_stub`` computes deterministic byte-level features
-(length, sha-derived checksum bucket, a fixed-width byte histogram)
-through the exact schema / partitioning / batch shape a real extractor
-would use — swap the inner function for a real decoder on a cluster
-with the codec libs installed.
+container, so WebP and video are not decoded: ``thumbnail_image``
+reshapes such payloads' bytes into a square and reports
+``decoded=False``.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 import zlib
 from typing import Iterator
@@ -27,32 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def attach_binary_payload(
-    df: DataFrame, source_col: str = "text", media_type: str = "image/fake"
-) -> DataFrame:
-    """Demo payload builder: encodes a string column as the binary blob
-    (stand-in for real WARC media bytes) + typed metadata struct."""
-    payload = F.encode(F.col(source_col), "utf-8")
-    return df.withColumn("payload", payload).withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.length(payload).cast("long").alias("n_bytes"),
-            F.sha2(payload, 256).alias("checksum"),
-        ),
-    )
-
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("byte_entropy_bucket", T.IntegerType()),
-        T.StructField("histogram", T.ArrayType(T.IntegerType())),
-    ]
-)
 
 
 def decode_image_bytes(b: bytes) -> np.ndarray:
@@ -326,6 +296,17 @@ def _decode_jpeg(b: bytes) -> np.ndarray:
     Arithmetic-coded, lossless, and hierarchical variants raise
     ValueError — vanishingly rare on the web relative to the huffman
     baseline + progressive pair this kernel covers.
+
+    Truncated streams decode without an error of their own. Past the
+    end of a segment the bit reader feeds 1-bits, so the MCUs after a
+    cut inside the entropy data are decoded from that padding: on a
+    cut baseline stream they saturate (white after the clip), or a run
+    walks past coefficient 63 and raises IndexError, which
+    ``thumbnail_image`` catches. Blocks the decoder never reaches, such
+    as the MCUs of restart segments lost to the cut, keep zero
+    coefficients and render mid-gray (128, the IDCT level shift), as
+    libjpeg leaves the coefficient blocks after a premature end of data
+    at zero.
     """
     import struct
 
@@ -811,41 +792,6 @@ def encode_gray_jpeg(img: np.ndarray, quant: np.ndarray | None = None) -> bytes:
     return bytes(out + wtr.out + b"\xff\xd9")
 
 
-def extract_features_stub(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload", bins: int = 16
-) -> DataFrame:
-    """Arrow-batched feature extraction with a deterministic fake decode.
-
-    Real Spark plumbing (mapInPandas, fixed output schema, per-batch
-    numpy); fake inner transform (byte histogram instead of pixels).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sizes, buckets, hists = [], [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                arr = np.frombuffer(b, dtype=np.uint8)
-                hist = np.bincount(arr // (256 // bins), minlength=bins)[:bins]
-                digest = hashlib.sha256(b).digest()
-                ids.append(int(i))
-                sizes.append(len(b))
-                buckets.append(int(digest[0]) % bins)
-                hists.append([int(x) for x in hist])
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_bytes": sizes,
-                    "byte_entropy_bucket": buckets,
-                    "histogram": hists,
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        run, schema=FEATURES_SCHEMA
-    )
-
-
 AUDIO_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -913,44 +859,6 @@ def audio_features(
 
     return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
         run, schema=AUDIO_FEATURES_SCHEMA
-    )
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def sample_video_frames(
-    df: DataFrame,
-    frame_bytes: int = 1024,
-    every_nth: int = 10,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Frame sampling plumbing: chunk the payload into fixed-size
-    'frames' and keep every n-th — one output row per sampled frame
-    (the partitioning/batch shape a real keyframe extractor would use;
-    swap the chunker for an av/ffmpeg demuxer on a cluster with codecs)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                n = (len(b) + frame_bytes - 1) // frame_bytes
-                for fi in range(0, n, every_nth):
-                    ids.append(int(i))
-                    idxs.append(fi)
-                    frames.append(b[fi * frame_bytes : (fi + 1) * frame_bytes])
-            yield pd.DataFrame({"doc_id": ids, "frame_index": idxs, "frame": frames})
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        run, schema=FRAME_SCHEMA
     )
 
 
@@ -1044,53 +952,4 @@ def thumbnail_image(
 
     return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
         run, schema=THUMBNAIL_REAL_SCHEMA
-    )
-
-
-def resize_image_stub(
-    df: DataFrame,
-    out_h: int = 8,
-    out_w: int = 8,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Thumbnail pipeline with a STUBBED decode and a REAL resize.
-
-    Decode is faked (payload bytes reshaped into a square grayscale
-    image, as no image library is a dependency), but
-    the downsample that follows is the genuine vectorized block-mean a
-    real thumbnailer runs, and the schema/batching are production
-    shape. Output: row-major ``out_h × out_w`` mean intensities."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs, ws, px = [], [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                side = max(int(np.sqrt(max(len(b), 1))), 1)
-                arr = np.frombuffer(b, dtype=np.uint8).astype(np.float64)
-                arr = np.resize(arr, side * side).reshape(side, side)  # fake decode
-                # real block-mean downsample to (out_h, out_w)
-                ys = np.linspace(0, side, out_h + 1).astype(int)
-                xs = np.linspace(0, side, out_w + 1).astype(int)
-                thumb = np.array(
-                    [
-                        [
-                            arr[ys[r] : max(ys[r + 1], ys[r] + 1),
-                                xs[c] : max(xs[c + 1], xs[c] + 1)].mean()
-                            for c in range(out_w)
-                        ]
-                        for r in range(out_h)
-                    ]
-                )
-                ids.append(int(i))
-                hs.append(out_h)
-                ws.append(out_w)
-                px.append([float(v) for v in thumb.ravel()])
-            yield pd.DataFrame(
-                {"doc_id": ids, "height": hs, "width": ws, "pixels": px}
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        run, schema=THUMBNAIL_SCHEMA
     )

@@ -3,12 +3,9 @@
 - brute_force_topk: exact cosine top-k — the correctness baseline.
   The dot product is a JVM-side ``aggregate(zip_with(...))`` against a
   literal query vector: no Python, no shuffle except the final top-k.
-- lsh_bucketed_topk: the scale path — random-hyperplane LSH signs
-  bucket the corpus; only the query's bucket (plus optional probes of
-  neighboring buckets) is scanned. At 10^10 vectors the bucket scan is
-  1/2^bits of the corpus.
-- cosine_pairs: all-pairs above a threshold via LSH buckets (near-dup
-  by embedding).
+- cosine_pairs: all-pairs above a threshold via random-hyperplane LSH
+  buckets (near-dup by embedding).
+- knn_join: batch top-k for every query row against the corpus.
 """
 
 from __future__ import annotations
@@ -78,9 +75,9 @@ def lsh_signature(
     - *expression* (small planes): per-plane JVM ``aggregate(zip_with)``
       dot products — no Python at all;
     - *matrix UDF* (``bits x dim >= MATRIX_UDF_CELLS``): ONE vectorized
-      ``X @ planes.T`` per Arrow batch against the closed-over matrix
-      (the ``ivf_build`` ``assign_udf`` pattern), keeping the plan a
-      single small node instead of tens of thousands of literals.
+      ``X @ planes.T`` per Arrow batch against the closed-over matrix,
+      keeping the plan a single small node instead of tens of
+      thousands of literals.
 
     Zero planes → constant signature 0: every vector lands in ONE
     bucket, degrading the LSH consumers to exhaustive exact mode (used
@@ -112,44 +109,6 @@ def lsh_signature(
     for b in bits[1:]:
         out = out + b
     return out
-
-
-def lsh_bucketed_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    probe_hamming: int = 1,
-) -> DataFrame:
-    """Approximate top-k: scan only buckets within ``probe_hamming`` of
-    the query's bucket. Recall/latency trade via bits and probes."""
-    planes = _hyperplanes(len(query), bits, seed)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if float(np.dot(p, query)) >= 0:
-            qsig |= 1 << i
-    probe_sigs = {qsig}
-    if probe_hamming >= 1:
-        for i in range(bits):
-            probe_sigs.add(qsig ^ (1 << i))
-    if probe_hamming >= 2:
-        for i in range(bits):
-            for j in range(i + 1, bits):
-                probe_sigs.add(qsig ^ (1 << i) ^ (1 << j))
-
-    bucketed = df.withColumn("__sig__", lsh_signature(F.col(vec_col), planes))
-    cand = bucketed.filter(F.col("__sig__").isin(list(probe_sigs)))
-    return (
-        cand.select(
-            F.col(id_col),
-            F.round(cosine_to_literal(F.col(vec_col), query), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
 
 
 def cosine_pairs(
@@ -201,79 +160,6 @@ def cosine_pairs(
         )
     )
     return pairs.filter(F.col("score") >= threshold)
-
-
-def ivf_build(
-    df: DataFrame,
-    n_lists: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    sample_fraction: float | None = None,
-):
-    """Build an IVF (inverted-file) index: k-means coarse quantizer +
-    per-vector list assignment.
-
-    Returns (assigned_df, centroids) where ``assigned_df`` carries a
-    ``__list__`` column — at scale, write it out partitioned by
-    ``__list__`` so a probe only scans nprobe/n_lists of the corpus.
-    The quantizer trains on a sample (Spark ML KMeans, distributed);
-    assignment is a broadcast argmin over the centroid matrix, JVM+
-    vectorized (one pandas UDF of pure numpy matrix math).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import types as T
-
-    train = df if sample_fraction is None else df.sample(sample_fraction, seed=seed)
-    km = KMeans(k=n_lists, seed=seed, featuresCol="__feat__")
-    model = km.fit(
-        train.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("__feat__"))
-    )
-    centroids = np.array([np.asarray(c) for c in model.clusterCenters()])
-
-    # L2 argmin == argmax(2·x·c − |c|²); one numpy matmul per batch.
-    c_t = centroids.T.copy()
-    c_norm = (centroids**2).sum(axis=1)
-
-    @F.pandas_udf(T.IntegerType())
-    def assign_udf(vecs: pd.Series) -> pd.Series:
-        m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        if m.size == 0:
-            return pd.Series([], dtype="int32")
-        scores = 2.0 * (m @ c_t) - c_norm[None, :]
-        return pd.Series(scores.argmax(axis=1).astype(np.int32))
-
-    assigned = df.withColumn("__list__", assign_udf(F.col(vec_col)))
-    return assigned, centroids
-
-
-def ivf_topk(
-    assigned: DataFrame,
-    centroids,
-    query: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate cosine top-k over an IVF index: scan only the
-    ``nprobe`` lists whose centroids are nearest the query — at
-    n_lists=1024 / nprobe=16 that is ~1.6% of a 10^10-vector corpus,
-    and with ``__list__``-partitioned storage the pruning happens at
-    the file-listing level (partition pruning, no scan)."""
-    q = np.asarray(query, dtype=np.float64)
-    d = ((centroids - q[None, :]) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(d)[:nprobe]]
-    cand = assigned.filter(F.col("__list__").isin(probe))
-    return (
-        cand.select(
-            F.col(id_col),
-            F.round(cosine_to_literal(F.col(vec_col), list(query)), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
 
 
 def knn_join(

@@ -563,3 +563,20 @@ def test_graph_loops_release_superseded_checkpoints(spark):
         before = held()
         run().write.format("noop").mode("overwrite").save()
         assert len(held() - before) <= most, name
+
+
+def test_connected_components_numbered(spark):
+    from kgtk_spark.graph.connected_components import connected_components
+
+    edges = spark.createDataFrame(
+        [("a", "e", "b"), ("c", "e", "d"), ("x", "e", "y")],
+        "node1 string, label string, node2 string",
+    )
+    out = connected_components(edges, cluster_name_method="numbered")
+    clusters = {r["node2"] for r in out.collect()}
+    # NUMBERED is the bare component number (reference :79-81 passes
+    # the graph-tool id through); PREFIXED adds CLUS + zfill
+    assert clusters == {"0", "1", "2"}
+    out = connected_components(edges, cluster_name_method="prefixed")
+    clusters = {r["node2"] for r in out.collect()}
+    assert clusters == {"CLUS0000", "CLUS0001", "CLUS0002"}

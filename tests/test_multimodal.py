@@ -1,5 +1,5 @@
-"""Multimodal column plumbing: REAL WAV decode, frame sampling,
-thumbnail resize."""
+"""Multimodal column plumbing: REAL WAV decode and the stdlib image
+decoders (PNG, BMP, PGM, baseline and progressive JPEG)."""
 
 from __future__ import annotations
 
@@ -9,13 +9,8 @@ import struct
 import wave
 
 import numpy as np
-from pyspark.sql import functions as F
 
-from kgtk_spark.textops.multimodal import (
-    audio_features,
-    resize_image_stub,
-    sample_video_frames,
-)
+from kgtk_spark.textops.multimodal import audio_features
 
 
 def _make_wav(freq: float = 440.0, sr: int = 8000, seconds: float = 0.5) -> bytes:
@@ -50,32 +45,6 @@ def test_audio_features_real_wav_decode(spark):
     assert 0.08 < a["zero_crossing_rate"] < 0.14
     # non-WAV payloads degrade to null features, not batch failure
     assert out[2]["sample_rate"] is None
-
-
-def test_sample_video_frames(spark):
-    payload = bytes(range(256)) * 40  # 10240 bytes = 10 frames of 1024
-    df = spark.createDataFrame([(1, bytearray(payload))], "doc_id long, payload binary")
-    frames = sample_video_frames(df, frame_bytes=1024, every_nth=3).collect()
-    idx = sorted(r["frame_index"] for r in frames)
-    assert idx == [0, 3, 6, 9]
-    by_idx = {r["frame_index"]: bytes(r["frame"]) for r in frames}
-    assert by_idx[0] == payload[:1024]
-    assert by_idx[9] == payload[9 * 1024 : 10 * 1024]
-
-
-def test_resize_image_stub_shapes_and_determinism(spark):
-    df = spark.createDataFrame(
-        [(1, bytearray(bytes(range(256)) * 16)), (2, bytearray(b"\xff" * 100))],
-        "doc_id long, payload binary",
-    )
-    out = {r["doc_id"]: r for r in resize_image_stub(df, out_h=4, out_w=4).collect()}
-    assert out[1]["height"] == 4 and out[1]["width"] == 4
-    assert len(out[1]["pixels"]) == 16
-    # constant 0xff image → every block mean is 255
-    assert all(abs(p - 255.0) < 1e-9 for p in out[2]["pixels"])
-    # deterministic across runs
-    again = {r["doc_id"]: r for r in resize_image_stub(df, out_h=4, out_w=4).collect()}
-    assert again[1]["pixels"] == out[1]["pixels"]
 
 
 def _make_png(arr, ctype=0, filters=None):
@@ -743,3 +712,43 @@ def test_encode_gray_jpeg_roundtrip():
     checker = (np.indices((16, 16)).sum(axis=0) % 2 * 255).astype(np.uint8)
     cb = decode_image_bytes(encode_gray_jpeg(checker))
     assert np.abs(cb - checker).max() < 2.0
+
+
+def test_decode_jpeg_truncated_streams():
+    """What a cut inside the entropy data decodes to (``_decode_jpeg``'s
+    docstring): the MCUs after the cut read the reader's 1-bit padding,
+    which here saturates them to white or runs past coefficient 63
+    (IndexError, thumbnail_image's fallback); MCUs the decoder never
+    reaches, those of lost restart segments, keep zero coefficients and
+    render mid-gray, libjpeg's fill after a premature end of data."""
+    import numpy as np
+    import pytest
+
+    from kgtk_spark.textops.multimodal import decode_image_bytes, encode_gray_jpeg
+
+    img = np.random.RandomState(0).randint(0, 40, (64, 64)).astype(np.uint8)  # dark noise
+    b = encode_gray_jpeg(img)
+    full = decode_image_bytes(b)
+    sos = b.index(b"\xff\xda")
+    start = sos + 2 + int.from_bytes(b[sos + 2 : sos + 4], "big")
+    entropy = len(b) - 2 - start  # the stream ends with EOI
+
+    # a tenth of the way in: 6 MCUs decode as before, the 7th is cut
+    # short, and every MCU row below saturates
+    out = decode_image_bytes(b[: start + entropy // 10])
+    assert out.shape == (64, 64)
+    assert np.array_equal(out[:8, :48], full[:8, :48])
+    assert (out[8:] == 255).all()
+
+    # a twentieth of the way in: the padding decodes past coefficient 63
+    with pytest.raises(IndexError):
+        decode_image_bytes(b[: start + entropy // 20])
+
+    # restart segments of one MCU row each, cut at the third RST marker:
+    # rows 4-8 of MCUs are never reached
+    b = _make_jpeg_gray(img, restart_interval=8)
+    full = decode_image_bytes(b)
+    rst = [i for i in range(start, len(b) - 1) if b[i] == 0xFF and 0xD0 <= b[i + 1] <= 0xD7]
+    out = decode_image_bytes(b[: rst[2]])
+    assert np.array_equal(out[:24], full[:24])
+    assert (out[24:] == 128).all()

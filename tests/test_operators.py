@@ -351,3 +351,22 @@ def test_zip_with_index_is_contiguous(spark):
     # order within a partition is preserved
     rows = out.collect()
     assert len({r["idx"] for r in rows}) == 1000
+
+
+def test_implode_reject_and_escape(spark):
+    from kgtk_spark.operators.reshape import kgtk_implode
+
+    df = spark.createDataFrame(
+        [
+            ("number", 4.5, None),
+            ("string", None, 'say "hi"'),
+            ("bogus_type", None, None),
+            ("number", None, None),  # missing required field
+        ],
+        '`node2;kgtk:data_type` string, `node2;kgtk:number` double, `node2;kgtk:text` string',
+    )
+    good, reject = kgtk_implode(df, with_reject=True, escape_text=True)
+    vals = sorted(r["node2"] for r in good.collect())
+    assert vals == ['"say \\"hi\\""', "4.5"]
+    rej = reject.collect()
+    assert len(rej) == 2

@@ -13,10 +13,8 @@ from kgtk_spark.pipeline import (
     alias_dictionary_df,
     canonicalize,
     detect_mentions,
-    expected_edges_df,
     extract_text,
     extract_triples,
-    generate_pages_df,
     link_entities,
     materialize,
     run_pipeline,
@@ -25,12 +23,11 @@ from kgtk_spark.pipeline import (
 from kgtk_spark.pipeline.matcher import TokenDictMatcher
 from kgtk_spark.pipeline.runner import run_pipeline_fused
 from kgtk_spark.pipeline.stages import (
-    ALIAS_BROADCAST_THRESHOLD,
     _best_sense,
     best_alias_map,
     extract_text_bytes,
 )
-from kgtk_spark.pipeline.webgen import generate_page_rows, html_of_text
+from kgtk_spark.pipeline.webgen import generate_pages_distributed, html_of_text
 
 
 class AhoCorasick:
@@ -109,11 +106,12 @@ def test_find_mentions_boundaries():
     assert got == {"Kalo 10", "Mira", "Kalo 1"}
 
 
-def test_token_matcher_equals_aho_corasick_oracle():
-    rows, world = generate_page_rows(n_pages=200, n_entities=60, seed=19)
+def test_token_matcher_equals_aho_corasick_oracle(spark):
+    pages, _, world = generate_pages_distributed(spark, 200, n_entities=60, seed=19, partitions=4)
     aliases = sorted({a for forms in world.aliases.values() for a in forms})
     oracle, matcher = AhoCorasick(aliases), TokenDictMatcher(aliases)
-    texts = [t if t is not None else extract_text_bytes(h) for _, _, h, t, _ in rows]
+    texts = [r["text"] if r["text"] is not None else extract_text_bytes(bytes(r["html"]))
+             for r in pages.collect()]
     n_hits = 0
     for text in texts:
         got = matcher.find(text)
@@ -129,21 +127,28 @@ def test_extract_text_byte_identical():
 
 
 def test_generator_deterministic(spark):
-    r1, w1 = generate_page_rows(n_pages=20, n_entities=30, seed=7)
-    r2, w2 = generate_page_rows(n_pages=20, n_entities=30, seed=7)
-    assert r1 == r2
-    assert w1.facts == w2.facts and w1.same_as == w2.same_as
+    """generate_pages_distributed's docstring promises identical output
+    over any partitioning: each page comes from (world, seed, index)."""
+    out = []
+    for partitions in (1, 5):
+        pages, expected, world = generate_pages_distributed(
+            spark, 20, n_entities=30, seed=7, partitions=partitions)
+        assert pages.rdd.getNumPartitions() == partitions
+        out.append((sorted(map(tuple, pages.collect())),
+                    sorted(map(tuple, expected.collect())), world.facts, world.same_as))
+    assert out[0] == out[1]
+    assert len(out[0][0]) == 20 and out[0][1]
 
 
 def test_extract_text_stage(spark):
-    pages, _ = generate_pages_df(spark, n_pages=40, n_entities=30, seed=3)
+    pages, _, _ = generate_pages_distributed(spark, 40, n_entities=30, seed=3, partitions=4)
     out = extract_text(pages)
     assert out.filter(F.col("text").isNull()).count() == 0
     assert "html" not in out.columns
     # byte-identical for pages whose text came from html
-    rows, _ = generate_page_rows(n_pages=40, n_entities=30, seed=3)
     originals = {
-        u: extract_text_bytes(h) for (u, _, h, t, _) in rows if h is not None
+        r["url"]: extract_text_bytes(bytes(r["html"]))
+        for r in pages.collect() if r["html"] is not None
     }
     got = {r["url"]: r["text"] for r in out.collect()}
     for u, t in originals.items():
@@ -151,7 +156,7 @@ def test_extract_text_stage(spark):
 
 
 def test_mentions_and_linking(spark):
-    pages, world = generate_pages_df(spark, n_pages=30, n_entities=25, seed=5)
+    pages, _, world = generate_pages_distributed(spark, 30, n_entities=25, seed=5, partitions=4)
     text_df = extract_text(pages)
     ad = alias_dictionary_df(spark, world)
     mentions = detect_mentions(text_df, ad)
@@ -228,9 +233,10 @@ def test_canonicalize_nulls_self_loops_and_extra_columns(spark, monkeypatch):
 
 
 def test_canonicalize_large_map_takes_shuffle_path(spark, monkeypatch):
-    # broadcast_threshold=0 forces the "sameAs map too big to broadcast"
-    # route: the rewrite joins must run WITHOUT a broadcast exchange and
-    # produce results identical to the broadcast path and the driver path.
+    # REWRITE_BROADCAST_THRESHOLD=0 forces the "sameAs map too big to
+    # broadcast" route: the rewrite joins must run WITHOUT a broadcast
+    # exchange and produce results identical to the broadcast path and
+    # the driver path.
     from kgtk_spark.pipeline import stages as S
 
     rows = [(f"u{i}", f"Q{i}__dup", "P31", f"Q{(i + 1) % 30}") for i in range(30)]
@@ -247,7 +253,9 @@ def test_canonicalize_large_map_takes_shuffle_path(spark, monkeypatch):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        shuf = canonicalize(t, broadcast_threshold=0)
+        with monkeypatch.context() as m:
+            m.setattr(S, "REWRITE_BROADCAST_THRESHOLD", 0)
+            shuf = canonicalize(t)
         plan = shuf._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan, plan
 
@@ -283,13 +291,13 @@ def test_materialize_ids_and_buckets(spark):
 
 
 def test_end_to_end_precision_recall(spark, tmp_path):
-    pages, world = generate_pages_df(spark, n_pages=150, n_entities=60, seed=11)
+    pages, expected, world = generate_pages_distributed(
+        spark, 150, n_entities=60, seed=11, partitions=4)
     ad = alias_dictionary_df(spark, world)
     edges = run_pipeline(
         spark, pages, ad, str(tmp_path / "kg"), n_buckets=4,
         input_fingerprint="seed11",
     )
-    expected = expected_edges_df(spark, world)
     p, r = triple_precision_recall(edges, expected)
     assert p >= 0.95, f"precision {p}"
     assert r >= 0.95, f"recall {r}"
@@ -300,7 +308,8 @@ def test_end_to_end_precision_recall(spark, tmp_path):
 
 def test_pipeline_resume_skips_committed(spark, tmp_path):
     out_dir = str(tmp_path / "kg2")
-    pages, world = generate_pages_df(spark, n_pages=40, n_entities=20, seed=13)
+    pages, _, world = generate_pages_distributed(
+        spark, 40, n_entities=20, seed=13, partitions=4)
     ad = alias_dictionary_df(spark, world)
     run_pipeline(spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13")
 
@@ -331,12 +340,13 @@ def test_pipeline_resume_skips_committed(spark, tmp_path):
         assert sums[(m["stage"], m["fingerprint"])] == m["rows"]
 
 
-def test_large_dictionary_takes_shuffle_path(spark):
-    # broadcast_threshold=0 forces the "dictionary too big to broadcast"
+def test_large_dictionary_takes_shuffle_path(spark, monkeypatch):
+    # ALIAS_BROADCAST_THRESHOLD=0 forces the "dictionary too big to broadcast"
     # route: distributed candidate-join mention detection + salted
     # linking joins, regex triples + salted joins. Results must be
     # identical to the broadcast path (one fused pass for triples).
-    pages, world = generate_pages_df(spark, n_pages=40, n_entities=25, seed=21)
+    pages, _, world = generate_pages_distributed(
+        spark, 40, n_entities=25, seed=21, partitions=4)
     ad = alias_dictionary_df(spark, world)
     # one extra page of edge cases: a doubled space in the subject and
     # in the object slot, a subject that is no alias but ends in one, a
@@ -356,8 +366,16 @@ def test_large_dictionary_takes_shuffle_path(spark):
     edge_page = spark.createDataFrame([(edge_url, edge_text)], "url string, text string")
     text_df = extract_text(pages).select("url", "text").unionByName(edge_page).localCheckpoint()
 
+    from kgtk_spark.pipeline import stages as S
+
+    def distributed(stage, *args):
+        """``stage(*args)`` with every dictionary over the broadcast gate."""
+        with monkeypatch.context() as m:
+            m.setattr(S, "ALIAS_BROADCAST_THRESHOLD", 0)
+            return stage(*args)
+
     m_bcast = detect_mentions(text_df, ad)
-    m_dist = detect_mentions(text_df, ad, broadcast_threshold=0)
+    m_dist = distributed(detect_mentions, text_df, ad)
     # the shuffle path is really taken: the salted join's salt column
     # appears in the analyzed plan, and no python-side automaton scan
     plan = m_dist._jdf.queryExecution().analyzed().toString()
@@ -367,13 +385,13 @@ def test_large_dictionary_takes_shuffle_path(spark):
     assert sorted(map(key, m_bcast.collect())) == sorted(map(key, m_dist.collect()))
 
     l_bcast = link_entities(m_bcast, ad)
-    l_dist = link_entities(m_bcast, ad, broadcast_threshold=0)
+    l_dist = distributed(link_entities, m_bcast, ad)
     assert "__salt__" in l_dist._jdf.queryExecution().analyzed().toString()
     lkey = lambda r: (r["url"], r["begin"], r["end"], r["entity"])  # noqa: E731
     assert sorted(map(lkey, l_bcast.collect())) == sorted(map(lkey, l_dist.collect()))
 
     t_bcast = extract_triples(text_df, ad)
-    t_dist = extract_triples(text_df, ad, broadcast_threshold=0)
+    t_dist = distributed(extract_triples, text_df, ad)
     tkey = lambda r: (r["url"], r["node1"], r["label"], r["node2"])  # noqa: E731
     assert sorted(map(tkey, t_bcast.collect())) == sorted(map(tkey, t_dist.collect()))
     edge_rows = t_bcast.filter(F.col("url") == edge_url).collect()
@@ -382,8 +400,7 @@ def test_large_dictionary_takes_shuffle_path(spark):
     }
     # raw pages (html not yet extracted) give the same triples on both paths
     page_rows = sorted(k for k in map(tkey, t_bcast.collect()) if k[0] != edge_url)
-    for threshold in (ALIAS_BROADCAST_THRESHOLD, 0):
-        raw = extract_triples(pages, ad, broadcast_threshold=threshold)
+    for raw in (extract_triples(pages, ad), distributed(extract_triples, pages, ad)):
         assert sorted(map(tkey, raw.collect())) == page_rows
 
 
@@ -428,7 +445,8 @@ def test_pipeline_catalog_table_sink_and_resume(spark, tmp_path):
     # in-container; Iceberg writeTo when a catalog is configured) with
     # resume-from-committed-snapshot semantics matching the parquet path
     out_dir = str(tmp_path / "kgt")
-    pages, world = generate_pages_df(spark, n_pages=40, n_entities=20, seed=17)
+    pages, _, world = generate_pages_distributed(
+        spark, 40, n_entities=20, seed=17, partitions=4)
     ad = alias_dictionary_df(spark, world)
 
     edges = run_pipeline(
@@ -490,7 +508,8 @@ def _jobs_started(spark, group, action):
 def test_fused_pipeline_matches_staged(spark, tmp_path, monkeypatch):
     from kgtk_spark.pipeline import stages as S
 
-    pages, world = generate_pages_df(spark, n_pages=150, n_entities=60, seed=11)
+    pages, expected, world = generate_pages_distributed(
+        spark, 150, n_entities=60, seed=11, partitions=4)
     ad = alias_dictionary_df(spark, world)
     staged = run_pipeline(
         spark, pages, ad, str(tmp_path / "kg"), n_buckets=4, input_fingerprint="seed11",
@@ -514,7 +533,7 @@ def test_fused_pipeline_matches_staged(spark, tmp_path, monkeypatch):
     assert _persistent_rdd_ids(spark) - before == set()
     assert fused.columns == ["node1", "label", "node2", "id"]
     assert got == sorted(map(tuple, staged.collect()))
-    assert triple_precision_recall(fused, expected_edges_df(spark, world)) == (1.0, 1.0)
+    assert triple_precision_recall(fused, expected) == (1.0, 1.0)
     (memory_pass,) = passes
     assert memory_pass.columns == ["node1", "label", "node2"]
     with_url = extract_triples(pages, ad)
@@ -540,7 +559,8 @@ def test_fused_pipeline_matches_staged(spark, tmp_path, monkeypatch):
 def test_pipeline_resume_covers_the_dictionary(spark, tmp_path):
     # The same input fingerprint with a smaller dictionary: the rerun on
     # the first run's out_dir must give what a fresh run gives, not resume.
-    pages, world = generate_pages_df(spark, n_pages=150, n_entities=60, seed=11)
+    pages, _, world = generate_pages_distributed(
+        spark, 150, n_entities=60, seed=11, partitions=4)
     ad = alias_dictionary_df(spark, world)
     small = ad.where(F.xxhash64("entity") % 2 == 0)  # about half the entities
     out_dir = str(tmp_path / "kg")
@@ -561,7 +581,8 @@ def test_pipeline_resume_covers_the_dictionary(spark, tmp_path):
 def test_staged_run_releases_the_dedup_checkpoint(spark, tmp_path):
     # canonicalize releases its checkpoint of the distinct triples when it
     # resolves the KG on the driver, so no stage leaves a persisted RDD.
-    pages, world = generate_pages_df(spark, n_pages=40, n_entities=20, seed=13)
+    pages, _, world = generate_pages_distributed(
+        spark, 40, n_entities=20, seed=13, partitions=4)
     ad = alias_dictionary_df(spark, world)
     before = _persistent_rdd_ids(spark)
     edges = run_pipeline(spark, pages, ad, str(tmp_path / "kg"), n_buckets=2,
@@ -574,7 +595,8 @@ def test_pipeline_resume_recomputes_after_crashed_write(spark, tmp_path, monkeyp
     from kgtk_spark.pipeline import stages as S
 
     out_dir = str(tmp_path / "kg")
-    pages, world = generate_pages_df(spark, n_pages=40, n_entities=20, seed=13)
+    pages, _, world = generate_pages_distributed(
+        spark, 40, n_entities=20, seed=13, partitions=4)
     ad = alias_dictionary_df(spark, world)
     edges = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
     manifest = lambda: spark.read.parquet(f"{out_dir}/_manifest")  # noqa: E731

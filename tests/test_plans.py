@@ -162,13 +162,13 @@ def test_lsh_candidates_share_one_exchange(spark):
     hash exchange on (band, bucket) — a groupBy+semi-join formulation
     would shuffle three times. Pin it so edits don't regress the
     shuffle count (dedup.py _lsh_candidates)."""
-    from kgtk_spark.textops.dedup import _lsh_candidates, minhash_signatures
+    from kgtk_spark.textops.dedup import _lsh_candidates, _shingles_and_sigs
 
     docs = spark.createDataFrame(
         [(f"d{i}", f"common text block {i % 4} repeated tokens") for i in range(40)],
         ["doc_id", "text"],
     )
-    sigs = minhash_signatures(docs, "text", "doc_id", num_hashes=16)
+    sigs = _shingles_and_sigs(docs, "text", "doc_id", 16, 3).select("doc_id", "sig")
     pairs, _residue = _lsh_candidates(
         sigs, "doc_id", bands=4, rows_per_band=4, bucket_cap=50
     )

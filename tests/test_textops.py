@@ -7,19 +7,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgtk_spark.textops import (
-    attach_binary_payload,
     brute_force_topk,
     cosine_pairs,
     doc_fingerprint,
     exact_dedup,
-    extract_features_stub,
     language_id,
-    lsh_bucketed_topk,
     minhash_near_dup,
     ngram_jaccard_pairs,
     quality_score,
     salted_join,
-    simhash_near_dup,
     token_count,
 )
 from tests.conftest import TESTDATA
@@ -71,13 +67,6 @@ def test_minhash_near_dup_releases_what_it_persists(spark):
     for df in (neardup_docs(spark), neardup_docs(spark).where("doc_id > 1")):
         assert minhash_near_dup(df, num_hashes=64, bands=16, jaccard_threshold=0.5).count() > 0
     assert held() - before == set()
-
-
-def test_simhash_near_dup(spark):
-    df = neardup_docs(spark)
-    out = {r["doc_id"]: r["cluster_id"] for r in simhash_near_dup(df).collect()}
-    assert out[1] == out[2] == 1  # identical text → identical simhash
-    assert out[4] != out[1] or out[4] == 4
 
 
 def test_ngram_jaccard_pairs(spark):
@@ -187,17 +176,6 @@ def test_brute_force_topk(spark, emb):
     assert out[0]["vec_id"] == 0 and abs(out[0]["score"] - 1.0) < 1e-6
     scores = [r["score"] for r in out]
     assert scores == sorted(scores, reverse=True)
-
-
-def test_lsh_topk_overlaps_exact(spark, emb):
-    q = list(emb.filter(F.col("vec_id") == 0).select("embedding").first()[0])
-    exact = {r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()}
-    approx = {
-        r["vec_id"]
-        for r in lsh_bucketed_topk(emb, q, k=10, bits=5, probe_hamming=2).collect()
-    }
-    assert 0 in approx
-    assert len(exact & approx) >= 3  # approximate, but not garbage
 
 
 def test_lsh_signature_matrix_udf_parity_low_dim(spark, emb):
@@ -325,66 +303,11 @@ def test_salted_join_matches_plain_join(spark):
     assert got == expect
 
 
-def test_multimodal_stub(docs):
-    with_payload = attach_binary_payload(docs.limit(20))
-    assert "payload" in with_payload.columns
-    feats = extract_features_stub(with_payload).collect()
-    assert len(feats) == 20
-    for r in feats:
-        assert r["n_bytes"] > 0
-        assert len(r["histogram"]) == 16
-        assert sum(r["histogram"]) == r["n_bytes"]
-
-
 def test_decode_stub_raises():
     from kgtk_spark.textops.multimodal import decode_image_bytes
 
     with pytest.raises(ValueError):
         decode_image_bytes(b"x")
-
-
-def test_ivf_topk_overlaps_exact(spark, emb):
-    from kgtk_spark.textops.similarity import ivf_build, ivf_topk
-
-    q = list(emb.filter(F.col("vec_id") == 0).select("embedding").first()[0])
-    assigned, centroids = ivf_build(emb, n_lists=8)
-    assigned = assigned.cache()
-    exact = {r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()}
-    approx = {
-        r["vec_id"] for r in ivf_topk(assigned, centroids, q, k=10, nprobe=3).collect()
-    }
-    assert 0 in approx  # the query vector itself lives in a probed list
-    assert len(exact & approx) >= 5  # good recall at nprobe=3/8
-    # full probe == exact
-    full = {
-        r["vec_id"] for r in ivf_topk(assigned, centroids, q, k=10, nprobe=8).collect()
-    }
-    assert full == exact
-
-
-def test_ivf_recall_gate(spark, emb):
-    """Recall@10 of the IVF path vs exhaustive cosine_topk, averaged
-    over 10 fixture queries at nprobe=4/8 — the quality number behind
-    the 'ANN scales to 100 TB' claim (r5 review item #6)."""
-    from kgtk_spark.textops.similarity import ivf_build, ivf_topk
-
-    assigned, centroids = ivf_build(emb, n_lists=8)
-    assigned = assigned.cache()
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        "vec_id", "embedding"
-    ).collect()
-    hits = total = 0
-    for row in queries:
-        q = list(row["embedding"])
-        exact = {r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()}
-        approx = {
-            r["vec_id"]
-            for r in ivf_topk(assigned, centroids, q, k=10, nprobe=4).collect()
-        }
-        hits += len(exact & approx)
-        total += len(exact)
-    recall = hits / total
-    assert recall >= 0.9, f"IVF recall@10 at nprobe=4: {recall:.3f} < 0.9"
 
 
 def test_clean_corpus_composition(spark):
@@ -758,7 +681,8 @@ def test_remove_duplicate_spans_keep_first(spark):
     assert both[1] == "" and both[2] == "x y z"
 
 
-def test_decontaminate(spark):
+def test_decontaminate(spark, monkeypatch):
+    from kgtk_spark.textops import dedup
     from kgtk_spark.textops.dedup import decontaminate
 
     docs = spark.createDataFrame(
@@ -784,9 +708,9 @@ def test_decontaminate(spark):
     assert clean.count() == 5
 
     # forcing the shuffle path (threshold 0) gives identical answers
+    monkeypatch.setattr(dedup, "DECONTAMINATE_BROADCAST_GRAMS", 0)
     shuf = {r["doc_id"]: r["contaminated"]
-            for r in decontaminate(docs, bench, n=8,
-                                   broadcast_threshold=0).collect()}
+            for r in decontaminate(docs, bench, n=8).collect()}
     assert shuf == out
 
 

@@ -137,3 +137,11 @@ def test_udfs(spark):
     ]
     assert all(r["ok"] for r in rows)
     assert rows[2]["f"]["number"] == 10.0
+
+
+def test_lq_string_language_list_validation(spark):
+    from kgtk_spark.values import parse_fields
+
+    assert parse_fields("'hello'@en")["valid"]
+    assert parse_fields("'hallo'@de-AT")["valid"]
+    assert parse_fields("'x'@qx")["valid"] is False  # shape ok, not ISO-639
