@@ -2,8 +2,8 @@
 
 The reference loads edges into graph-tool's C++ engine
 (kgtk/gt/gt_load.py:7-122); at 100 TB that in-memory graph cannot exist,
-so every algorithm here is an iterative DataFrame fixpoint with
-localCheckpoint between rounds to cut lineage.
+so above a driver gate every algorithm here is an iterative DataFrame
+loop, ``connected_components.iterate``: one checkpoint per step.
 """
 
 from kgtk_spark.graph.connected_components import connected_components

@@ -9,20 +9,35 @@ cluster naming methods (:21-31, :76-130), output edges
 The reference calls graph-tool's in-memory ``label_components``; that
 cannot exist at 100 TB. We use the large-star/small-star MapReduce
 algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14): O(log² n) rounds, each round two groupBy-min joins,
-localCheckpoint between rounds to cut lineage. Node ids stay strings;
-the component representative is the lexicographically smallest member
-("lowest" naming), with the reference's other naming methods applied
-as a final per-component aggregate.
+Beyond", SoCC'14): O(log² n) rounds, each round two groupBy-min joins.
+Node ids stay strings; the component representative is the
+lexicographically smallest member ("lowest" naming), with the
+reference's other naming methods applied as a final per-component
+aggregate.
+
+The loop rule of this package: up to ``DRIVER_EDGE_LIMIT`` edge rows
+a graph is solved on the driver from one bounded Arrow collect; above
+it every loop is ``iterate``, one checkpoint per step, whose stop test
+scans only the checkpoint just written (a previous value travels in
+the state as a column, so no test joins the new state to the old).
 """
 
 from __future__ import annotations
+
+import itertools
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgtk_spark.schema import resolve_column
+
+# Edge rows up to which components, SCC, PageRank and HITS run on the
+# driver. Read at call time, so one monkeypatch of this module's
+# constant moves every graph path above its gate.
+DRIVER_EDGE_LIMIT = 100_000
+CC_MAX_ITERATIONS = 50  # large/small-star rounds
+SCC_MAX_ROUNDS = 50  # peel rounds before a driver-sized residue is handed over
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -53,36 +68,48 @@ def _small_star(e: DataFrame) -> DataFrame:
     return nbrs.union(self_link).where(F.col("u") != F.col("v")).distinct()
 
 
-def _components_fixpoint(pairs: DataFrame, max_iterations: int = 50) -> DataFrame:
-    """pairs (u,v) → assignment (node, component) via large/small-star."""
-    e = pairs.where(F.col("u") != F.col("v")).distinct().localCheckpoint()
-    prev_sig = None
-    for _ in range(max_iterations):
-        # localCheckpoint is eager: the next round is materialized, so
-        # the blocks of this one can go.
-        nxt = _small_star(_large_star(e)).localCheckpoint()
-        release_checkpoint(e)
-        e = nxt
-        # Convergence: the edge multiset is stable (order-insensitive hash).
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        cur = (sig["n"], sig["h"])
-        if cur == prev_sig:
-            break
-        prev_sig = cur
+def _components_fixpoint(pairs: DataFrame) -> DataFrame:
+    """pairs (u,v), a checkpoint without self-loops that this releases
+    → assignment (node, component) via large/small-star."""
+    sigs = []
+
+    def stable(e: DataFrame) -> bool:
+        # the edge multiset is unchanged (order-insensitive hash)
+        sigs.append(e.agg(F.count(F.lit(1)), F.expr("bit_xor(xxhash64(u, v))")).first())
+        return sigs[-2:-1] == sigs[-1:]
+
+    e = iterate(pairs, lambda e: _small_star(_large_star(e)), CC_MAX_ITERATIONS, stable)
     # Final state is a star forest pointing at the component minimum.
     members = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
     return members.union(roots).distinct()
 
 
+def iterate(state: DataFrame, step, max_steps: int | None, done=None) -> DataFrame:
+    """The one graph loop: ``state = step(state).localCheckpoint()`` at
+    most ``max_steps`` times (None: no cap), stopping early once
+    ``done(state)``, asked of each checkpoint but the last, holds.
+    ``localCheckpoint`` is eager, so each replaced state is released at
+    once, the initial one too: it must be a checkpoint, or a projection
+    or filter of one, that nothing else reads."""
+    for i in itertools.count(1) if max_steps is None else range(1, max_steps + 1):
+        nxt = step(state).localCheckpoint()
+        release_checkpoint(state)
+        state = nxt
+        if i != max_steps and done is not None and done(state):
+            break
+    return state
+
+
 def release_checkpoint(df: DataFrame) -> None:
-    """Drop the blocks behind a ``localCheckpoint()`` frame once nothing
-    reads it any more (``DataFrame.unpersist`` only releases frames made
-    by ``persist()``)."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
+    """Drop the blocks behind a ``localCheckpoint()`` frame, or behind
+    the checkpoint that a projection or filter ``df`` reads, once
+    nothing reads it any more (``DataFrame.unpersist`` only releases
+    frames made by ``persist()``)."""
+    plan = df._jdf.queryExecution().logical()
+    while plan.children().size() == 1:
+        plan = plan.children().apply(0)
+    plan.rdd().unpersist(False)
 
 
 def collect_bounded(df: DataFrame, n: int) -> pa.Table | None:
@@ -94,6 +121,11 @@ def collect_bounded(df: DataFrame, n: int) -> pa.Table | None:
     its input is evaluated once."""
     head = df.limit(n + 1).toArrow()
     return head if head.num_rows <= n else None
+
+
+def driver_edges(df: DataFrame) -> pa.Table | None:
+    """``collect_bounded`` at the graph gate, ``DRIVER_EDGE_LIMIT``."""
+    return collect_bounded(df, DRIVER_EDGE_LIMIT)
 
 
 def _assignment(spark: SparkSession, comp: dict) -> DataFrame:
@@ -108,23 +140,19 @@ def _assignment(spark: SparkSession, comp: dict) -> DataFrame:
     }))
 
 
-def components_auto(
-    pairs: DataFrame, driver_threshold: int = 100_000, max_iterations: int = 50
-) -> DataFrame:
+def components_auto(pairs: DataFrame) -> DataFrame:
     """(node, component = lexicographically-min member) with an
     adaptive strategy: duplicate/sameAs pair sets are usually tiny
     relative to the corpus that produced them, and the distributed
     fixpoint costs ~log² n rounds of job overhead — so edge sets up to
-    ``driver_threshold`` collect to a driver union-find (microseconds),
+    ``DRIVER_EDGE_LIMIT`` collect to a driver union-find (microseconds),
     while anything larger runs the large/small-star fixpoint. The
     input is checkpointed once, so the upstream pipeline (LSH, verify,
     extraction) never executes twice."""
     pairs = pairs.where(F.col("u") != F.col("v")).localCheckpoint()
-    head = collect_bounded(pairs, driver_threshold)
+    head = driver_edges(pairs)
     if head is None:
-        out = _components_fixpoint(pairs, max_iterations=max_iterations)
-        release_checkpoint(pairs)  # the fixpoint checkpointed its own copy
-        return out
+        return _components_fixpoint(pairs)
     release_checkpoint(pairs)  # every row is on the driver now
     comp = union_find(zip(head["u"].to_pylist(), head["v"].to_pylist()))
     return _assignment(pairs.sparkSession, comp)
@@ -164,7 +192,6 @@ def connected_components(
     cluster_name_prefix: str = "CLUS",
     cluster_name_separator: str = "+",
     cluster_name_zfill: int = 4,
-    max_iterations: int = 50,
     strong: bool = False,
 ) -> DataFrame:
     """Connected components over a KGTK edge file — weak by default,
@@ -188,10 +215,7 @@ def connected_components(
         src = src.filter(F.col(lb).isin(properties))
 
     pairs = src.select(F.col(n1).alias("u"), F.col(n2).alias("v"))
-    if strong:
-        assign = scc_auto(pairs, max_rounds=max_iterations)
-    else:
-        assign = components_auto(pairs, max_iterations=max_iterations)
+    assign = scc_auto(pairs) if strong else components_auto(pairs)
 
     # Cluster-size filter (isolated nodes never appear: they have no edges).
     sizes = assign.groupBy("component").agg(F.count(F.lit(1)).alias("__size__"))
@@ -363,14 +387,9 @@ def _tarjan(pairs) -> dict[str, str]:
     return out
 
 
-def scc_auto(
-    pairs: DataFrame,
-    driver_threshold: int = 100_000,
-    max_rounds: int = 50,
-    round_log: list | None = None,
-) -> DataFrame:
+def scc_auto(pairs: DataFrame, round_log: list | None = None) -> DataFrame:
     """(node, component = min member of its SCC), adaptive like
-    components_auto: driver Tarjan up to ``driver_threshold`` edge rows
+    components_auto: driver Tarjan up to ``DRIVER_EDGE_LIMIT`` edge rows
     (self-loops dropped, duplicates kept), read by one bounded collect;
     else the distributed COLORING algorithm (Orzan; also Slota et al.)
     over the distinct edges:
@@ -382,120 +401,112 @@ def scc_auto(
     O(#outer rounds × log n) joins; every round removes ≥1 SCC per
     color.
 
+    Both loops step one row per node: its SCC (``component``, null
+    while unassigned), ``color``, and ``prev``, the loop variable's
+    value one step before. Coloring is stable when no row has ``color
+    != prev``; the backward search is semi-naive: only the rows it
+    assigned last step (``prev`` null) join the edges. A node left
+    without edges is its own root in a later round, or at the end.
+
     Worst-case round bound: each outer round peels at least one SCC per
     color, so #rounds ≤ the longest chain of SCCs dominated by a single
     color. The adversarial shape is many small cycles chained by
     one-way edges — the global min id's color floods the whole chain
-    and exactly ONE SCC peels per round. After ``max_rounds`` the loop
-    hands the residue to driver Tarjan ONLY once it fits
-    ``driver_threshold`` edges; a residue still above the threshold
-    keeps peeling distributed (progress is guaranteed — every round
-    removes at least one SCC per color), so no input shape can force
-    an unbounded driver collect (r5 review, "What's wrong" #3).
+    and exactly ONE SCC peels per round. After ``SCC_MAX_ROUNDS`` the
+    loop hands the residue to driver Tarjan ONLY once it fits
+    ``DRIVER_EDGE_LIMIT`` edges; a residue still above the limit keeps
+    peeling distributed (progress is guaranteed — every round removes
+    at least one SCC per color), so no input shape can force an
+    unbounded driver collect.
 
     ``round_log``: optional list; one entry (live-edge count) is
     appended per outer round — used by tests to assert the bound.
     """
     spark = pairs.sparkSession
     pairs = pairs.where(F.col("u") != F.col("v"))
-    head = collect_bounded(pairs, driver_threshold)
+    head = driver_edges(pairs)
     if head is not None:
         # nodes in no cycle are their own singleton SCC (covered: tarjan
         # assigns every visited node)
         return _assignment(spark, _tarjan(zip(head["u"].to_pylist(), head["v"].to_pylist())))
-    pairs = pairs.distinct().localCheckpoint()
+    live = pairs.distinct().localCheckpoint()
+    none = F.lit(None).cast(live.schema["u"].dataType)
+    nodes = (
+        live.select(F.col("u").alias("node"))
+        .union(live.select(F.col("v").alias("node")))
+        .distinct()
+        .select("node", none.alias("component"))
+        .localCheckpoint()
+    )
 
-    assigned = _assignment(spark, {})
-    live = pairs
+    def color(s: DataFrame) -> DataFrame:
+        # color(v) = min node id that reaches v (including itself); an
+        # assigned node has no edges left and keeps its null color
+        return (
+            live.join(s, live["u"] == s["node"])
+            .select(F.col("v").alias("node"), "color", none.alias("prev"), none.alias("component"))
+            .union(s.select("node", "color", F.col("color").alias("prev"), "component"))
+            .groupBy("node")
+            .agg(F.min("color").alias("color"), F.max("prev").alias("prev"),
+                 F.max("component").alias("component"))
+        )
+
+    def reach(s: DataFrame) -> DataFrame:
+        # a predecessor of a node assigned last step joins its SCC when
+        # it has the same color
+        fresh = s.where(F.col("component").isNotNull() & F.col("prev").isNull())
+        back = (
+            live.join(fresh, live["v"] == fresh["node"])
+            .select(F.col("u").alias("__u__"), F.col("component").alias("__c__"))
+            .distinct()
+        )
+        return s.join(
+            back, (F.col("node") == F.col("__u__")) & (F.col("color") == F.col("__c__")), "left"
+        ).select(
+            "node", F.coalesce("component", "__c__").alias("component"), "color",
+            F.col("component").alias("prev"),
+        )
+
+    def peel(e: DataFrame) -> DataFrame:
+        done = nodes.where(F.col("component").isNotNull()).select("node")
+        return (
+            e.join(done.withColumnRenamed("node", "u"), "u", "left_anti")
+            .join(done.withColumnRenamed("node", "v"), "v", "left_anti")
+        )
+
     rounds = 0
     while not live.isEmpty():
-        if rounds >= max_rounds:
-            head = collect_bounded(live, driver_threshold)
+        if rounds >= SCC_MAX_ROUNDS:
+            head = driver_edges(live)
             if head is not None:
                 break  # residue is driver-sized — finish exactly below
         if round_log is not None:
             round_log.append(live.count())
         rounds += 1
-        # 1) forward min-label fixpoint (color): color(v) = min node id
-        # that reaches v (including itself)
-        nodes = (
-            live.select(F.col("u").alias("node"))
-            .union(live.select(F.col("v").alias("node")))
-            .distinct()
+        seeded = nodes.select(
+            "node", "component",
+            F.when(F.col("component").isNull(), F.col("node")).alias("color"), none.alias("prev"),
         )
-        color = nodes.select("node", F.col("node").alias("color")).localCheckpoint()
-        while True:
-            prop = (
-                live.join(color, live["u"] == color["node"])
-                .select(F.col("v").alias("node"), F.col("color"))
-                .union(color.select("node", "color"))
-                .groupBy("node")
-                .agg(F.min("color").alias("color"))
-                .localCheckpoint()
-            )
-            changed = (
-                prop.join(color.withColumnRenamed("color", "old"), "node")
-                .where(F.col("color") != F.col("old"))
-                .isEmpty()
-            )
-            release_checkpoint(color)
-            color = prop
-            if changed:
-                break
-        # 2) backward reachability to the color root WITHIN the color:
-        # the root's SCC = nodes with color c that reach c backward
-        # through same-color nodes
-        ec = (
-            live.join(color.withColumnRenamed("node", "u").withColumnRenamed("color", "cu"), "u")
-            .join(color.withColumnRenamed("node", "v").withColumnRenamed("color", "cv"), "v")
-            .where(F.col("cu") == F.col("cv"))
-            .select("u", "v", F.col("cu").alias("c"))
-            .localCheckpoint()
+        nodes = iterate(seeded, color, None, lambda s: s.where(F.col("color") != F.col("prev")).isEmpty())
+        # each color's root is the first node of its SCC
+        roots = nodes.select(
+            "node",
+            F.coalesce("component", F.when(F.col("node") == F.col("color"), F.col("node"))).alias("component"),
+            "color", F.col("component").alias("prev"),
         )
-        frontier = color.where(F.col("node") == F.col("color")).select(
-            F.col("node"), F.col("color").alias("c")
+        nodes = iterate(
+            roots, reach, None,
+            lambda s: s.where(F.col("component").isNotNull() & F.col("prev").isNull()).isEmpty(),
         )
-        reached = frontier.localCheckpoint()
-        while True:
-            step = (
-                ec.join(reached, (ec["v"] == reached["node"]) & (ec["c"] == reached["c"]))
-                .select(ec["u"].alias("node"), ec["c"])
-                .distinct()
-                .join(reached, ["node", "c"], "left_anti")
-                .localCheckpoint()
-            )
-            if step.isEmpty():
-                release_checkpoint(step)
-                break
-            nxt = reached.union(step).localCheckpoint()
-            release_checkpoint(reached)
-            release_checkpoint(step)
-            reached = nxt
-        scc = reached.select("node", F.col("c").alias("component"))
-        new_assigned = assigned.union(scc).localCheckpoint()
-        new_live = (
-            live.join(scc.select(F.col("node").alias("u")), "u", "left_anti")
-            .join(scc.select(F.col("node").alias("v")), "v", "left_anti")
-            .localCheckpoint()
-        )
-        # The first round's assigned is a local relation and its live is
-        # pairs, which the result reads: neither is a checkpoint to drop.
-        for df in (color, ec, reached) + ((assigned, live) if rounds > 1 else ()):
-            release_checkpoint(df)
-        assigned, live = new_assigned, new_live
-    if rounds:
-        release_checkpoint(live)
-    # anything never peeled that still has edges → finish on the driver
+        live = iterate(live, peel, 1)
+    release_checkpoint(live)
+    component = F.coalesce("component", "node")
     if head is not None:
+        # anything never peeled that still has edges → finish on the driver
         rest = _tarjan(zip(head["u"].to_pylist(), head["v"].to_pylist()))
-        assigned = assigned.union(_assignment(spark, rest))
-    # isolated-by-peel nodes: every node not assigned is its own SCC
-    all_nodes = (
-        pairs.select(F.col("u").alias("node"))
-        .union(pairs.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    singles = all_nodes.join(assigned, "node", "left_anti").select(
-        "node", F.col("node").alias("component")
-    )
-    return assigned.union(singles)
+        nodes = nodes.join(
+            _assignment(spark, rest).withColumnRenamed("component", "__t__"), "node", "left"
+        )
+        component = F.coalesce("component", "__t__", "node")
+    # a node never assigned is its own SCC
+    return nodes.select("node", component.alias("component"))

@@ -4,6 +4,10 @@ Reference: kgtk/cli/reachable_nodes.py:32-110 (DFS per root; the result
 set is order-free, so a batched BFS over ALL roots simultaneously is
 equivalent and embarrassingly parallel), kgtk/cli/paths.py:31-114
 (all paths ≤ max_hops between source/target pairs).
+
+Both are semi-naive ``iterate`` loops (one checkpoint per hop): only
+the rows the last hop added (``new``) join the edges, and the loop
+stops at the first hop that adds none, a scan of its checkpoint.
 """
 
 from __future__ import annotations
@@ -11,7 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgtk_spark.graph.connected_components import iterate, release_checkpoint
 from kgtk_spark.schema import resolve_column
+
+REACHABLE_MAX_HOPS = None  # None: until a hop adds no node
 
 
 def reachable_nodes(
@@ -19,7 +26,6 @@ def reachable_nodes(
     roots: list[str] | DataFrame,
     properties: list[str] | None = None,
     label_value: str = "reachable",
-    max_hops: int | None = None,
 ) -> DataFrame:
     """Emit (root, 'reachable', target) for every node reachable from
     each root. All roots expand in one frontier — one BFS for the whole
@@ -39,26 +45,23 @@ def reachable_nodes(
     else:
         root_df = spark.createDataFrame([(r,) for r in roots], "root string")
 
-    # frontier/visited carry (root, node) pairs.
-    frontier = root_df.select("root", F.col("root").alias("node")).localCheckpoint()
-    visited = frontier
-
-    hops = 0
-    while True:
-        hops += 1
-        if max_hops is not None and hops > max_hops:
-            break
-        nxt = (
-            frontier.join(pairs, frontier["node"] == pairs["from"])
-            .select("root", F.col("to").alias("node"))
-            .distinct()
-            .join(visited, ["root", "node"], "left_anti")
-            .localCheckpoint()
+    def hop(s: DataFrame) -> DataFrame:
+        # a pair is new when only this hop's expansion produced it
+        fresh = s.where(F.col("new"))
+        return (
+            fresh.join(pairs, fresh["node"] == pairs["from"])
+            .select("root", F.col("to").alias("node"), F.lit(True).alias("new"))
+            .union(s.select("root", "node", F.lit(False).alias("new")))
+            .groupBy("root", "node")
+            .agg(F.min("new").alias("new"))
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt).localCheckpoint()
-        frontier = nxt
+
+    # (root, node) pairs; a root reaches itself at hop 0
+    visited = iterate(
+        root_df.select("root", F.col("root").alias("node"), F.lit(True).alias("new")).localCheckpoint(),
+        hop, REACHABLE_MAX_HOPS, lambda s: s.where(F.col("new")).isEmpty(),
+    )
+    release_checkpoint(pairs)
 
     return (
         visited.join(root_df.select(F.col("root"), F.col("root").alias("node")),
@@ -105,41 +108,41 @@ def paths(
     else:
         srcs = spark.createDataFrame([(s,) for s in source_nodes], "node string")
     if isinstance(target_nodes, DataFrame):
-        target_df = target_nodes.toDF("node").distinct().localCheckpoint()
+        target_df = target_nodes.toDF("node").distinct()
     else:
         target_df = spark.createDataFrame(
             [(t,) for t in set(target_nodes)], "node string"
         )
 
-    # active: (end_node, path array of edge ids, node-visit array for cycle cut)
-    active = srcs.select(
-        F.col("node").alias("end"),
-        F.array().cast("array<string>").alias("path"),
-        F.array("node").alias("seen"),
-    )
-    complete = None
-    for _ in range(max_hops):
-        stepped = (
-            active.join(e, active["end"] == e["from"])
+    def hop(s: DataFrame) -> DataFrame:
+        fresh = s.where(F.col("new"))
+        return s.select("end", "path", "seen", F.lit(False).alias("new")).union(
+            fresh.join(e, fresh["end"] == e["from"])
             .where(~F.array_contains(F.col("seen"), F.col("to")))
             .select(
                 F.col("to").alias("end"),
                 F.concat(F.col("path"), F.array("edge_id")).alias("path"),
                 F.concat(F.col("seen"), F.array("to")).alias("seen"),
+                F.lit(True).alias("new"),
             )
-            .localCheckpoint()
         )
-        if stepped.isEmpty():
-            break
-        # semi-join keeps the target set distributed (no isin literal list)
-        hits = stepped.join(
-            target_df.select(F.col("node").alias("end")), "end", "semi"
-        )
-        complete = hits if complete is None else complete.union(hits)
-        active = stepped
 
-    if complete is None:
-        return spark.createDataFrame([], "node1 string, label string, node2 string")
+    # every path found: (end node, path of edge ids, nodes visited for
+    # the cycle cut, added by the last hop)
+    found = iterate(
+        srcs.select(
+            F.col("node").alias("end"),
+            F.array().cast("array<string>").alias("path"),
+            F.array("node").alias("seen"),
+            F.lit(True).alias("new"),
+        ).localCheckpoint(),
+        hop, max_hops, lambda s: s.where(F.col("new")).isEmpty(),
+    )
+    release_checkpoint(e)
+    # semi-join keeps the target set distributed (no isin literal list)
+    complete = found.where(F.size("path") > 0).join(
+        target_df.select(F.col("node").alias("end")), "end", "semi"
+    )
 
     # Deterministic path numbering in sorted-path order via the
     # two-phase zip_with_index (no unpartitioned window).

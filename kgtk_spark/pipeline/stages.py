@@ -456,7 +456,8 @@ def extract_triples(
 #   200k   1.64-2.06 s   1.03-1.59 s   1585 MB, 1186 MB
 #   500k   4.05-4.20 s   1.20-1.56 s   3196 MB, 1746 MB
 #   2M     3.59-4.68 s   2.19-2.59 s   4713 MB, 3711 MB
-# The paths cross near 100k rows, components_auto's driver_threshold.
+# The paths cross near 100k rows, the graph gate DRIVER_EDGE_LIMIT
+# (graph/connected_components.py).
 # Above the gate the bounded collect is thrown away: 0.16-0.18 s for
 # 100k rows (at 2M it would be 2.1 s).
 DRIVER_TRIPLE_LIMIT = 100_000

@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kgtk_spark.textops.sketches import HEX_WIDTH, hash60
+
 logger = logging.getLogger(__name__)
 
 # Deterministic 64-bit mixing (splitmix64) — stable across executors/runs.
@@ -246,7 +248,6 @@ def minhash_near_dup(
     verify: str = "exact",
     bucket_cap: int = 2000,
     log_skipped: bool = True,
-    driver_cc_threshold: int = 100_000,
     recover_residue: bool = True,
 ) -> DataFrame:
     """Near-duplicate clusters via MinHash banding + Jaccard verify.
@@ -402,8 +403,7 @@ def minhash_near_dup(
         verified.select(
             F.col("u").cast("string").alias("u"),
             F.col("v").cast("string").alias("v"),
-        ),
-        driver_threshold=driver_cc_threshold,
+        )
     )
     # components_auto has consumed the verified pairs, so nothing
     # downstream reads the shingles, signatures or candidates again
@@ -422,7 +422,6 @@ def minhash_near_dup(
     )
 
 
-_HEX_WIDTH = 15  # 15 hex digits = 60 bits, fits a signed long exactly
 SIMHASH_BITS = 60
 
 
@@ -433,8 +432,8 @@ def simhash_signatures(
 ) -> DataFrame:
     """(id, simhash: long) — 60-bit SimHash over word tokens.
 
-    Per-token hash = first 15 hex digits of md5 (60 bits), computed
-    JVM-side: the exact same hash is expressible in ANSI SQL/DuckDB
+    Per-token hash = ``sketches.hash60``, the first 15 hex digits of md5
+    (60 bits), computed JVM-side: the exact same hash is expressible in ANSI SQL/DuckDB
     (positional hex parse), so the signature is value-reproducible by
     the oracle. The per-bit majority vote + bit pack run as one numpy
     matrix op per batch — a pure-Catalyst formulation (aggregate +
@@ -444,9 +443,7 @@ def simhash_signatures(
     bits = SIMHASH_BITS
     d = df.select(
         F.col(id_col),
-        F.expr(
-            f"transform({_tok_expr(text_col)}, t -> cast(conv(substring(md5(t), 1, {_HEX_WIDTH}), 16, 10) as bigint))"
-        ).alias("__hs__"),
+        F.transform(F.expr(_tok_expr(text_col)), hash60).alias("__hs__"),
     )
     shifts = np.arange(bits, dtype=np.uint64)
     weights = (np.uint64(1) << shifts).astype(np.uint64)
@@ -475,8 +472,8 @@ def simhash_oracle_sql(table: str = "documents", id_col: str = "doc_id") -> str:
     """DuckDB twin of :func:`simhash_signatures` (same bit math)."""
     bits = SIMHASH_BITS
     hexparse = " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5(tok), {k}, 1)) - 1) * {16 ** (_HEX_WIDTH - k)}"
-        for k in range(1, _HEX_WIDTH + 1)
+        f"(strpos('0123456789abcdef', substr(md5(tok), {k}, 1)) - 1) * {16 ** (HEX_WIDTH - k)}"
+        for k in range(1, HEX_WIDTH + 1)
     )
     return (
         f"WITH toks AS (SELECT {id_col}, regexp_split_to_array(trim(text), '\\s+') AS t FROM {table}), "

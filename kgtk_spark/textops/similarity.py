@@ -64,13 +64,11 @@ def _hyperplanes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
 MATRIX_UDF_CELLS = 4096
 
 
-def lsh_signature(
-    vec_col: Column, planes: np.ndarray, matrix_udf: bool | None = None
-) -> Column:
+def lsh_signature(vec_col: Column, planes: np.ndarray) -> Column:
     """Random-hyperplane sign bits packed into a long.
 
-    Two equivalent evaluation paths, auto-selected by plane-matrix
-    size (``matrix_udf=None``) or forced for testing:
+    Two equivalent evaluation paths, selected by plane-matrix size
+    (a test forces one by monkeypatching ``MATRIX_UDF_CELLS``):
 
     - *expression* (small planes): per-plane JVM ``aggregate(zip_with)``
       dot products — no Python at all;
@@ -86,9 +84,7 @@ def lsh_signature(
     if len(planes) == 0:
         return F.lit(0).cast("long")
     n_bits, dim = planes.shape
-    if matrix_udf is None:
-        matrix_udf = n_bits * dim >= MATRIX_UDF_CELLS
-    if matrix_udf:
+    if n_bits * dim >= MATRIX_UDF_CELLS:
         m_t = planes.astype(np.float64).T.copy()  # (dim, bits)
         weights = (1 << np.arange(n_bits, dtype=np.int64))
 

@@ -17,17 +17,18 @@ distinct (group, hash) rows — never a collect_set of the whole group.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_HEX_WIDTH = 15  # 60 bits, exact in a BIGINT; same construction as SimHash
+HEX_WIDTH = 15  # 60 bits, exact in a BIGINT
 _SPACE = float(2**60)
 
 
-def _hash60(col: str) -> "F.Column":
-    return F.expr(
-        f"cast(conv(substring(md5(cast(`{col}` as string)), 1, {_HEX_WIDTH}), 16, 10) as bigint)"
-    )
+def hash60(c: Column) -> Column:
+    """The first ``HEX_WIDTH`` hex digits of md5(c) as a BIGINT: the one
+    60-bit hash of the KMV sketch, ``stable_sample`` and SimHash, which
+    DuckDB reproduces (md5 plus a positional hex parse)."""
+    return F.conv(F.substring(F.md5(c), 1, HEX_WIDTH), 16, 10).cast("long")
 
 
 def kmv_sketch(
@@ -35,7 +36,7 @@ def kmv_sketch(
 ) -> DataFrame:
     """One row per group: ``sketch`` = the k smallest distinct value
     hashes (sorted ascending), ``n_seen`` = how many the sketch holds."""
-    hashed = df.select(*group_cols, _hash60(value_col).alias("__h__")).distinct()
+    hashed = df.select(*group_cols, hash60(F.col(value_col).cast("string")).alias("__h__")).distinct()
     w = Window.partitionBy(*group_cols).orderBy("__h__")
     topk = hashed.withColumn("__rk__", F.row_number().over(w)).filter(
         F.col("__rk__") <= k
@@ -85,13 +86,5 @@ def stable_sample(
         raise ValueError(f"rate must be in [0,1], got {rate}")
     # column functions, not an interpolated SQL string: a salt holding a
     # quote (or a key_col holding a backtick) must stay DATA, not syntax
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))),
-            1,
-            _HEX_WIDTH,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.concat(F.lit(salt), F.col(key_col).cast("string")))
     return df.filter(h < F.lit(int(rate * _SPACE)).cast("long"))

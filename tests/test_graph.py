@@ -5,6 +5,8 @@ kgtk/cli/reachable_nodes.py)."""
 
 from __future__ import annotations
 
+import importlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,8 +17,13 @@ from kgtk_spark.graph import (
     pagerank,
     reachable_nodes,
 )
+from kgtk_spark.graph import reachable
 from kgtk_spark.graph.reachable import paths
 from kgtk_spark.graph.stats import hits
+
+# The module, not the function the package re-exports under its name:
+# its DRIVER_EDGE_LIMIT gates every graph path.
+CC = importlib.import_module("kgtk_spark.graph.connected_components")
 
 
 def edge_df(spark, pairs):
@@ -136,9 +143,10 @@ def test_reachable_nodes(spark):
     assert got == {("a", "b"), ("a", "c"), ("a", "d"), ("x", "y")}
 
 
-def test_reachable_nodes_max_hops(spark):
+def test_reachable_nodes_max_hops(spark, monkeypatch):
     df = edge_df(spark, [("a", "b"), ("b", "c"), ("c", "d")])
-    out = reachable_nodes(df, ["a"], max_hops=2).collect()
+    monkeypatch.setattr(reachable, "REACHABLE_MAX_HOPS", 2)
+    out = reachable_nodes(df, ["a"]).collect()
     assert {r["node2"] for r in out} == {"b", "c"}
 
 
@@ -184,27 +192,52 @@ def test_paths_and_reachable_dataframe_endpoints(spark):
     assert seq == ["e1", "e2"]
 
 
-def test_pagerank_driver_and_distributed_agree(spark):
+def test_pagerank_driver_and_distributed_agree(spark, monkeypatch):
     edges = spark.createDataFrame(
         [("a", "e", "b"), ("b", "e", "c"), ("c", "e", "a"), ("a", "e", "c"), ("d", "e", "a")],
         ["node1", "label", "node2"],
     )
     drv = {r["node"]: r["vertex_pagerank"] for r in pagerank(edges, max_iterations=10, tolerance=0.0).collect()}
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
     dist = {r["node"]: r["vertex_pagerank"]
-            for r in pagerank(edges, max_iterations=10, tolerance=0.0, driver_threshold=0).collect()}
+            for r in pagerank(edges, max_iterations=10, tolerance=0.0).collect()}
     assert set(drv) == set(dist)
     for k in drv:
         assert abs(drv[k] - dist[k]) < 1e-9
 
 
-def test_hits_driver_and_distributed_agree(spark):
+@pytest.mark.parametrize("tolerance", [1e-6, 1e-3])
+def test_pagerank_early_stop_driver_and_distributed_agree(spark, monkeypatch, tolerance):
+    """With early stopping on, both paths test the delta after the same
+    iterations and stop at the same one: on this graph, of 50, at
+    iteration 30 for the default tolerance and at 15 for 1e-3. Stopping
+    5 iterations earlier or later would move some rank by more than
+    1e-8."""
+    edges = spark.createDataFrame(
+        [("a", "e", "b"), ("b", "e", "c"), ("c", "e", "a"), ("a", "e", "c"), ("d", "e", "a")],
+        ["node1", "label", "node2"],
+    )
+    drv = {r["node"]: r["vertex_pagerank"]
+           for r in pagerank(edges, max_iterations=50, tolerance=tolerance).collect()}
+    full = {r["node"]: r["vertex_pagerank"]
+            for r in pagerank(edges, max_iterations=50, tolerance=0.0).collect()}
+    assert max(abs(drv[k] - full[k]) for k in drv) > 1e-8  # it did stop early
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+    dist = {r["node"]: r["vertex_pagerank"]
+            for r in pagerank(edges, max_iterations=50, tolerance=tolerance).collect()}
+    assert drv.keys() == dist.keys()
+    assert all(abs(drv[k] - dist[k]) < 1e-9 for k in drv)
+
+
+def test_hits_driver_and_distributed_agree(spark, monkeypatch):
     edges = spark.createDataFrame(
         [("a", "e", "b"), ("a", "e", "c"), ("b", "e", "c"), ("d", "e", "c")],
         ["node1", "label", "node2"],
     )
     drv = {r["node"]: (r["vertex_hubs"], r["vertex_auth"]) for r in hits(edges, max_iterations=8).collect()}
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
     dist = {r["node"]: (r["vertex_hubs"], r["vertex_auth"])
-            for r in hits(edges, max_iterations=8, driver_threshold=0).collect()}
+            for r in hits(edges, max_iterations=8).collect()}
     assert set(drv) == set(dist)
     for k in drv:
         assert abs(drv[k][0] - dist[k][0]) < 1e-9
@@ -234,7 +267,7 @@ def test_pagerank_and_hits_driver_count_a_null_endpoint_as_one_vertex(spark):
     assert all(abs(h[k][i] - want[k][i]) < 1e-12 for k in want for i in (0, 1))
 
 
-def test_components_auto_driver_and_fixpoint_agree(spark):
+def test_components_auto_driver_and_fixpoint_agree(spark, monkeypatch):
     from kgtk_spark.graph.connected_components import components_auto
 
     pairs = spark.createDataFrame(
@@ -242,15 +275,13 @@ def test_components_auto_driver_and_fixpoint_agree(spark):
         "u string, v string",
     )
     drv = {(r["node"], r["component"]) for r in components_auto(pairs).collect()}
-    dist = {
-        (r["node"], r["component"])
-        for r in components_auto(pairs, driver_threshold=0).collect()
-    }
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+    dist = {(r["node"], r["component"]) for r in components_auto(pairs).collect()}
     assert drv == dist
     assert ("c", "a") in drv and ("y", "x") in drv and ("r", "p") in drv
 
 
-def test_strongly_connected_components(spark):
+def test_strongly_connected_components(spark, monkeypatch):
     from kgtk_spark.graph.connected_components import scc_auto
 
     # two cycles bridged by one-way edges + a tail:
@@ -262,8 +293,9 @@ def test_strongly_connected_components(spark):
     expect = {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "f": "f"}
     drv = {r["node"]: r["component"] for r in scc_auto(pairs).collect()}
     assert drv == expect
-    dist = {r["node"]: r["component"]
-            for r in scc_auto(pairs, driver_threshold=0).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+        dist = {r["node"]: r["component"] for r in scc_auto(pairs).collect()}
     assert dist == expect
 
     # weak components on the same graph collapse everything into one —
@@ -285,7 +317,7 @@ def test_strongly_connected_components(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
 
 
-def test_scc_random_digraph_driver_vs_distributed(spark):
+def test_scc_random_digraph_driver_vs_distributed(spark, monkeypatch):
     import random
 
     from kgtk_spark.graph.connected_components import scc_auto
@@ -295,12 +327,13 @@ def test_scc_random_digraph_driver_vs_distributed(spark):
                   for _ in range(80)})
     pairs = spark.createDataFrame(edges, "u string, v string")
     drv = {(r["node"], r["component"]) for r in scc_auto(pairs).collect()}
-    dist = {(r["node"], r["component"])
-            for r in scc_auto(pairs, driver_threshold=0, max_rounds=60).collect()}
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+    monkeypatch.setattr(CC, "SCC_MAX_ROUNDS", 60)
+    dist = {(r["node"], r["component"]) for r in scc_auto(pairs).collect()}
     assert drv == dist
 
 
-def test_scc_chain_of_cycles_worst_case(spark):
+def test_scc_chain_of_cycles_worst_case(spark, monkeypatch):
     """Adversarial coloring input: many 3-cycles chained by one-way
     edges. The global min id's color floods the whole chain, so the
     distributed loop peels exactly ONE SCC per round — the round cap
@@ -323,9 +356,10 @@ def test_scc_chain_of_cycles_worst_case(spark):
     # the loop must KEEP PEELING distributed (no unbounded collect — r5
     # review item #3), only handing over once the residue fits.
     rounds: list = []
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+    monkeypatch.setattr(CC, "SCC_MAX_ROUNDS", 3)
     capped = {(r["node"], r["component"])
-              for r in scc_auto(pairs, driver_threshold=0, max_rounds=3,
-                                round_log=rounds).collect()}
+              for r in scc_auto(pairs, round_log=rounds).collect()}
     assert capped == drv
     # threshold 0 means the driver fallback is never taken: every round
     # past the cap still ran distributed and live stayed > threshold
@@ -335,9 +369,9 @@ def test_scc_chain_of_cycles_worst_case(spark):
     # mid-size threshold: peel past the cap until the residue fits,
     # then finish on the driver with a BOUNDED collect
     rounds = []
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 10)
     capped2 = {(r["node"], r["component"])
-               for r in scc_auto(pairs, driver_threshold=10, max_rounds=3,
-                                 round_log=rounds).collect()}
+               for r in scc_auto(pairs, round_log=rounds).collect()}
     assert capped2 == drv
     assert len(rounds) > 3  # kept peeling past the cap
     # every post-cap distributed round was justified: live > threshold
@@ -345,9 +379,10 @@ def test_scc_chain_of_cycles_worst_case(spark):
 
     # Uncapped: one SCC peels per round → exactly n_cycles rounds.
     rounds = []
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+    monkeypatch.setattr(CC, "SCC_MAX_ROUNDS", 50)
     full = {(r["node"], r["component"])
-            for r in scc_auto(pairs, driver_threshold=0, max_rounds=50,
-                              round_log=rounds).collect()}
+            for r in scc_auto(pairs, round_log=rounds).collect()}
     assert full == drv
     assert len(rounds) == n_cycles
     # each round strictly shrinks the live edge set
@@ -535,30 +570,38 @@ def test_components_fixpoint_releases_round_checkpoints(spark):
     )
     held = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: E731
     before = held()
-    out = _components_fixpoint(pairs)
+    out = _components_fixpoint(pairs.localCheckpoint())
     assert len(held() - before) <= 1  # only the final round's checkpoint
     comp = {r["node"]: r["component"] for r in out.collect()}
     assert len(comp) == n and set(comp.values()) == {"n000"}
 
 
-def test_graph_loops_release_superseded_checkpoints(spark):
-    """Above the driver gate, pagerank, hits and scc_auto release every
-    checkpoint their result no longer reads. After a noop write of the
-    result (which reads it back), pagerank and hits hold only the
-    result's own checkpoint, and scc_auto its distinct edges and its
-    last assignment."""
-    from kgtk_spark.graph.connected_components import scc_auto
+def test_graph_loops_release_superseded_checkpoints(spark, monkeypatch):
+    """Above the driver gate, every graph loop releases each checkpoint
+    its result no longer reads. After a noop write of the result (which
+    reads it back), each holds only the last state of its loop, and
+    paths also the checkpoint that zip_with_index numbers paths in."""
+    from kgtk_spark.graph.connected_components import components_auto, scc_auto
 
     edges = spark.createDataFrame(
         [("a", "e", "b"), ("b", "e", "c"), ("c", "e", "a"), ("a", "e", "c"), ("d", "e", "a")],
         "node1 string, label string, node2 string",
     )
     pairs = edges.select(F.col("node1").alias("u"), F.col("node2").alias("v"))
+    # a 20-hop path, and a 5-hop one with an id column
+    hops = edge_df(spark, [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(20)])
+    ids = spark.createDataFrame(
+        [(f"n{i}", "p", f"n{i + 1}", f"e{i}") for i in range(5)], ["node1", "label", "node2", "id"]
+    )
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
     held = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: E731
     for name, run, most in (
-        ("pagerank", lambda: pagerank(edges, max_iterations=3, driver_threshold=0), 1),
-        ("hits", lambda: hits(edges, max_iterations=3, checkpoint_every=1, driver_threshold=0), 1),
-        ("scc_auto", lambda: scc_auto(pairs, driver_threshold=0), 2),
+        ("pagerank", lambda: pagerank(edges, max_iterations=3), 1),
+        ("hits", lambda: hits(edges, max_iterations=3), 1),
+        ("scc_auto", lambda: scc_auto(pairs), 1),
+        ("components_auto", lambda: components_auto(pairs), 1),
+        ("reachable_nodes", lambda: reachable_nodes(hops, ["n00"]), 1),
+        ("paths", lambda: paths(ids, ["n0"], ["n2", "n5"], max_hops=5), 2),
     ):
         before = held()
         run().write.format("noop").mode("overwrite").save()

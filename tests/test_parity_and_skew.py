@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from kgtk_spark.operators.columns import kgtk_every_nth
 from kgtk_spark.schema import read_kgtk_tsv, write_kgtk_tsv
 from kgtk_spark.sources.iceberg import iceberg_available, read_table, write_table
+from kgtk_spark.textops import skew
 from kgtk_spark.textops.skew import salted_join
 from tests.conftest import REF_DATA, requires_reference
 
@@ -31,12 +32,13 @@ def test_tsv_roundtrip_byte_parity(spark, sample_edges, tmp_path):
     assert sorted(got_lines[1:]) == sorted(orig_lines[1:])  # data bytes
 
 
-def test_salted_join_spreads_hot_key(spark):
+def test_salted_join_spreads_hot_key(spark, monkeypatch):
     # one hot key with 10k rows: unsalted join puts them in ONE task
     # partition; salting must spread them across several.
     left = spark.range(10_000).select(F.lit("hot").alias("k"), F.col("id"))
     right = spark.createDataFrame([("hot", "v")], "k string, v string")
-    out = salted_join(left.repartition(8), right, "k", salt_buckets=8)
+    monkeypatch.setattr(skew, "SALT_BUCKETS", 8)
+    out = salted_join(left.repartition(8), right, "k")
     assert out.count() == 10_000  # correctness: same as plain join
 
     # The shuffle key is (k, salt); verify the hot key's rows spread

@@ -178,30 +178,30 @@ def test_brute_force_topk(spark, emb):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_lsh_signature_matrix_udf_parity_low_dim(spark, emb):
+def test_lsh_signature_matrix_udf_parity_low_dim(spark, emb, monkeypatch):
     """the Arrow matmul path and the JVM expression path must produce
     IDENTICAL packed signatures (same planes, same sign convention)."""
-    import numpy as np
-
+    from kgtk_spark.textops import similarity
     from kgtk_spark.textops.similarity import _hyperplanes, lsh_signature
 
     dim = len(emb.select("embedding").first()[0])
     planes = _hyperplanes(dim, 6, seed=7)
+    assert dim * 6 < similarity.MATRIX_UDF_CELLS  # the expression path
     expr = {r["vec_id"]: r["s"] for r in emb.select(
-        "vec_id", lsh_signature(F.col("embedding"), planes,
-                                matrix_udf=False).alias("s")).collect()}
+        "vec_id", lsh_signature(F.col("embedding"), planes).alias("s")).collect()}
+    monkeypatch.setattr(similarity, "MATRIX_UDF_CELLS", 0)
     mat = {r["vec_id"]: r["s"] for r in emb.select(
-        "vec_id", lsh_signature(F.col("embedding"), planes,
-                                matrix_udf=True).alias("s")).collect()}
+        "vec_id", lsh_signature(F.col("embedding"), planes).alias("s")).collect()}
     assert expr == mat and len(expr) > 0
 
 
-def test_lsh_signature_high_dim_auto_matrix_and_small_plan(spark):
+def test_lsh_signature_high_dim_auto_matrix_and_small_plan(spark, monkeypatch):
     """dim=768 x bits=16 crosses MATRIX_UDF_CELLS: the auto path must
     pick the matrix UDF, the plan must stay one small node (not tens of
     thousands of literals), and results must match the expression path."""
     import numpy as np
 
+    from kgtk_spark.textops import similarity
     from kgtk_spark.textops.similarity import (
         MATRIX_UDF_CELLS, _hyperplanes, lsh_signature,
     )
@@ -222,9 +222,9 @@ def test_lsh_signature_high_dim_auto_matrix_and_small_plan(spark):
     assert "ArrowEvalPython" in plan or "pythonUDF" in plan.lower()
     assert len(plan) < 20_000, f"plan blew up: {len(plan)} chars"
     a = {r["vec_id"]: r["s"] for r in auto.collect()}
+    monkeypatch.setattr(similarity, "MATRIX_UDF_CELLS", dim * bits + 1)
     e = {r["vec_id"]: r["s"] for r in df.select(
-        "vec_id", lsh_signature(F.col("embedding"), planes,
-                                matrix_udf=False).alias("s")).collect()}
+        "vec_id", lsh_signature(F.col("embedding"), planes).alias("s")).collect()}
     assert a == e
 
 
@@ -293,12 +293,15 @@ def test_fingerprint_normalizes_whitespace(spark):
     assert out[1] == out[2] != out[3]
 
 
-def test_salted_join_matches_plain_join(spark):
+def test_salted_join_matches_plain_join(spark, monkeypatch):
+    from kgtk_spark.textops import skew
+
     left = spark.createDataFrame(
         [(1, "hub"), (2, "hub"), (3, "rare")], "id long, k string"
     )
     right = spark.createDataFrame([("hub", "H"), ("rare", "R")], "k string, v string")
-    got = {(r["id"], r["v"]) for r in salted_join(left, right, "k", salt_buckets=4).collect()}
+    monkeypatch.setattr(skew, "SALT_BUCKETS", 4)
+    got = {(r["id"], r["v"]) for r in salted_join(left, right, "k").collect()}
     expect = {(r["id"], r["v"]) for r in left.join(right, "k").collect()}
     assert got == expect
 
