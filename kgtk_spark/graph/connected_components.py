@@ -487,11 +487,15 @@ def scc_auto(pairs: DataFrame, round_log: list | None = None) -> DataFrame:
             "node", "component",
             F.when(F.col("component").isNull(), F.col("node")).alias("color"), none.alias("prev"),
         )
-        nodes = iterate(seeded, color, None, lambda s: s.where(F.col("color") != F.col("prev")).isEmpty())
+        nodes = iterate(
+            seeded, color, None, lambda s: s.where(F.col("color") != F.col("prev")).isEmpty()
+        )
         # each color's root is the first node of its SCC
         roots = nodes.select(
             "node",
-            F.coalesce("component", F.when(F.col("node") == F.col("color"), F.col("node"))).alias("component"),
+            F.coalesce(
+                "component", F.when(F.col("node") == F.col("color"), F.col("node"))
+            ).alias("component"),
             "color", F.col("component").alias("prev"),
         )
         nodes = iterate(

@@ -433,9 +433,9 @@ def simhash_signatures(
     """(id, simhash: long) — 60-bit SimHash over word tokens.
 
     Per-token hash = ``sketches.hash60``, the first 15 hex digits of md5
-    (60 bits), computed JVM-side: the exact same hash is expressible in ANSI SQL/DuckDB
-    (positional hex parse), so the signature is value-reproducible by
-    the oracle. The per-bit majority vote + bit pack run as one numpy
+    (60 bits), computed JVM-side: the exact same hash is expressible in
+    ANSI SQL/DuckDB (positional hex parse), so the signature is
+    value-reproducible by the oracle. The per-bit majority vote + bit pack run as one numpy
     matrix op per batch — a pure-Catalyst formulation (aggregate +
     zip_with over 60 bits/token) measured ~40× slower because
     higher-order-function expressions don't codegen.

@@ -36,7 +36,9 @@ def kmv_sketch(
 ) -> DataFrame:
     """One row per group: ``sketch`` = the k smallest distinct value
     hashes (sorted ascending), ``n_seen`` = how many the sketch holds."""
-    hashed = df.select(*group_cols, hash60(F.col(value_col).cast("string")).alias("__h__")).distinct()
+    hashed = df.select(
+        *group_cols, hash60(F.col(value_col).cast("string")).alias("__h__")
+    ).distinct()
     w = Window.partitionBy(*group_cols).orderBy("__h__")
     topk = hashed.withColumn("__rk__", F.row_number().over(w)).filter(
         F.col("__rk__") <= k
