@@ -28,13 +28,12 @@ from pyspark.sql import types as T
 
 from kgtk_spark.values import unstringify_udf
 
+LABEL_PROPERTY = "label"
+DESCRIPTION_PROPERTY = "description"
+ISA_PROPERTY = "P31"
 
-def build_sentences(
-    edges: DataFrame,
-    label_property: str = "label",
-    description_property: str = "description",
-    isa_property: str = "P31",
-) -> DataFrame:
+
+def build_sentences(edges: DataFrame) -> DataFrame:
     """(node, sentence) per entity: "<label>, <description>, is a <isa>".
 
     Mirrors the reference's sentence template
@@ -47,10 +46,10 @@ def build_sentences(
             .agg(F.min(unstringify_udf(F.col("node2"))).alias(p))
         )
 
-    labels = prop(label_property)
-    descs = prop(description_property)
+    labels = prop(LABEL_PROPERTY)
+    descs = prop(DESCRIPTION_PROPERTY)
     isas = (
-        edges.filter(F.col("label") == isa_property)
+        edges.filter(F.col("label") == ISA_PROPERTY)
         .groupBy(F.col("node1").alias("node"))
         .agg(F.array_join(F.array_sort(F.collect_set("node2")), " and ").alias("isa"))
     )
@@ -61,8 +60,8 @@ def build_sentences(
             "node",
             F.concat_ws(
                 ", ",
-                F.col(label_property),
-                F.col(description_property),
+                F.col(LABEL_PROPERTY),
+                F.col(DESCRIPTION_PROPERTY),
                 F.when(F.col("isa").isNotNull(), F.concat(F.lit("is a "), F.col("isa"))),
             ).alias("sentence"),
         )
@@ -124,7 +123,6 @@ def text_embedding(
     edges: DataFrame,
     dim: int = 64,
     backend: str = "hash_kernel",
-    **sentence_kwargs,
 ) -> DataFrame:
     """(node, sentence, embedding: array<float>) per entity.
 
@@ -134,7 +132,7 @@ def text_embedding(
     to ``_BACKENDS`` on a cluster with the model libraries installed.
     """
     embed = _BACKENDS[backend]
-    sents = build_sentences(edges, **sentence_kwargs)
+    sents = build_sentences(edges)
     schema = T.StructType(
         [
             T.StructField("node", T.StringType()),

@@ -12,6 +12,7 @@ stops at the first hop that adds none, a scan of its checkpoint.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,7 +44,7 @@ def reachable_nodes(
     if isinstance(roots, DataFrame):
         root_df = roots.toDF("root")
     else:
-        root_df = spark.createDataFrame([(r,) for r in roots], "root string")
+        root_df = spark.createDataFrame(pa.table({"root": pa.array(roots, pa.string())}))
 
     def hop(s: DataFrame) -> DataFrame:
         # a pair is new when only this hop's expansion produced it
@@ -106,12 +107,12 @@ def paths(
     if isinstance(source_nodes, DataFrame):
         srcs = source_nodes.toDF("node").distinct()
     else:
-        srcs = spark.createDataFrame([(s,) for s in source_nodes], "node string")
+        srcs = spark.createDataFrame(pa.table({"node": pa.array(source_nodes, pa.string())}))
     if isinstance(target_nodes, DataFrame):
         target_df = target_nodes.toDF("node").distinct()
     else:
         target_df = spark.createDataFrame(
-            [(t,) for t in set(target_nodes)], "node string"
+            pa.table({"node": pa.array(list(set(target_nodes)), pa.string())})
         )
 
     def hop(s: DataFrame) -> DataFrame:

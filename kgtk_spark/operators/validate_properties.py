@@ -58,6 +58,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -452,7 +453,7 @@ def dataset_violations(
     required = sorted({p.label for p in patterns if p.mustoccur})
     if not required:
         return spark.createDataFrame([], "property string, rule string")
-    req = spark.createDataFrame([(r,) for r in required], "property string")
+    req = spark.createDataFrame(pa.table({"property": pa.array(required, pa.string())}))
     present = edges.select(F.col("label").alias("property")).distinct()
     return req.join(present, "property", "left_anti").withColumn(
         "rule", F.lit("mustoccur")

@@ -22,7 +22,8 @@ memory (no ``out_dir``; stages 1-3 are not run, since extract_triples
 reads the raw pages and nothing reads the mention spans; this is
 ``run_pipeline_fused``), parquet directories under ``out_dir``, or
 catalog tables (``table_namespace``). The two writing sinks commit each
-stage to a manifest and resume what is still committed.
+stage as one row of the commit table ``out_dir/_manifest`` and resume
+what is still committed.
 """
 
 from kgtk_spark.pipeline.webgen import (

@@ -23,50 +23,74 @@ are canonicalized with the dictionary size as the rewrite-map bound and
 materialized. canonicalize checkpoints them once; when it resolves the
 KG on the driver it releases that checkpoint before it returns.
 
-The writing sinks commit each stage to a manifest under
-``out_dir/_manifest`` (stage, fingerprint, rows, partitions, duration)
-after its per-file lineage under ``out_dir/_manifest_lineage``. A rerun
-resumes a stage when its latest commit has the current fingerprint and
-the files the stage holds now are exactly the files that commit wrote,
-so what a run that crashed mid-write left behind is recomputed, never
-served. Fingerprints chain: stage_fp = sha256(stage, upstream_fp,
-config), and the chain starts from the input fingerprint. The alias
-dictionary (row count and an order-independent row hash) enters at
-``mentions``, the first stage that reads it, so a new input, dictionary
-or config recomputes everything below where it enters; ``text`` resumes
-across dictionary changes.
+The writing sinks commit each stage as one row of the commit table
+``out_dir/_manifest``: stage, fingerprint, time, duration and the files
+the stage wrote with their row counts. A rerun resumes a stage when its
+latest commit has the current fingerprint and the files the stage holds
+now are exactly the files that commit wrote, so what a run that crashed
+mid-write left behind is recomputed, never served. Fingerprints chain:
+stage_fp = sha256(stage, upstream_fp, config), and the chain starts from
+the input fingerprint and a digest of this package's source, so an edit
+to any stage or helper recomputes everything. The alias dictionary (row
+count and an order-independent row hash) enters at ``mentions``, the
+first stage that reads it, so a new input, dictionary or config
+recomputes everything below where it enters; ``text`` resumes across
+dictionary changes.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import importlib.resources
 import os
 import time
 from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from kgtk_spark.pipeline import stages as S
-from kgtk_spark.sources.iceberg import iceberg_available, read_table, write_table
+from kgtk_spark.sources.iceberg import read_table, write_table
 
 STAGES = ("text", "mentions", "linked", "triples", "canonical", "edges")
 # run only by a writing sink: in memory triples reads the raw pages and
 # nothing reads the mention spans
 _WRITTEN_ONLY = ("text", "mentions", "linked")
 
-MANIFEST_SCHEMA = (
-    "stage string, fingerprint string, rows long, partitions int, "
-    "duration_sec double, status string, committed_at double"
-)
-LINEAGE_SCHEMA = (
-    "stage string, fingerprint string, file string, rows long, committed_at double"
-)
+# a commit row written before ``files`` existed reads it as null, which
+# matches no stage's files, so that stage recomputes
+COMMIT_SCHEMA = pa.schema([
+    ("stage", pa.string()),
+    ("fingerprint", pa.string()),
+    ("committed_at", pa.float64()),
+    ("duration_sec", pa.float64()),
+    ("files", pa.list_(pa.struct([("file", pa.string()), ("rows", pa.int64())]))),
+])
 
 
 def _fp(*parts: str) -> str:
     return hashlib.sha256("\x1f".join(parts).encode()).hexdigest()[:16]
+
+
+@functools.cache
+def _code_version() -> str:
+    """Digest of every ``.py`` file of this package, read through
+    ``importlib.resources`` so that a zipped install hashes too."""
+    h = hashlib.sha256()
+
+    def walk(node):
+        for child in sorted(node.iterdir(), key=lambda c: c.name):
+            if child.is_dir():
+                walk(child)
+            elif child.name.endswith(".py"):
+                h.update(child.name.encode() + b"\0" + child.read_bytes())
+
+    walk(importlib.resources.files("kgtk_spark"))
+    return h.hexdigest()[:16]
 
 
 def _path(uri: str) -> str:
@@ -75,65 +99,49 @@ def _path(uri: str) -> str:
 
 
 class StageManifest:
+    """The commit table: one row per stage commit, appended as one file,
+    so the write job's single rename publishes the commit."""
+
     def __init__(self, spark: SparkSession, out_dir: str):
         self.spark = spark
         self.path = os.path.join(out_dir, "_manifest")
 
-    def _latest(self) -> DataFrame:
-        return (
-            self.spark.read.parquet(self.path)
-            .filter(F.col("status") == "committed")
+    def committed_files(self) -> dict[str, tuple[str, set[str] | None]]:
+        """stage → (fingerprint, files) of each stage's latest commit by
+        ``committed_at`` (bounded: one row per stage)."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        # a fresh out_dir has no table: reading it would log a stack trace
+        if not path.getFileSystem(self.spark._jsc.hadoopConfiguration()).exists(path):
+            return {}
+        commit = F.struct("fingerprint", F.col("files.file").alias("files"))
+        rows = (
+            self.spark.read.schema(from_arrow_schema(COMMIT_SCHEMA)).parquet(self.path)
             .groupBy("stage")
-            .agg(
-                F.max_by("fingerprint", "committed_at").alias("fingerprint"),
-                F.max("committed_at").alias("committed_at"),
-            )
+            .agg(F.max_by(commit, "committed_at").alias("c"))
+            .select("stage", "c.*")
+            .collect()
         )
-
-    def committed(self) -> dict[str, str]:
-        """stage → fingerprint of each stage's latest commit."""
-        try:
-            rows = self._latest().collect()
-        except Exception:
-            return {}
-        return {r["stage"]: r["fingerprint"] for r in rows}
-
-    def committed_files(self) -> dict[tuple[str, str], set[str]]:
-        """(stage, fingerprint) of each stage's latest commit → the files
-        that commit wrote (bounded: the stages × their partitions)."""
-        try:
-            lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path + "_lineage")
-            rows = (
-                self._latest()
-                .join(lineage, ["stage", "fingerprint", "committed_at"])
-                .select("stage", "fingerprint", "file")
-                .collect()
-            )
-        except AnalysisException:
-            return {}
-        files: dict[tuple[str, str], set[str]] = {}
-        for r in rows:
-            files.setdefault((r["stage"], r["fingerprint"]), set()).add(r["file"])
-        return files
+        return {
+            r["stage"]: (r["fingerprint"], None if r["files"] is None else set(r["files"]))
+            for r in rows
+        }
 
     def commit(self, stage: str, fingerprint: str, per_file: list, duration: float):
-        """One lineage row per output file (``per_file`` = [(file, rows),
-        ...]), then the manifest row that makes the commit visible."""
-        at = time.time()
-        self.spark.createDataFrame(
-            [(stage, fingerprint, f, int(n), at) for f, n in per_file], LINEAGE_SCHEMA
-        ).write.mode("append").parquet(self.path + "_lineage")
-        rows = sum(n for _, n in per_file)
-        self.spark.createDataFrame(
-            [(stage, fingerprint, rows, len(per_file), float(duration), "committed", at)],
-            MANIFEST_SCHEMA,
-        ).write.mode("append").parquet(self.path)
+        """Append the commit row of ``stage`` (``per_file`` = [(file,
+        rows), ...]); one row is one partition, so one file."""
+        self.spark.createDataFrame(pa.table({
+            "stage": [stage],
+            "fingerprint": [fingerprint],
+            "committed_at": [time.time()],
+            "duration_sec": [float(duration)],
+            "files": [[{"file": f, "rows": int(n)} for f, n in per_file]],
+        }, schema=COMMIT_SCHEMA)).write.mode("append").parquet(self.path)
 
 
 def _run_stage(
     spark: SparkSession,
     manifest: StageManifest,
-    committed: dict[tuple[str, str], set[str]],
+    committed: dict[str, tuple[str, set[str] | None]],
     out_dir: str,
     name: str,
     fingerprint: str,
@@ -145,15 +153,15 @@ def _run_stage(
     output as read back from the sink."""
     where = dict(
         identifier=f"{table_namespace}.{name}" if table_namespace else None,
-        path_fallback=os.path.join(out_dir, name),
+        path=os.path.join(out_dir, name),
         catalog=catalog,
-        session_catalog=bool(table_namespace) and not iceberg_available(spark, catalog),
     )
     files = lambda df: {_path(f) for f in df.inputFiles()}  # noqa: E731
-    if (name, fingerprint) in committed:
+    last = committed.get(name)
+    if last and last[0] == fingerprint:
         try:
             out = read_table(spark, **where)
-            if files(out) == committed[(name, fingerprint)]:
+            if files(out) == last[1]:
                 return out
         except AnalysisException:
             pass  # the output is gone: recompute
@@ -161,7 +169,7 @@ def _run_stage(
     write_table(compute(), **where)
     out = read_table(spark, **where)
     # One aggregation gives the rows per file; inputFiles adds the files
-    # without rows, so the lineage names every file the stage holds.
+    # without rows, so the commit names every file the stage holds.
     rows = {_path(r[0]): r[1] for r in out.groupBy(F.input_file_name()).count().collect()}
     per_file = [(f, rows.get(f, 0)) for f in sorted(files(out))]
     manifest.commit(name, fingerprint, per_file, time.time() - t0)
@@ -174,7 +182,6 @@ def run_pipeline(
     alias_dict: DataFrame,
     out_dir: str | None = None,
     n_buckets: int = 32,
-    resume: bool = True,
     input_fingerprint: str = "",
     table_namespace: str | None = None,
     catalog: str = "iceberg",
@@ -186,7 +193,8 @@ def run_pipeline(
 
     ``input_fingerprint`` should identify the input snapshot (e.g. its
     generator seed/row count or an Iceberg snapshot id); stages chain
-    from it, so a new input recomputes everything.
+    from it and the package's source digest, so a new input or a code
+    edit recomputes everything.
 
     ``alias_count``, the dictionary's row count when the caller knows
     it, spares the memory sink its sizing job. A writing sink sizes and
@@ -228,8 +236,9 @@ def run_pipeline(
         "edges": lambda: S.materialize(out["canonical"], n_buckets=n_buckets),
     }
     manifest = StageManifest(spark, out_dir) if out_dir is not None else None
-    committed = manifest.committed_files() if manifest and resume else {}
-    fp = _fp(input_fingerprint)
+    committed = manifest.committed_files() if manifest else {}
+    # only a writing sink reads the fingerprints
+    fp = _fp(input_fingerprint, _code_version()) if manifest else ""
     for name in STAGES:
         # the dictionary enters the chain at mentions: text never reads it
         fp = _fp(name, fp, {"mentions": digest, "edges": str(n_buckets)}.get(name, ""))

@@ -1041,9 +1041,10 @@ def q_cskg_visualgenome(spark, sf_dir):
             )
         ).alias("relationships"),
     )
-    attr_syn = spark.createDataFrame(
-        [("big", "big.a.01"), ("running", "run.v.01")], "attr string, synset string"
-    )
+    attr_syn = spark.createDataFrame(pa.table({
+        "attr": pa.array(["big", "running"], pa.string()),
+        "synset": pa.array(["big.a.01", "run.v.01"], pa.string()),
+    }))
     return import_visualgenome(scene, attr_syn)
 
 
@@ -1111,9 +1112,10 @@ def q_wikidata_rdf(spark, sf_dir):
     # the plan the driver must optimize — this query is fixed-overhead
     # dominated (355 rows), so plan size IS its cost.
     edges = edges.localCheckpoint()
-    props = spark.createDataFrame(
-        [("P17", "item"), ("P1082", "quantity")], "node1 string, node2 string"
-    )
+    props = spark.createDataFrame(pa.table({
+        "node1": pa.array(["P17", "P1082"], pa.string()),
+        "node2": pa.array(["item", "quantity"], pa.string()),
+    }))
     return generate_wikidata_triples(edges, props)
 
 

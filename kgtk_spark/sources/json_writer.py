@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -124,9 +125,9 @@ def write_kgtk_json(
     if fmt.startswith("jsonl"):
         out = lines
         if fmt == "jsonl":
-            header = df.sparkSession.createDataFrame(
-                [(json.dumps(df.columns, separators=(",", ":")),)], "line string"
-            )
+            header = df.sparkSession.createDataFrame(pa.table({
+                "line": pa.array([json.dumps(df.columns, separators=(",", ":"))], pa.string())
+            }))
             out = header.unionByName(lines)
         if single_file:
             out = out.coalesce(1)

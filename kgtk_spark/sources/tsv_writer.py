@@ -19,6 +19,7 @@ Everything is a Catalyst expression per column; the line assembly is a
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -92,7 +93,9 @@ def write_kgtk_formatted(
 ) -> None:
     """Write with a header line in the requested tsv/csv variant."""
     sep = "," if fmt == "csv" else "\t"
-    header = df.sparkSession.createDataFrame([(sep.join(df.columns),)], "line string")
+    header = df.sparkSession.createDataFrame(
+        pa.table({"line": pa.array([sep.join(df.columns)], pa.string())})
+    )
     out = header.unionByName(format_lines(df, fmt))
     if single_file:
         out = out.coalesce(1)

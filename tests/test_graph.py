@@ -560,6 +560,66 @@ def test_driver_component_results_are_jvm_only(spark):
             assert out.count() == n
 
 
+def _nation_region(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({
+        "n_nationkey": pa.array([0, 1], pa.int32()),
+        "n_name": ["ALGERIA", "ARGENTINA"],
+        "n_regionkey": pa.array([0, 1], pa.int32()),
+    }), tmp_path / "nation.parquet")
+    pq.write_table(pa.table({
+        "r_regionkey": pa.array([0, 1], pa.int32()),
+        "r_name": ["AFRICA", "AMERICA"],
+    }), tmp_path / "region.parquet")
+    return str(tmp_path)
+
+
+def _driver_built_sites():
+    from kgtk_spark import queries as Q
+    from kgtk_spark.operators.validate_properties import PropertyPattern, dataset_violations
+    from kgtk_spark.pipeline.runner import StageManifest
+    from kgtk_spark.sources.json_writer import write_kgtk_json
+    from kgtk_spark.sources.tsv_writer import write_kgtk_formatted
+
+    return {
+        "reachable_nodes": lambda edges, tmp: reachable_nodes(edges, ["a"]).collect(),
+        "paths": lambda edges, tmp: paths(edges, ["a"], ["c"]).collect(),
+        "tsv_header": lambda edges, tmp: write_kgtk_formatted(edges, str(tmp / "t")),
+        "json_header": lambda edges, tmp: write_kgtk_json(edges, str(tmp / "j"), "jsonl"),
+        "dataset_violations": lambda edges, tmp: dataset_violations(
+            edges, [PropertyPattern("P9", mustoccur=True)]).collect(),
+        "visualgenome_attr_synsets": lambda edges, tmp: Q.q_cskg_visualgenome(
+            edges.sparkSession, _nation_region(edges.sparkSession, tmp)).collect(),
+        "wikidata_rdf_props": lambda edges, tmp: Q.q_wikidata_rdf(
+            edges.sparkSession, _nation_region(edges.sparkSession, tmp)).collect(),
+        "stage_commit": lambda edges, tmp: StageManifest(edges.sparkSession, str(tmp)).commit(
+            "text", "fp", [("part-0", 3)], 0.0),
+    }
+
+
+@pytest.mark.parametrize("site", sorted(_driver_built_sites()))
+def test_driver_built_frames_are_jvm_only(spark, tmp_path, monkeypatch, site):
+    """Every frame a library call builds from driver data is built from
+    Arrow: a local relation, with no Python RDD scan in its plan, so an
+    action on it starts no Python worker."""
+    edges = edge_df(spark, [("a", "b"), ("b", "c")]).withColumn("id", F.lit("e"))
+    built = []
+    create = type(spark).createDataFrame
+
+    def recording(self, *args, **kwargs):
+        built.append(create(self, *args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(type(spark), "createDataFrame", recording)
+    _driver_built_sites()[site](edges, tmp_path)
+    monkeypatch.undo()
+    assert built, site
+    for df in built:
+        assert df._jdf.queryExecution().logical().getClass().getSimpleName() == "LocalRelation"
+
+
 def test_components_fixpoint_releases_round_checkpoints(spark):
     from kgtk_spark.graph.connected_components import _components_fixpoint
 

@@ -58,26 +58,27 @@ def test_salted_join_spreads_hot_key(spark, monkeypatch):
 def test_iceberg_fallback(spark, tmp_path):
     assert not iceberg_available(spark)  # no jars in this container
     df = spark.createDataFrame([("a", 1)], "k string, v long")
-    loc = write_table(df, "db.t", str(tmp_path / "t"))
-    assert loc.startswith(str(tmp_path))
-    back = read_table(spark, "db.t", loc)
+    # no identifier: the parquet directory at the path
+    loc = write_table(df, None, str(tmp_path / "t"))
+    assert loc == str(tmp_path / "t")
+    back = read_table(spark, None, loc)
     assert back.collect() == df.collect()
 
 
 def test_session_catalog_namespaced_replace(spark, tmp_path):
-    """Session-catalog mode auto-creates the namespace, replaces via
+    """An identifier without an Iceberg catalog is a session-catalog
+    table: the sink auto-creates the namespace, replaces via
     temp-table + rename (no drop-before-write window), and leaves no
     temp table behind."""
     df1 = spark.createDataFrame([("a", 1)], "k string, v long")
     df2 = spark.createDataFrame([("b", 2), ("c", 3)], "k string, v long")
     try:
         # non-default namespace must not require pre-existing database
-        loc = write_table(df1, "kgns.t1", str(tmp_path / "x"),
-                          session_catalog=True)
+        loc = write_table(df1, "kgns.t1", str(tmp_path / "x"))
         assert loc == "kgns.t1"
         assert spark.table("kgns.t1").collect() == df1.collect()
         # replace an existing table
-        write_table(df2, "kgns.t1", str(tmp_path / "x"), session_catalog=True)
+        write_table(df2, "kgns.t1", str(tmp_path / "x"))
         got = sorted((r["k"], r["v"]) for r in spark.table("kgns.t1").collect())
         assert got == [("b", 2), ("c", 3)]
         assert not spark.catalog.tableExists("kgns.t1__kgtk_tmp")

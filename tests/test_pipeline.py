@@ -307,15 +307,28 @@ def test_end_to_end_precision_recall(spark, tmp_path):
 
 
 def test_pipeline_resume_skips_committed(spark, tmp_path):
+    from kgtk_spark.pipeline.runner import _path
+
     out_dir = str(tmp_path / "kg2")
     pages, _, world = generate_pages_distributed(
         spark, 40, n_entities=20, seed=13, partitions=4)
     ad = alias_dictionary_df(spark, world)
+
+    def check_lineage(commits):
+        # Each commit names the files its stage holds and their rows
+        # (north_rule lineage+metrics): the per-file rows sum to the
+        # stage's read-back count.
+        for m in commits:
+            stage = spark.read.parquet(f"{out_dir}/{m['stage']}")
+            assert sum(f["rows"] for f in m["files"]) == stage.count(), m["stage"]
+            assert {f["file"] for f in m["files"]} == {_path(f) for f in stage.inputFiles()}
+
     run_pipeline(spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13")
 
-    manifest1 = spark.read.parquet(f"{out_dir}/_manifest")
-    n1 = manifest1.count()
+    manifest1 = spark.read.parquet(f"{out_dir}/_manifest").collect()
+    n1 = len(manifest1)
     assert n1 == 6  # six stages committed
+    check_lineage(manifest1)
 
     # Rerun: everything committed → no new manifest rows.
     run_pipeline(spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13")
@@ -324,20 +337,9 @@ def test_pipeline_resume_skips_committed(spark, tmp_path):
     # Changing the input fingerprint invalidates the whole chain.
     run_pipeline(spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="other")
     assert spark.read.parquet(f"{out_dir}/_manifest").count() == n1 + 6
-
-    # Per-partition lineage: one row per written parquet part, per-stage
-    # sums equal the manifest row counts (north_rule lineage+metrics).
-    lineage = spark.read.parquet(f"{out_dir}/_manifest_lineage")
-    from pyspark.sql import functions as F
-
-    sums = {
-        (r["stage"], r["fingerprint"]): r["total"]
-        for r in lineage.groupBy("stage", "fingerprint")
-        .agg(F.sum("rows").alias("total"))
-        .collect()
-    }
-    for m in spark.read.parquet(f"{out_dir}/_manifest").collect():
-        assert sums[(m["stage"], m["fingerprint"])] == m["rows"]
+    first = [m["fingerprint"] for m in manifest1]
+    check_lineage(spark.read.parquet(f"{out_dir}/_manifest").where(
+        ~F.col("fingerprint").isin(first)).collect())
 
 
 def test_large_dictionary_takes_shuffle_path(spark, monkeypatch):
@@ -630,20 +632,77 @@ def test_pipeline_resume_recomputes_after_crashed_write(spark, tmp_path, monkeyp
 
 
 def test_manifest_committed_takes_latest_commit(spark, tmp_path):
-    from kgtk_spark.pipeline.runner import MANIFEST_SCHEMA, StageManifest
+    import pyarrow as pa
 
-    # Fingerprints A,B,A,B,A committed in that order: A is the latest.
-    commits = [("text", fp, 1, 1, 0.0, "committed", float(t))
-               for t, fp in enumerate("ABABA")]
-    out = str(tmp_path / "appended")
-    m = StageManifest(spark, out)
-    for row in commits:  # one append per commit, as record() does
-        spark.createDataFrame([row], MANIFEST_SCHEMA).write.mode("append").parquet(m.path)
-    assert m.committed() == {"text": "A"}
+    from kgtk_spark.pipeline.runner import COMMIT_SCHEMA, StageManifest
+
+    # Fingerprints A,B,A,B,A committed in that order: A is the latest,
+    # and the files come from that same commit.
+    commits = [
+        {"stage": "text", "fingerprint": fp, "committed_at": float(t), "duration_sec": 0.0,
+         "files": [{"file": f"/{fp}{t}", "rows": 1}]}
+        for t, fp in enumerate("ABABA")
+    ]
+    frame = lambda rows: spark.createDataFrame(  # noqa: E731
+        pa.Table.from_pylist(rows, schema=COMMIT_SCHEMA))
+    m = StageManifest(spark, str(tmp_path / "appended"))
+    for row in commits:  # one append per commit, as commit() does
+        frame([row]).write.mode("append").parquet(m.path)
+    assert m.committed_files() == {"text": ("A", {"/A4"})}
     # The same rows compacted into one file in fingerprint order, so a
     # reader that takes the last row seen gets B.
-    out = str(tmp_path / "compacted")
-    m = StageManifest(spark, out)
-    spark.createDataFrame(sorted(commits, key=lambda r: r[1]), MANIFEST_SCHEMA).coalesce(
-        1).write.parquet(m.path)
-    assert m.committed() == {"text": "A"}
+    m = StageManifest(spark, str(tmp_path / "compacted"))
+    frame(sorted(commits, key=lambda r: r["fingerprint"])).coalesce(1).write.parquet(m.path)
+    assert m.committed_files() == {"text": ("A", {"/A4"})}
+
+
+def test_pipeline_resume_covers_the_code_version(spark, tmp_path, monkeypatch):
+    # An edit to the package source changes the digest the chain starts
+    # from: every stage recommits, and the same digest resumes.
+    from kgtk_spark.pipeline import runner
+
+    out_dir = str(tmp_path / "kg")
+    pages, _, world = generate_pages_distributed(
+        spark, 40, n_entities=20, seed=13, partitions=4)
+    ad = alias_dictionary_df(spark, world)
+    manifest = lambda: spark.read.parquet(f"{out_dir}/_manifest").count()  # noqa: E731
+    edges = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    want = edges(run_pipeline(spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13"))
+    assert manifest() == 6
+    monkeypatch.setattr(runner, "_code_version", lambda: "edited")
+    for _ in range(2):
+        got = edges(run_pipeline(
+            spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13"))
+        assert got == want
+        assert manifest() == 12
+
+
+def test_pipeline_resume_reads_a_commit_table_without_files(spark, tmp_path):
+    # A commit table from before the files column: its rows carry the
+    # current fingerprints but name no files, so the rerun recomputes
+    # every stage without error, and the run after it resumes.
+    import shutil
+
+    out_dir = str(tmp_path / "kg")
+    pages, _, world = generate_pages_distributed(
+        spark, 40, n_entities=20, seed=13, partitions=4)
+    ad = alias_dictionary_df(spark, world)
+    manifest = lambda: spark.read.parquet(f"{out_dir}/_manifest")  # noqa: E731
+    edges = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    want = edges(run_pipeline(spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13"))
+    old = [
+        (r["stage"], r["fingerprint"], sum(f["rows"] for f in r["files"]), len(r["files"]),
+         r["duration_sec"], "committed", r["committed_at"])
+        for r in manifest().collect()
+    ]
+    shutil.rmtree(f"{out_dir}/_manifest")
+    spark.createDataFrame(old, (
+        "stage string, fingerprint string, rows long, partitions int, "
+        "duration_sec double, status string, committed_at double"
+    )).coalesce(1).write.parquet(f"{out_dir}/_manifest")
+    assert edges(run_pipeline(
+        spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13")) == want
+    assert manifest().count() == 12
+    assert edges(run_pipeline(
+        spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13")) == want
+    assert manifest().count() == 12
